@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{CacheManager, CachedData}
 
 /** The engine's session entry point: a SparkSession.Builder preloaded
   * with the configuration the library is designed around. Library users
@@ -29,7 +30,9 @@ object GraftSession {
     else b
   }
 
-  /** Run `f`, then unpersist every RDD that was persisted during it.
+  /** Run `f`, then release every cache registered during it: the
+    * `Dataset.cache()` entries in the session's CacheManager and every
+    * RDD persisted or checkpointed.
     *
     * Several query builders cache a multi-consumed intermediate — LSH
     * signature tables (`llm/SimSearch.scala`), fingerprint relations
@@ -43,17 +46,42 @@ object GraftSession {
     * each query's CONSUMING action (write, collect, count) in it, and
     * storage persisted during the block — including by MLlib internals —
     * is released on exit (blocks freed, entries removed from the
-    * persistent-RDD registry; `blocking = false` so exit never stalls on
-    * executor round-trips). Do not reuse frames built inside the scope
-    * after it exits: plain caches recompute correctly (just slower), but
-    * a `localCheckpoint` truncates lineage and cannot.
+    * persistent-RDD registry and from the CacheManager, so a later
+    * query can neither hit a stale entry nor re-materialize it;
+    * `blocking = false` so exit never stalls on executor round-trips).
+    * Entries and RDDs that predate the scope are left alone. Do not
+    * reuse frames built inside the scope after it exits: plain caches
+    * recompute correctly (just slower), but a `localCheckpoint`
+    * truncates lineage and cannot.
     */
   def withQueryCaches[T](spark: SparkSession)(f: => T): T = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
+    val entriesBefore = cacheEntries(spark)
     try f
-    finally sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!before.contains(id)) rdd.unpersist(blocking = false)
+    finally {
+      val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      cacheEntries(spark).filterNot(cd => entriesBefore.exists(_ eq cd)).foreach { cd =>
+        session.sharedState.cacheManager.uncacheQuery(session, cd.plan,
+          cascade = false, blocking = false)
+      }
+      sc.getPersistentRDDs.foreach { case (id, rdd) =>
+        if (!before.contains(id)) rdd.unpersist(blocking = false)
+      }
     }
+  }
+
+  /** The CacheManager's registered entries. Spark exposes lookup by
+    * plan and whole-cache clearing, but no listing, so the scope reads
+    * the private registry.
+    */
+  private def cacheEntries(spark: SparkSession): Seq[CachedData] =
+    cachedDataField.invoke(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager).asInstanceOf[Seq[CachedData]]
+
+  private lazy val cachedDataField = {
+    val m = classOf[CacheManager].getDeclaredMethod("cachedData")
+    m.setAccessible(true)
+    m
   }
 }

@@ -43,15 +43,14 @@ object Bfs {
                 undirected: Boolean = true): DataFrame = {
     require(maxHops >= 0, s"maxHops must be non-negative, got $maxHops")
     val fwd = edges.select(col(srcCol).as("__a"), col(dstCol).as("__b"))
-    // Lazy checkpoint, not cache(): the loop is one lazy plan referencing
-    // e once per round, and no action runs before return — a cache()
-    // paired with a pre-return unpersist would never serve a single job
-    // and every round would rebuild the edge projection. The checkpoint
-    // materializes once at the caller's first action and feeds all
-    // rounds; release it via GraftSession.withQueryCaches.
+    // Checkpoint, not cache(): every round's plan references e, and a
+    // cache() paired with a pre-return unpersist would serve none of
+    // them. The checkpoint's exchange runs here (under AQE a lazy
+    // localCheckpoint runs its shuffle stages at call time) and its
+    // blocks feed all rounds; release it via GraftSession.withQueryCaches.
     // truncatedKeyed (not plain truncated): each round's join probes e
-    // on __a, and per-round plans compile separately, so without the
-    // pre-partitioning the edge frame re-shuffles every round.
+    // on __a, and blocks pre-grouped on it re-exchange as few map tasks
+    // (Checkpoints.truncatedKeyed).
     val e =
       (if (undirected)
          fwd.unionByName(edges.select(col(dstCol).as("__a"), col(srcCol).as("__b")))

@@ -56,24 +56,18 @@ object Checkpoints {
     /** Lazy lineage truncation under the engine checkpoint mode. */
     def truncated: DataFrame = truncated(eager = false)
 
-    /** Lazy truncation of a LOOP-STATIC frame, hash-partitioned and
-      * sorted on the key its per-round join probes. Rationale (guide
-      * §2.4, "remove shuffles outright"): every round of an iterative
-      * op compiles its own physical plan (each `truncated` call builds
-      * its RDD at call time), so Spark's exchange reuse — which only
-      * dedups subtrees inside ONE compiled plan — cannot serve the
-      * static side across rounds, and the full edge frame re-shuffles
-      * (and re-sorts, under sort-merge) EVERY round even though its
-      * content never changes. `Dataset.checkpoint` preserves both
-      * outputPartitioning and outputOrdering in the LogicalRDD it
-      * returns, so paying the exchange + sort ONCE here makes every
-      * round's join read the blocks already distributed and sorted on
-      * the key: per round only the (node, state) sliver moves. At
-      * 100 TB the saved work is an |E|-sized shuffle per round. The
-      * partition count stays scale-adaptive: `repartition(col)` uses
-      * the session shuffle-partition setting and AQE may still
-      * coalesce it (REPARTITION_BY_COL), exactly like the exchange it
-      * replaces.
+    /** Truncation of a LOOP-STATIC frame, hash-partitioned and sorted
+      * on the key its per-round join probes. Under AQE the returned
+      * LogicalRDD reports `UnknownPartitioning` (the adaptive plan is a
+      * leaf wrapper), so a per-round join still re-exchanges the copy;
+      * what the copy buys is blocks already grouped and sorted on the
+      * key, which AQE coalesces into few map tasks per round. The
+      * repartition's exchange runs at call time even though the
+      * checkpoint is lazy: the adaptive plan materializes its shuffle
+      * stages when the checkpoint RDD is built. The partition count
+      * stays scale-adaptive: `repartition(col)` uses the session
+      * shuffle-partition setting and AQE may coalesce it
+      * (REPARTITION_BY_COL).
       */
     def truncatedKeyed(keys: String*): DataFrame = {
       val cols = keys.map(org.apache.spark.sql.functions.col)

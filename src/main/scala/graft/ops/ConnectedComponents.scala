@@ -135,7 +135,9 @@ object ConnectedComponents {
     * component star {(child, root)} — the paper proves O(log² n)
     * rounds on any graph, O(log d) on paths/trees, vs label
     * propagation's O(d) (OpsSpec pins a 64-chain converging in ≤ 8
-    * alternations with output identical to propagation).
+    * alternations with output identical to propagation). The labels
+    * are read off that star, so the caller's edge lineage runs once, in
+    * round 1 — twice only when the input holds self-loops.
     *
     * Scale shape: each half-round is one groupBy(min) + one key-join —
     * fixed-width 16-byte edge rows, no collect, no per-node state on
@@ -149,15 +151,15 @@ object ConnectedComponents {
     */
   def alternatingStar(edges: DataFrame, srcCol: String, dstCol: String,
                       maxIter: Int = 50): DataFrame = {
-    var e = edges.select(col(srcCol).cast("long").as("a"),
-        col(dstCol).cast("long").as("b"))
+    val input = edges.select(col(srcCol).cast("long").as("a"),
+      col(dstCol).cast("long").as("b"))
+    // Self-loops carry no connectivity, but a node seen ONLY in
+    // self-loops is still its own component. Round 1's checkpoint pass
+    // counts them, so an input without any never has its lineage
+    // replayed for them.
+    val loops = org.apache.spark.sql.Observation()
+    var e = input.observe(loops, count(when(col("a") === col("b"), 1)).as("__loops"))
       .filter(col("a") =!= col("b")).distinct()
-    // Referenced exactly once (the closing left join) — caching it would
-    // never serve a second consumer, and the previous cache()+unpersist
-    // pair released it before the caller's action ever ran anyway.
-    val nodes = edges.select(col(srcCol).cast("long").as("node"))
-      .union(edges.select(col(dstCol).cast("long").as("node")))
-      .distinct()
 
     // Each star op needs, per node u, BOTH the neighborhood min and the
     // per-neighbor emission — a whole-partition window aggregate
@@ -251,17 +253,21 @@ object ConnectedComponents {
       s"fixpoint within maxIter=$maxIter rounds; the contracted edges " +
       "are not yet a star and per-node labels would be incorrect. " +
       "Raise maxIter (rounds needed are O(log² n)).")
-    // fixpoint edge set = the star (child, root) with root = child's
-    // component min; roots (and edge-touching nodes whose component is
-    // themselves) re-enter via the left join. groupBy-min rather than
-    // distinct (same single exchange) so the one-label-per-node output
-    // contract is structural, not an artifact of star-ness.
+    // The fixpoint edge set IS the star {(child, root)}: every
+    // edge-touching node is a child (labeled by its root) or a root
+    // (labeled by itself), so the labels come from the star alone and
+    // the caller's edge lineage is not replayed. groupBy-min (one
+    // exchange) keeps the one-label-per-node contract structural, not
+    // an artifact of star-ness.
     val star = e.select(greatest(col("a"), col("b")).as("node"),
       least(col("a"), col("b")).as("component"))
+    val labeled = star.union(star.select(col("component").as("node"), col("component")))
       .groupBy("node").agg(min(col("component")).as("component"))
-    nodes.join(star, Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("component"), col("node")).as("component"))
+    if (loops.get("__loops") == 0L) labeled
+    else labeled.union(input.filter(col("a") === col("b"))
+      .select(col("a").as("node")).distinct()
+      .join(labeled, Seq("node"), "left_anti")
+      .select(col("node"), col("node").as("component")))
   }
 
   /** Exact union-find over a collected edge list (union-by-min keeps the

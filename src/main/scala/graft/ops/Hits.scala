@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.ops.Checkpoints.TruncateOps
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.functions._
 
 /** HITS hubs-and-authorities (Kleinberg, JACM'99) over a weighted
@@ -14,15 +15,24 @@ import org.apache.spark.sql.functions._
   * buyers — the companion diagnostic to q94's PageRank (which needs
   * a homogeneous node space; HITS is native to bipartite).
   *
-  * Each half-iteration is one hash join (edges × current scores) +
-  * one aggregation, both shuffling only (node, score) slivers keyed
-  * by node — the PageRank scale shape verbatim; the edge frame is
-  * checkpointed once and serves every half-step. Normalization is 1-norm (scores sum to 1 per side):
-  * unlike the classic 2-norm it needs no sqrt and keeps the oracle
-  * arithmetic plain SQL, and since normalization is only a shared
-  * scale factor the RANKING is identical. The per-side total lands
-  * via a one-row broadcast cross join — no driver-side action inside
-  * the loop, the whole run stays one lazy plan.
+  * Each half-step is one join (edges × current (node, score) sliver)
+  * plus one aggregation by node. The edge frame is checkpointed once
+  * (`e0`) and serves every half-step. Normalization is 1-norm (scores
+  * sum to 1 per side): unlike the classic 2-norm it needs no sqrt and
+  * keeps the oracle arithmetic plain SQL, and since normalization is
+  * only a shared scale factor the RANKING is identical.
+  *
+  * Exact path, per half-step: the raw scores are checkpointed eagerly
+  * and the same pass observes their total and row count
+  * ([[Checkpoints.TruncateOps.truncatedObserving]]). The total divides
+  * the raw scores as a plan literal. The row count sizes the NEXT
+  * half-step's join: when rows × Spark's per-row size estimate fit
+  * under `spark.sql.autoBroadcastJoinThreshold`, the sliver is
+  * broadcast into `e0` and neither side shuffles — 3 jobs per
+  * half-step (broadcast, aggregation map stage, checkpoint pass).
+  * Otherwise the sliver joins a copy of the edges pre-partitioned on
+  * the probe key — the shape for slivers too large to broadcast.
+  * Threshold -1 forces that path.
   *
   * Determinism contract for oracle parity (the PageRank discipline):
   * scores round to 10 dp after each normalization, so cross-engine
@@ -37,12 +47,44 @@ import org.apache.spark.sql.functions._
   */
 object Hits {
 
+  /** The checkpointed edge frame `e0` (columns `__c`, `__s`, `__w`) and
+    * the half-step over it.
+    */
+  private[graft] final class Edges(val e0: DataFrame) {
+    // Copies pre-partitioned on each probe key, built only when a
+    // sliver is too large to broadcast: under AQE even a lazy
+    // localCheckpoint runs its exchange at call time.
+    private lazy val byHub = e0.truncatedKeyed("__c")
+    private lazy val byAuth = e0.truncatedKeyed("__s")
+    private val threshold =
+      e0.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+
+    /** One half-step: Σ score·w per `outCol` node over the edges whose
+      * `inCol` node carries a score.
+      *
+      * @param rows the sliver's row count, when observed; it broadcasts
+      *        if its estimated size fits the broadcast threshold
+      */
+    def half(scores: DataFrame, rows: Option[Long], inCol: String,
+             outCol: String): DataFrame = {
+      val sliver = scores.select(col("node").as("__jn"), col("score"))
+      val rowBytes = EstimationUtils.getSizePerRow(sliver.queryExecution.analyzed.output)
+      val fits = rows.exists(n => BigInt(n) * rowBytes <= threshold)
+      val (edg, probe) =
+        if (fits) (e0, broadcast(sliver))
+        else (if (inCol == "__s") byAuth else byHub, sliver)
+      edg.join(probe, edg(inCol) === col("__jn"))
+        .groupBy(edg(outCol).as("node"))
+        .agg(sum(col("score") * col("__w")).as("__raw"))
+    }
+  }
+
   /** @param exactRounding true (the oracle-parity contract above):
     *        normalize + round(10) after EVERY half-update — each
     *        normalization is a global reduction, so the run pays
-    *        2·iters sequential barrier jobs. false (production): HITS
-    *        is scale-invariant, so run the raw join+agg chain as ONE
-    *        lazy plan and normalize each side once at the end — same
+    *        2·iters sequential checkpoint passes. false (production): HITS
+    *        is scale-invariant, so run the raw join+agg chain without
+    *        per-step totals and normalize each side once at the end — same
     *        ranking, floats differ below the rounding grid (the q120
     *        fold-vs-plain-sum pattern; spec-pinned agreement). Raw
     *        magnitudes drift by ~(mean weighted degree)^iters between
@@ -54,67 +96,49 @@ object Hits {
                 weightCol: String, iters: Int,
                 exactRounding: Boolean = true): DataFrame = {
     require(iters >= 1, s"iters must be at least 1, got $iters")
-    // Two pre-partitioned copies (the Mis idiom): the hub→auth half
-    // probes on __c, the auth→hub half on __s, and per-half-step plans
-    // compile separately (each truncation builds its own RDD), so one
-    // unkeyed checkpoint would re-shuffle the edge frame on each key
-    // every half-step — 2·iters full |E| exchanges for a frame that
-    // never changes. Keyed, each half-step moves only (node, score).
-    //
-    // Built in TWO PHASES: an eager unkeyed checkpoint first, then the
-    // two keyed copies read from ITS blocks. Before this, each lazy
-    // keyed copy compiled its own plan all the way down, so the
-    // caller's edge aggregation (for q226: the lineitem⋈orders groupBy)
-    // ran TWICE; now the expensive subtree runs once and the copies pay
-    // only a re-read + exchange of checkpointed edge rows.
-    val base = edges.select(col(hubCol).as("__c"), col(authCol).as("__s"),
-      col(weightCol).cast("double").as("__w"))
-    val e0 = base.truncated(eager = true)
-    val e = e0.truncatedKeyed("__c")
-    val eS = e0.truncatedKeyed("__s")
-    val hubs = e.select(col("__c").as("node")).distinct()
-    var h = hubs.crossJoin(broadcast(hubs.agg(count(lit(1)).as("__n"))))
-      .select(col("node"), (lit(1.0) / col("__n")).as("score"))
+    // Eager, so the caller's edge lineage (for q226: the
+    // lineitem⋈orders groupBy) runs once; every later read is of these
+    // blocks.
+    val e = new Edges(edges.select(col(hubCol).as("__c"), col(authCol).as("__s"),
+      col(weightCol).cast("double").as("__w")).truncated(eager = true))
+    val (hubs, hm) = e.e0.select(col("__c").as("node")).distinct()
+      .truncatedObserving(count(lit(1)).as("__n"))
+    val nHubs = hm("__n").asInstanceOf[Long]
+    var h = hubs.select(col("node"), lit(1.0 / nHubs).as("score"))
+    var hRows = Option(nHubs)
     var a: DataFrame = null
-    // The raw scores feed BOTH the normalization total and the scored
-    // rows. Checkpointing raw (lazily) BEFORE fanning out makes the two
-    // references share one materialized copy — without it each
-    // half-step runs its edge join twice (once under the broadcast
-    // total, once under the scores) and the doubled plans nest, so an
-    // untruncated loop costs 4^i re-evaluations of the first join
-    // (measured 22 s vs 3 s at sf0.1, iters = 5). Truncation every
-    // half-step also keeps the analyzer's plan depth constant.
-    def normalized(rawIn: DataFrame, roundTo: Int): DataFrame = {
-      val raw = rawIn.truncated
-      raw.crossJoin(broadcast(raw.agg(sum(col("__raw")).as("__tot"))))
-        .select(col("node"), round(col("__raw") / col("__tot"), roundTo).as("score"))
-    }
-    def half(scores: DataFrame, inCol: String, outCol: String): DataFrame = {
-      val edg = if (inCol == "__s") eS else e // probe the copy keyed on inCol
-      edg.join(scores.select(col("node").as("__jn"), col("score")),
-          edg(inCol) === col("__jn"))
-        .groupBy(edg(outCol).as("node"))
-        .agg(sum(col("score") * col("__w")).as("__raw"))
+    // Raw scores → normalized scores: one eager pass checkpoints the raw
+    // rows and observes their total (a plan literal here) and count
+    // (the next half-step's join choice).
+    def normalized(raw: DataFrame): (DataFrame, Option[Long]) = {
+      val (cp, m) = raw.truncatedObserving(sum(col("__raw")).as("__tot"),
+        count(lit(1)).as("__n"))
+      (cp.select(col("node"),
+         round(col("__raw") / lit(m("__tot")).cast("double"), 10).as("score")),
+       Some(m("__n").asInstanceOf[Long]))
     }
     for (_ <- 1 to iters) {
-      val aRaw = half(h, "__c", "__s")
+      val aRaw = e.half(h, hRows, "__c", "__s")
       // Production path checkpoints only the h-half: a is referenced
       // exactly once (by the next h update), so an inline a costs one
       // extra join re-evaluation ONLY for the final output's a side,
       // while halving the per-iteration (node, score) materializations
-      // — at cluster scale, half the barriers. The exact path keeps
-      // both (each normalization is referenced twice).
-      a = if (exactRounding) normalized(aRaw, 10)
-          else aRaw.select(col("node"), col("__raw").as("score"))
-      val hRaw = half(a, "__s", "__c")
-      h = if (exactRounding) normalized(hRaw, 10)
-          else hRaw.truncated
-            .select(col("node"), col("__raw").as("score"))
+      // — at cluster scale, half the barriers.
+      val (aNext, aRows) =
+        if (exactRounding) normalized(aRaw)
+        else (aRaw.select(col("node"), col("__raw").as("score")), None)
+      a = aNext
+      val hRaw = e.half(a, aRows, "__s", "__c")
+      val (hNext, hNextRows) =
+        if (exactRounding) normalized(hRaw)
+        else (hRaw.truncated.select(col("node"), col("__raw").as("score")), None)
+      h = hNext
+      hRows = hNextRows
     }
     val (hOut, aOut) =
       if (exactRounding) (h, a)
-      else (normalized(h.select(col("node"), col("score").as("__raw")), 10),
-            normalized(a.select(col("node"), col("score").as("__raw")), 10))
+      else (normalized(h.select(col("node"), col("score").as("__raw")))._1,
+            normalized(a.select(col("node"), col("score").as("__raw")))._1)
     hOut.select(lit("hub").as("kind"), col("node"), col("score"))
       .unionByName(aOut.select(lit("auth").as("kind"), col("node"), col("score")))
   }

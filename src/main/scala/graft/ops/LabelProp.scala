@@ -46,10 +46,11 @@ object LabelProp {
                   rounds: Int, undirected: Boolean = true): DataFrame = {
     require(rounds >= 0, s"rounds must be non-negative, got $rounds")
     val fwd = edges.select(col(srcCol).as("__a"), col(dstCol).as("__b"))
-    // Lazy checkpoint, not cache() (the Bfs note): no action runs before
-    // return, so a cache released pre-return would never serve; the
-    // checkpoint materializes at the caller's first action and feeds
-    // every round's join. Released by GraftSession.withQueryCaches.
+    // Checkpoint, not cache() (the Bfs note): a cache released before
+    // return would serve no round; the checkpoint's exchange runs here
+    // (AQE materializes a lazy localCheckpoint's shuffle stages at call
+    // time) and its blocks feed every round's join. Released by
+    // GraftSession.withQueryCaches.
     val e =
       (if (undirected)
          fwd.unionByName(edges.select(col(dstCol).as("__a"), col(srcCol).as("__b")))

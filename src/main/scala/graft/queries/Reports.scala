@@ -181,14 +181,27 @@ object Reports {
       FROM peers p RIGHT JOIN rated r ON p.src_custkey = r.cust
       WHERE p.prospect IS NOT NULL AND r.rating <> 0.0)"""
 
+  /** Per-brand part count and mean retail price at 4 dp. The mean is
+    * computed exactly, from the integer cent total: a floating-point
+    * avg rounds an exact x.xxxx5 tie either way depending on the order
+    * the partial sums merge in (sf0.01's Brand#4 mean is 950.59375).
+    * Half-up on whole cents: avg·10⁴ = cents·100 / n, so the rounded
+    * value is (cents·200 + n) div 2n, over 10⁴.
+    */
   private val brandMetaSql: String = """
     brandmeta AS (
-      SELECT p_brand, count(*) AS n_parts, round(avg(p_retailprice), 4) AS avg_retail
+      SELECT p_brand, count(*) AS n_parts,
+             CAST((CAST(sum(CAST(p_retailprice AS DECIMAL(15, 2))) * 100 AS BIGINT) * 200
+                   + count(*)) // (2 * count(*)) AS DOUBLE) / 10000 AS avg_retail
       FROM part GROUP BY p_brand)"""
 
-  private def brandMeta(spark: SparkSession, dir: String): DataFrame =
-    T(spark, dir, "part").groupBy("p_brand")
-      .agg(count(lit(1)).as("n_parts"), round(avg(col("p_retailprice")), 4).as("avg_retail"))
+  private[graft] def brandMeta(part: DataFrame): DataFrame =
+    part.groupBy("p_brand")
+      .agg(count(lit(1)).as("n_parts"),
+        (sum(col("p_retailprice").cast("decimal(15,2)")) * 100).cast("long").as("__cents"))
+      .select(col("p_brand"), col("n_parts"),
+        (expr("(__cents * 200 + n_parts) div (2 * n_parts)").cast("double") / 10000)
+          .as("avg_retail"))
 
   /** Confidence table: per-prospect product confidence = Σ score·rating/30
     * over peers, top-20 per prospect, enriched with item metadata.
@@ -201,7 +214,7 @@ object Reports {
         Seq(col("confidence").desc, col("p_brand").asc), 20, "rnk",
         prepartition = true)
       .withColumn("rnk", col("rnk").cast("int"))
-      .join(broadcast(brandMeta(spark, dir)), "p_brand")
+      .join(broadcast(brandMeta(T(spark, dir, "part"))), "p_brand")
       .select("prospect", "p_brand", "confidence", "rnk", "n_parts", "avg_retail")
   }
 
@@ -230,7 +243,7 @@ object Reports {
         Seq(col("penetration").desc, col("p_brand").asc), 20, "rnk",
         prepartition = true)
       .withColumn("rnk", col("rnk").cast("int"))
-      .join(broadcast(brandMeta(spark, dir)), "p_brand")
+      .join(broadcast(brandMeta(T(spark, dir, "part"))), "p_brand")
       .select("prospect", "p_brand", "penetration", "rnk", "n_parts", "avg_retail")
   }
 

@@ -71,7 +71,20 @@ class CacheHygieneSpec extends SparkSuite {
     }
     assert((pinned -- sc.getPersistentRDDs.keySet).isEmpty,
       "a pre-existing cache was dropped by the scope")
+    // storageLevel is the frame's CacheManager entry: the scope's
+    // removal of its own entries must leave this one registered
     assert(outer.storageLevel.useMemory, "outer frame lost its storage level")
     outer.unpersist(blocking = true)
+  }
+
+  test("withQueryCaches removes the CacheManager entry of a cache() made inside it") {
+    import spark.implicits._
+    GraftSession.withQueryCaches(spark) {
+      val inner = Seq(8, 9).toDF("z").cache()
+      assert(inner.count() == 2)
+      assert(inner.storageLevel.useMemory)
+    }
+    assert(Seq(8, 9).toDF("z").storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the scope left its cache() registered in the CacheManager")
   }
 }

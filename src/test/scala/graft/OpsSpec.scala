@@ -282,6 +282,29 @@ class OpsSpec extends SparkSuite {
     assert(switched == expected)
   }
 
+  test("ConnectedComponents.alternatingStar: self-loop-only nodes, looped edge nodes and isolated pairs, output == propagation") {
+    import spark.implicits._
+    val cc = graft.ops.ConnectedComponents
+    // 7 and 9 appear only in self-loops (9 twice); 1 and 5 carry a
+    // self-loop AND edges; {20,21} and {30,31} are isolated pairs
+    val edges = Seq((7L, 7L), (9L, 9L), (9L, 9L), (1L, 1L), (1L, 2L), (2L, 3L),
+      (5L, 5L), (4L, 5L), (20L, 21L), (31L, 30L)).toDF("s", "d")
+    val expected = Map(7L -> 7L, 9L -> 9L, 1L -> 1L, 2L -> 1L, 3L -> 1L,
+      4L -> 4L, 5L -> 4L, 20L -> 20L, 21L -> 20L, 30L -> 30L, 31L -> 30L)
+    val star = cc.alternatingStar(edges, "s", "d")
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(star.length == expected.size, s"one row per node: ${star.toSeq}")
+    assert(star.toMap == expected)
+    val lp = cc.labelPropagation(edges, "s", "d")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(star.toMap == lp)
+    // without self-loops the labels come from the star alone
+    val noLoops = edges.filter($"s" =!= $"d")
+    assert(cc.alternatingStar(noLoops, "s", "d")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      expected -- Seq(7L, 9L))
+  }
+
   test("GlobalRank: two-pass row_number and ntile match the window forms") {
     import org.apache.spark.sql.expressions.Window
     val cust = spark.read.parquet(s"$sf/customer.parquet")

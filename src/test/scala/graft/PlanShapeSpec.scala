@@ -434,4 +434,31 @@ class PlanShapeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(p43.contains("nearest_centroid"),
       s"q43 lost the flattened-codebook argmax assignment:\n${p43.take(2000)}")
   }
+
+  test("HITS broadcast half-step plans no exchange over the edge checkpoint") {
+    import graft.ops.Checkpoints.TruncateOps
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import spark.implicits._
+    val e0 = (1 to 200).map(i => (i.toLong % 13, 100L + i % 17, 1.0 + i % 3))
+      .toDF("__c", "__s", "__w").truncated(eager = true)
+    val scores = (0L until 13L).map(n => (n, 1.0 / 13)).toDF("node", "score")
+    // every shuffle must sit over the aggregation: an exchange of the
+    // edge checkpoint (or of the sliver) would be a per-half-step |E|
+    // (or |V|) shuffle the broadcast exists to remove
+    def sliverAndEdgeShuffles(edges: graft.ops.Hits.Edges) = {
+      val half = edges.half(scores, Some(13L), "__c", "__s")
+      val p = planOf(half)
+      (p, collect(half.queryExecution.executedPlan) {
+        case x: ShuffleExchangeExec if !x.child.exists(_.isInstanceOf[BaseAggregateExec]) => x
+      })
+    }
+    val (p, viaBroadcast) = sliverAndEdgeShuffles(new graft.ops.Hits.Edges(e0))
+    assert(p.contains("BroadcastHashJoin"), s"the 13-row sliver did not broadcast:\n${p.take(2000)}")
+    assert(viaBroadcast.isEmpty, s"broadcast half-step shuffles its inputs:\n${p.take(3000)}")
+    // threshold -1 forces the keyed path, which does shuffle them
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try assert(sliverAndEdgeShuffles(new graft.ops.Hits.Edges(e0))._2.nonEmpty)
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
 }
