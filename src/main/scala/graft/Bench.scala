@@ -1,9 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Perf harness: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract, BASELINE.md).
+  *
+  * Bench builds its session in production mode: a twin query
+  * (`QueryDef.twin`, e.g. q120's ordered fold, which exists only so the
+  * DuckDB hash gate can match its floats bit for bit) runs its
+  * production plan here, while Verify runs the exact plan the oracle
+  * gates; ModeParitySpec pins the two to the same rows.
   *
   * Methodology: fixed name order; an untimed warm-up absorbs one-time
   * JVM/codegen/scan-setup cost; the cache is cleared between queries so
@@ -16,30 +22,22 @@ import org.apache.spark.sql.SparkSession
   * code change), and the min of two adjacent runs is the standard
   * steady-state estimator that strips that one-sided noise while still
   * counting every shuffle, scan and codegen execution the plan does.
+  *
+  * A query that throws has no time: it is left out of the total, listed
+  * under "failed" with its exception class, and the run exits nonzero
+  * after writing its artifacts.
   */
 object Bench {
+
+  type QueryFn = (SparkSession, String) => DataFrame
+
+  /** One query's reading: min-of-N seconds, or the failure that stopped it. */
+  final case class Timing(name: String, secs: Double, failure: Option[Throwable])
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Bench measures PRODUCTION paths. The one query whose registered
-    // form deliberately runs a slower oracle-exact twin (q120's ordered
-    // fold exists only so the DuckDB hash gate can match its floats bit
-    // for bit) switches to its plain-sum production plan under this
-    // property; Verify never sets it, so the correctness gate still
-    // exercises the fold. Same pair set either way (SparseSimSpec).
-    sys.props("graft.bench.production") = "true"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE's parallelism-first coalescing merges a compact (sub-1MB)
-      // map stage to ONE partition; when that stage feeds an exploding
-      // similarity self-join (15k rows -> 9M pairs) the whole join runs
-      // single-threaded (measured 3x on the flow queries). A 16k floor
-      // keeps tiny-but-fanning stages wide and still lets AQE coalesce
-      // genuinely empty splits.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
+    val spark = GraftSession.builder(cores = cpus.toInt, mode = GraftSession.Mode.production)
       // Broadcast/shuffle/RDD cleanup in Spark is GC-driven (ContextCleaner
       // acts on weak-reference queues); with a large heap a full GC may
       // never happen across a 157-query suite and block-manager state from
@@ -104,25 +102,61 @@ object Bench {
     // Optional local-iteration filter (unset in driver runs): benchmark
     // only the named queries.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    val results = timeAll(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.forall(_.contains(name)) })
+    val (json, fullJson) = report(results, cal, sfDir)
+    println(json)
+    // Echo the same line on stderr LAST: the driver's BENCH_rN.json
+    // keeps only a 2000-char tail of the captured (interleaved) output,
+    // and rounds 1-18 showed the stdout line can scroll out of that
+    // window behind buffered [bench-diag] stderr — landing it on both
+    // streams at the very end makes the tail self-contained either way.
+    System.err.println(json)
+    // Full-name full-precision map for local protocol merging. NOT
+    // BENCH_LOCAL.json: that file is the curated min-across-protocols
+    // artifact (SCALE.md "Re-measure protocol") — writing it from every
+    // run silently clobbered the merge three rounds running.
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LASTRUN.json")
+    try java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(outPath), fullJson + "\n")
+    catch { case _: Throwable => () }
+    // Append-only run ledger (committed): BENCH_LASTRUN is overwritten
+    // by every local iteration run, so the round's OFFICIAL sf0.1 run
+    // was never in git and judges re-derived per-query numbers from the
+    // truncated tail (r18 verdict item 8). One line per run with a
+    // wall-clock stamp + cpu count makes every run — including the
+    // driver's end-of-round one — a durable, parseable record.
+    try java.nio.file.Files.writeString(
+      java.nio.file.Paths.get("BENCH_RUNS.jsonl"),
+      s"""{"ts":${System.currentTimeMillis / 1000},"cpus":$cpus,""" +
+        fullJson.drop(1) + "\n",
+      java.nio.file.StandardOpenOption.CREATE,
+      java.nio.file.StandardOpenOption.APPEND)
+    catch { case _: Throwable => () }
+    spark.stop()
+    if (results.exists(_.failure.isDefined)) sys.exit(1)
+  }
 
-    // Inter-query hygiene (all of it OUTSIDE the timed region). Root cause
-    // of the r9 in-suite collapse (q139 36.9s in-suite vs 2.98s isolated,
-    // identical code): suite-JVM state accumulation, not the queries' plans.
-    // Two mechanisms, two counters:
-    //  (a) `spark.catalog.clearCache()` empties only the SQL CacheManager.
-    //      RDDs persisted OUTSIDE it — MLlib internals (ALS/KMeans),
-    //      localCheckpoints — survive it and pin executor storage for the
-    //      rest of the suite, so later queries run with less execution
-    //      memory and spill. `withQueryCaches` releases exactly what each
-    //      query persisted; the sweep below is the backstop for anything
-    //      persisted outside the scope.
-    //  (b) ContextCleaner reclaims finished broadcasts / shuffle files /
-    //      accumulators only when a JVM GC collects their weak refs; a
-    //      large heap can run the whole suite without a single full GC,
-    //      so hundreds of dead broadcasts stay resident in the block
-    //      manager. A periodic explicit GC between queries (plus the
-    //      1min periodicGC fallback above) keeps the cleaner's queue
-    //      draining.
+  // Inter-query hygiene (all of it OUTSIDE the timed region). Root cause
+  // of the r9 in-suite collapse (q139 36.9s in-suite vs 2.98s isolated,
+  // identical code): suite-JVM state accumulation, not the queries' plans.
+  // Two mechanisms, two counters:
+  //  (a) `spark.catalog.clearCache()` empties only the SQL CacheManager.
+  //      RDDs persisted OUTSIDE it — MLlib internals (ALS/KMeans),
+  //      localCheckpoints — survive it and pin executor storage for the
+  //      rest of the suite, so later queries run with less execution
+  //      memory and spill. `withQueryCaches` releases exactly what each
+  //      query persisted; the sweep below is the backstop for anything
+  //      persisted outside the scope.
+  //  (b) ContextCleaner reclaims finished broadcasts / shuffle files /
+  //      accumulators only when a JVM GC collects their weak refs; a
+  //      large heap can run the whole suite without a single full GC,
+  //      so hundreds of dead broadcasts stay resident in the block
+  //      manager. A periodic explicit GC between queries (plus the
+  //      1min periodicGC fallback above) keeps the cleaner's queue
+  //      draining.
+  def timeAll(spark: SparkSession, sfDir: String,
+              queries: Seq[(String, QueryFn)]): Seq[Timing] = {
     val sc = spark.sparkContext
     // Residual block-manager storage across ALL executors (cached RDD
     // blocks + still-referenced broadcast blocks) — the direct gauge of
@@ -186,16 +220,12 @@ object Bench {
       "q285", "q286")
 
     var i = 0
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    queries.map { case (name, fn) =>
       val isHeavy = heavy.contains(name.takeWhile(_ != '_'))
       def once(): Double = {
         sweep(forceGc = isHeavy)
         val t0 = System.nanoTime()
-        try {
-          GraftSession.withQueryCaches(spark) { fn(spark, sfDir).count() }
-        } catch { case _: Throwable => -1L }
+        GraftSession.withQueryCaches(spark) { fn(spark, sfDir).count() }
         (System.nanoTime() - t0) / 1e9
       }
       // Min-of-2, plus an adaptive third attempt when the pair
@@ -215,25 +245,40 @@ object Bench {
       // unconditional sample for the ~30 heavy names costs seconds and
       // buys the artifact its honest floor exactly where it has
       // repeatedly paid inflation.
-      val a = once(); val b = once()
-      val pairMin = math.min(a, b)
-      val t0min = if (isHeavy && pairMin > 0.05) math.min(pairMin, once())
-        else pairMin
-      val t = if (math.max(a, b) > 1.4 * t0min && t0min > 0.05)
-        math.min(t0min, once()) else t0min
+      val timing = try {
+        val a = once(); val b = once()
+        val pairMin = math.min(a, b)
+        val t0min = if (isHeavy && pairMin > 0.05) math.min(pairMin, once())
+          else pairMin
+        val t = if (math.max(a, b) > 1.4 * t0min && t0min > 0.05)
+          math.min(t0min, once()) else t0min
+        Timing(name, t, None)
+      } catch { case e: Throwable => Timing(name, Double.NaN, Some(e)) }
       i += 1
       // post-run, pre-cleanup: what THIS query left behind (the leaker
       // shows up here as rdds>0 / storage growth in the artifact's log)
+      val outcome = timing.failure.fold(f"sec=${timing.secs}%.3f")(e =>
+        s"FAILED ${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}")
       System.err.println(f"[bench-diag] $name%-28s rdds=${sc.getPersistentRDDs.size}%-3d " +
-        f"storageMB=${storageUsedMB()}%8.1f sec=$t%.3f")
+        f"storageMB=${storageUsedMB()}%8.1f $outcome")
       // Heavy allocators also drain EAGERLY after their timed region —
       // ALS factor RDDs / instr broadcasts (q40) and iterative-graph
       // checkpoint debt otherwise sit in the cleaner's weak-ref queue
       // until the next scheduled GC, taxing whichever query runs next.
       sweep(forceGc = isHeavy || i % 8 == 0)
-      name -> t
+      timing
     }
-    val total = results.map(_._2).sum
+  }
+
+  /** The compact stdout line and the full-precision record of a run.
+    * Failed queries are left out of "queries" and the total and listed
+    * under "failed" (name -> exception class).
+    */
+  def report(results: Seq[Timing], cal: Double, sfDir: String): (String, String) = {
+    val timed = results.filter(_.failure.isEmpty).map(t => t.name -> t.secs)
+    val total = timed.map(_._2).sum
+    val failed = results.flatMap(t => t.failure.map(e =>
+      "\"" + t.name + "\":\"" + e.getClass.getName + "\"")).mkString("{", ",", "}")
     // The driver captures only the LAST 2000 chars of output; a full-name
     // full-precision per-query map (~3.5KB at 90 queries) truncates
     // mid-line and the bench JSON parses as null (rounds 1-4). Stdout
@@ -241,46 +286,16 @@ object Bench {
     // fit the window; BENCH_LOCAL.json keeps full names + precision.
     def fmt(v: Double): String = f"$v%.3f"
     def entry(k: String, v: Double): String = "\"" + k + "\":" + fmt(v)
-    val shortKeys = results.map { case (k, v) => entry(k.takeWhile(_ != '_'), v) }
+    val shortKeys = timed.map { case (k, v) => entry(k.takeWhile(_ != '_'), v) }
     var qs = shortKeys.mkString("{", ",", "}")
     if (qs.length > 1700) {            // future-proof: keep the slowest 40, sum the rest
-      val (top, rest) = results.sortBy(-_._2).splitAt(40)
+      val (top, rest) = timed.sortBy(-_._2).splitAt(40)
       qs = (top.map { case (k, v) => entry(k.takeWhile(_ != '_'), v) } :+
         entry("rest", rest.map(_._2).sum)).mkString("{", ",", "}")
     }
-    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cal":${fmt(cal)},"queries":$qs,"sf":"$sfDir"}"""
-    println(json)
-    // Echo the same line on stderr LAST: the driver's BENCH_rN.json
-    // keeps only a 2000-char tail of the captured (interleaved) output,
-    // and rounds 1-18 showed the stdout line can scroll out of that
-    // window behind buffered [bench-diag] stderr — landing it on both
-    // streams at the very end makes the tail self-contained either way.
-    System.err.println(json)
-    // Full-name full-precision map for local protocol merging. NOT
-    // BENCH_LOCAL.json: that file is the curated min-across-protocols
-    // artifact (SCALE.md "Re-measure protocol") — writing it from every
-    // run silently clobbered the merge three rounds running.
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LASTRUN.json")
-    val fullQs = results.map { case (k, v) => "\"" + k + "\":" + v }
+    val fullQs = timed.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","cal":$cal,"queries":$fullQs,"sf":"$sfDir"}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), fullJson + "\n")
-    catch { case _: Throwable => () }
-    // Append-only run ledger (committed): BENCH_LASTRUN is overwritten
-    // by every local iteration run, so the round's OFFICIAL sf0.1 run
-    // was never in git and judges re-derived per-query numbers from the
-    // truncated tail (r18 verdict item 8). One line per run with a
-    // wall-clock stamp + cpu count makes every run — including the
-    // driver's end-of-round one — a durable, parseable record.
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_RUNS.jsonl"),
-      s"""{"ts":${System.currentTimeMillis / 1000},"cpus":$cpus,""" +
-        fullJson.drop(1) + "\n",
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    catch { case _: Throwable => () }
-    spark.stop()
+    (s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cal":${fmt(cal)},"queries":$qs,"failed":$failed,"sf":"$sfDir"}""",
+      s"""{"metric":"total","value":$total,"unit":"sec","cal":$cal,"queries":$fullQs,"failed":$failed,"sf":"$sfDir"}""")
   }
 }

@@ -1,33 +1,99 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.Comparator
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{CacheManager, CachedData}
 
-/** The engine's session entry point: a SparkSession.Builder preloaded
-  * with the configuration the library is designed around. Library users
-  * call `GraftSession.builder(...)` instead of rebuilding the config
-  * story by hand; every knob remains overridable on the returned builder.
+/** The engine's session entry point and the only place a SparkSession is
+  * configured: the tests, Verify, Bench, the profiler and library users
+  * all call `GraftSession.builder(...)`; every knob remains overridable
+  * on the returned builder.
   *
   * What it sets and why:
   *  - `spark.sql.extensions = GraftExtensions` — SQL-callable custom
   *    expressions (dot product, minhash) and the range-join rewrite rule;
   *  - `spark.sql.shuffle.partitions = cores` for local mode (the 200
   *    default over-partitions a single machine; clusters pass their own);
-  *  - AQE `coalescePartitions.minPartitionSize = 16k` — keeps
-  *    tiny-but-exploding map stages wide (see SCALE.md, "Optimizer
-  *    interactions");
-  *  - UTC session timezone — deterministic date math across deployments.
+  *  - AQE `coalescePartitions.minPartitionSize = 16k` — parallelism-first
+  *    coalescing would merge a compact (sub-1MB) map stage to ONE
+  *    partition, and when that stage feeds an exploding similarity
+  *    self-join the whole join runs single-threaded (measured 3x on the
+  *    flow queries); the floor keeps tiny-but-exploding map stages wide
+  *    (see SCALE.md, "Optimizer interactions");
+  *  - UTC session timezone — deterministic date math across deployments;
+  *  - `spark.graft.mode` — the plan mode, see [[Mode]].
   */
 object GraftSession {
 
+  /** Which plan a twin query runs (`QueryDef.twin`). A twin's oracle
+    * replays a float-addition order that a deployment would not pay for
+    * (an id-ordered fold that gathers a group's whole membership into
+    * one buffer); `exact` runs that fold so the DuckDB oracle matches bit
+    * for bit, `production` runs plain partial-aggregated sums. Both give
+    * the same rows at test scale (ModeParitySpec). Every other query has
+    * one plan and ignores the mode.
+    */
+  object Mode extends Enumeration { val exact, production = Value }
+
+  val ModeKey = "spark.graft.mode"
+
   def builder(cores: Int = Runtime.getRuntime.availableProcessors(),
-              local: Boolean = true): SparkSession.Builder = {
+              local: Boolean = true,
+              mode: Mode.Value = Mode.exact): SparkSession.Builder = {
     val b = SparkSession.builder()
       .config("spark.sql.extensions", classOf[graft.engine.GraftExtensions].getName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
+      .config(ModeKey, mode.toString)
     if (local) b.master(s"local[$cores]").config("spark.sql.shuffle.partitions", cores)
     else b
+  }
+
+  /** True when `spark` runs twin queries' production plans. Call sites
+    * that hold only a frame pass `df.sparkSession`.
+    */
+  def production(spark: SparkSession): Boolean =
+    spark.conf.get(ModeKey, Mode.exact.toString) == Mode.production.toString
+
+  /** A "steady-state store" for an incremental query: a store directory
+    * whose versions 0-1 are built once per (query, sf dir) in this JVM,
+    * then batch 2 folded in on every call. What every batch after the
+    * first costs in deployment is one batch against an existing store,
+    * so that is what a repeated run measures. `batch(store, i)` must
+    * follow the version-overwrite protocol (batch i rewrites `v=i` from
+    * `v=i-1`), which makes the store after batch 2 bit-identical to a
+    * cold 3-batch replay; a one-query-per-JVM run (Verify) therefore
+    * still gates the cold replay. The directories live under one scratch
+    * root in `java.io.tmpdir`, deleted when the JVM exits.
+    *
+    * One store serves every call for its (query, dir), in both modes, and
+    * each call rewrites its `v=2`. A frame read from the store must
+    * therefore be consumed before the same query runs again on the same
+    * dir, and concurrent calls for one (query, dir) are not supported.
+    * Bench, Verify and the specs consume each result before the next call.
+    */
+  def steadyStateStore(query: String, dir: String)(batch: (String, Long) => Unit): String = {
+    val store = stores.computeIfAbsent((query, dir), _ => {
+      val s = Files.createTempDirectory(storeRoot, query).toString
+      batch(s, 0L); batch(s, 1L); s
+    })
+    batch(store, 2L)
+    store
+  }
+
+  private val stores = new ConcurrentHashMap[(String, String), String]()
+
+  private lazy val storeRoot: Path = {
+    val root = Files.createTempDirectory("graft_stores")
+    sys.addShutdownHook {
+      val paths = Files.walk(root)
+      try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
+    root
   }
 
   /** Run `f`, then release every cache registered during it: the

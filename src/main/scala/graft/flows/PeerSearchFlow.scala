@@ -134,7 +134,7 @@ object PeerSearchFlow {
     // below the projection and re-evaluates the whole blend per pair,
     // while the window blocks pushdown and the score is computed once.
     // prepartition = false: with the explosion running wide (see the AQE
-    // minPartitionSize note in Bench.scala), the map-side WindowGroupLimit
+    // minPartitionSize note in GraftSession.scala), the map-side WindowGroupLimit
     // prunes ~600-candidate groups to 15 BEFORE the shuffle — measured
     // faster than the repartition-first form at sf0.1.
     val allPeers = TopK.exactPerKey(pairs, Seq("tgt_custkey"),

@@ -138,10 +138,8 @@ object Bpe {
     // symbol (the r18 alphabet pull was a dead extra distinct job).
     val known = scala.collection.mutable.HashSet.empty[String]
     var step = 1
-    var round = 0
     var exhausted = false
     while (step <= steps && !exhausted) {
-      round += 1
       val pairs = w
         .select(col("cnt"),
           regexp_extract_all(col("s"), lit(SymbolPattern), lit(1)).as("a"))
@@ -237,19 +235,8 @@ object Bpe {
           rules += ((step, l, r, c)); step += 1 }
       }
     }
-    lastRounds.set(round)
     (w, rules.result(), lastCkptId)
   }
-
-  /** Dev metric: candidate-pull rounds of the most recent merge loop in
-    * this thread — realized mean batch width = rules / rounds (read by
-    * ProfileBpeVocab; no production consumer). Genuinely thread-local
-    * (r17 advice): a single shared field would be clobbered by
-    * concurrent learnMerges calls, making the profile reading
-    * unreliable under parallel use.
-    */
-  private[graft] val lastRounds: ThreadLocal[Int] =
-    ThreadLocal.withInitial(() => 0)
 
   /** Learn `steps` merge rules from `words(wordCol, cntCol)` (distinct
     * words with occurrence counts). Returns (step, lhs, rhs,

@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   *    ulp can differ from the fold path, but the PAIR SET is identical
   *    away from threshold boundaries (SparseSimSpec pins pair equality
   *    and sim agreement to 1e-9 on the test corpus). This is the
-  *    production path at scale; ProfileSparseSim measures the gap.
+  *    production path at scale; q120 runs it in production mode, so
+  *    `graft.Profile --mode exact|production` measures the gap.
   *
   * 100 TB shape: two shuffles that matter — gram-keyed (df + posting
   * join; `maxDf` caps the heaviest posting list, so no gram key can

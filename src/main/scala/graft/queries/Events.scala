@@ -65,12 +65,6 @@ object Events {
       FROM st JOIN cnt ON st.event_type = cnt.event_type AND st.i = cnt.n_obs"""
   }
 
-  /** q248's bench-production steady-state stores, keyed by sf dir (the
-    * q233 pattern): versions 0-1 build once per process so the
-    * measured body is one batch against an existing store.
-    */
-  private val q248ProdStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The q245 decomposition oracle as a CTE chain ending in `stl`
     * (event_type, t, y, trend, seasonal, remainder) — shared with q255
@@ -1011,9 +1005,7 @@ object Events {
     // CONTRACTUALLY bit-identical to q237's full-history fold (the
     // fold continues from stored unrounded doubles through the same
     // shared holtStep expression tree), so this query gates against
-    // q237's recursive-CTE oracle VERBATIM. Bench measures the
-    // steady state (one batch into an existing store, the q233
-    // production-twin pattern); Verify keeps the 3-batch cold replay.
+    // q237's recursive-CTE oracle VERBATIM.
     QueryDef("q248_incremental_holt", Some(holtOracleSql),
       (spark, dir) => {
         val h = T(spark, dir, "events")
@@ -1035,22 +1027,9 @@ object Events {
             part(i), i, store, Seq("event_type"), "t", "n",
             HoltAlpha, HoltBeta): Unit
         }
-        if (sys.props.get("graft.bench.production").contains("true")) {
-          val store = q248ProdStores.computeIfAbsent(dir, _ => {
-            val s = java.nio.file.Files
-              .createTempDirectory("graft_q248_holt_prod").toString
-            batch(s, 0L); batch(s, 1L); s
-          })
-          batch(store, 2L)
-          graft.streaming.IncrementalForecast.backtest(
-            spark, store, 2L, Seq("event_type"))
-        } else {
-          val store = java.nio.file.Files
-            .createTempDirectory("graft_q248_holt").toString
-          (0L to 2L).foreach(batch(store, _))
-          graft.streaming.IncrementalForecast.backtest(
-            spark, store, 2L, Seq("event_type"))
-        }
+        val store = graft.GraftSession.steadyStateStore("q248", dir)(batch)
+        graft.streaming.IncrementalForecast.backtest(
+          spark, store, 2L, Seq("event_type"))
       }),
 
     // Seasonal anomaly detection — the composition the q245 scaladoc
@@ -1395,19 +1374,7 @@ object Events {
           graft.streaming.IncrementalHll.processBatch(
             ev.filter(pmod(col("event_id"), lit(3)) === i),
             i, store, Seq("day"), "uid", 8): Unit
-        val store =
-          if (sys.props.get("graft.bench.production").contains("true"))
-            q288ProdStores.computeIfAbsent(dir, _ => {
-              val s = java.nio.file.Files
-                .createTempDirectory("graft_q288_hll_prod").toString
-              batch(s, 0L); batch(s, 1L); s
-            })
-          else {
-            val s = java.nio.file.Files
-              .createTempDirectory("graft_q288_hll").toString
-            batch(s, 0L); batch(s, 1L); s
-          }
-        batch(store, 2L)
+        val store = graft.GraftSession.steadyStateStore("q288", dir)(batch)
         val daily = spark.read.parquet(s"$store/v=2")
         val days = daily.select(col("day").as("gday"))
         // the dashboard read folds STORED register rows, never events
@@ -1425,13 +1392,6 @@ object Events {
       })
   )
 
-  /** q288's bench-production steady-state stores, keyed by sf dir (the
-    * q233/q265 idiom): versions 0-1 are built once per process so the
-    * measured body is one batch + the window read against an existing
-    * store.
-    */
-  private val q288ProdStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Shared q282/q288 oracle: trailing-7-day distinct users per day —
     * window registers rebuilt from raw rows (register max over the

@@ -1626,22 +1626,7 @@ object Relational4 {
         graft.streaming.IncrementalDailyMoments.processBatch(
           ev.filter(pmod(col("event_id"), lit(3)) === i),
           i, store, Seq("day"), "v"): Unit
-      // bench-production steady state (the q288/q233 idiom): versions
-      // 0-1 built once per process; the measured body is one batch +
-      // the 31-row monitor read
-      val store =
-        if (sys.props.get("graft.bench.production").contains("true"))
-          q301ProdStores.computeIfAbsent(dir, _ => {
-            val s = java.nio.file.Files
-              .createTempDirectory("graft_q301_prod").toString
-            batch(s, 0L); batch(s, 1L); s
-          })
-        else {
-          val s = java.nio.file.Files
-            .createTempDirectory("graft_q301").toString
-          batch(s, 0L); batch(s, 1L); s
-        }
-      batch(store, 2L)
+      val store = graft.GraftSession.steadyStateStore("q301", dir)(batch)
       val dm = spark.read.parquet(s"$store/v=2")
         .select(col("day"), expr(
           """cast((s * 1000000 + cast(n as decimal(38,0)) * 10000000000000000)
@@ -1658,9 +1643,6 @@ object Relational4 {
       graft.ops.Sequential.cusum(dm, "day", "x_fp", params)
     })
 
-  /** q301's bench-production steady-state stores, keyed by sf dir. */
-  private val q301ProdStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** q290's always-valid mSPRT monitor SERVED FROM the incremental
     * day×arm moments store: the experimentation dashboard's read path
@@ -1680,28 +1662,13 @@ object Relational4 {
         graft.streaming.IncrementalDailyMoments.processBatch(
           ev.filter(pmod(col("event_id"), lit(3)) === i),
           i, store, Seq("day", "arm"), "v"): Unit
-      val store =
-        if (sys.props.get("graft.bench.production").contains("true"))
-          q303ProdStores.computeIfAbsent(dir, _ => {
-            val s = java.nio.file.Files
-              .createTempDirectory("graft_q303_prod").toString
-            batch(s, 0L); batch(s, 1L); s
-          })
-        else {
-          val s = java.nio.file.Files
-            .createTempDirectory("graft_q303").toString
-          batch(s, 0L); batch(s, 1L); s
-        }
-      batch(store, 2L)
+      val store = graft.GraftSession.steadyStateStore("q303", dir)(batch)
       graft.ops.Sequential.msprtFromMoments(
         spark.read.parquet(s"$store/v=2")
           .select(col("day"), col("arm"), col("n"), col("s"), col("ss")),
         alpha = 0.05)
     })
 
-  /** q303's bench-production steady-state stores, keyed by sf dir. */
-  private val q303ProdStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Minimum detectable effect per checkpoint — the sample-size panel
     * next to q290's monitor: MDE = 2.801585·√vn (the frozen

@@ -242,15 +242,15 @@ object Retrieval {
       (spark, dir) =>
         // exactFold pays the ordered-fold oracle tax deliberately: this
         // gated query must hash-match DuckDB's list_reduce bit for bit.
-        // Production callers use the plain-sum fast path
+        // Production mode runs the plain-sum fast path
         // (SparseSim.idfCosineJoin(exactFold = false) — same pair set,
-        // partial-aggregated; ProfileSparseSim measures the gap). Bench
-        // flips the property so BENCH_r{N} reports the production plan
-        // instead of the gate-only fold; Verify leaves it unset and the
-        // oracle still gates the exact fold.
+        // partial-aggregated; `graft.Profile --mode` measures the gap),
+        // so Bench times the production plan instead of the gate-only
+        // fold; Verify runs in exact mode and the oracle still gates the
+        // exact fold.
         graft.llm.SparseSim.idfCosineJoin(T(spark, dir, "documents"),
           "doc_id", "text", SimGramN, SimMaxDf, SimMinSim,
-          exactFold = !sys.props.get("graft.bench.production").contains("true"))),
+          exactFold = !graft.GraftSession.production(spark)), twin = true),
 
     // Tokenizer training: learn BPE merge rules from the corpus word
     // counts — ONE corpus pass for the frequency table, then every

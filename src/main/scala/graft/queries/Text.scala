@@ -19,11 +19,6 @@ object Text {
   val HistWidth = 32
   private val stopSqlList = Stop.map(s => s"'$s'").mkString(", ")
 
-  /** q253's bench-production steady-state stores, keyed by sf dir
-    * (the q233/q248 pattern).
-    */
-  private val q253ProdStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Count-Min oracle shared verbatim by q252 (one-shot sketch) and
     * q253 (incremental store): CM counters are commutative integer
@@ -53,11 +48,6 @@ object Text {
       WHERE t.rnk <= 20
       GROUP BY 1, 2, 4"""
 
-  /** q265's bench-production steady-state stores, keyed by sf dir
-    * (the q233/q253 pattern).
-    */
-  private val q265ProdStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** HyperLogLog oracle shared verbatim by q264 (one-shot sketch) and
     * q265 (incremental store): registers are elementwise maxes of a
@@ -107,11 +97,6 @@ object Text {
                         ELSE e.raw END, 4) AS est
       FROM ex JOIN e ON ex.g = e.g AND ex.kind = e.kind"""
 
-  /** q272's bench-production steady-state stores, keyed by sf dir
-    * (the q233/q253/q265 pattern).
-    */
-  private val q272ProdStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Dyadic-quantile oracle shared verbatim by q271 (one-shot sketch)
     * and q272 (incremental store): grid cells are commutative integer
@@ -312,11 +297,6 @@ object Text {
         round(col("dcg_fp").cast("double") / col("idcg_fp"), 6).as("ndcg"))
   }
 
-  /** q276's bench-production steady-state stores, keyed by sf dir
-    * (the q233/q253/q265/q272 pattern).
-    */
-  private val q276ProdStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Log-histogram quantile oracle shared verbatim by q275 (one-shot)
     * and q276 (incremental store): bucket counts are commutative
@@ -1496,24 +1476,7 @@ object Text {
             toks.filter(pmod(col("doc_id"), lit(3)) === i),
             i, store, "token", 4, 1024): Unit
         }
-        // PRODUCTION measurement = steady state (the q233/q248
-        // pattern): one batch folded into an existing store; batch 2
-        // re-runs each invocation and OVERWRITES v=2 (exactly-once),
-        // so the committed grid is bit-identical to the cold replay —
-        // which Verify keeps gating (it never sets the property).
-        val store =
-          if (sys.props.get("graft.bench.production").contains("true"))
-            q253ProdStores.computeIfAbsent(dir, _ => {
-              val s = java.nio.file.Files
-                .createTempDirectory("graft_q253_cm_prod").toString
-              batch(s, 0L); batch(s, 1L); s
-            })
-          else {
-            val s = java.nio.file.Files
-              .createTempDirectory("graft_q253_cm").toString
-            batch(s, 0L); batch(s, 1L); s
-          }
-        batch(store, 2L)
+        val store = graft.GraftSession.steadyStateStore("q253", dir)(batch)
         val sk = spark.read.parquet(s"$store/v=2")
           .select(col("sk").as("__sk"))
         val counts = toks.groupBy("token").agg(count(lit(1)).as("exact"))
@@ -1573,19 +1536,7 @@ object Text {
             src.filter(pmod(col("l_orderkey"), lit(3)) === i),
             i, store, Seq("grp", "kind"), "item", 8): Unit
         }
-        val store =
-          if (sys.props.get("graft.bench.production").contains("true"))
-            q265ProdStores.computeIfAbsent(dir, _ => {
-              val s = java.nio.file.Files
-                .createTempDirectory("graft_q265_hll_prod").toString
-              batch(s, 0L); batch(s, 1L); s
-            })
-          else {
-            val s = java.nio.file.Files
-              .createTempDirectory("graft_q265_hll").toString
-            batch(s, 0L); batch(s, 1L); s
-          }
-        batch(store, 2L)
+        val store = graft.GraftSession.steadyStateStore("q265", dir)(batch)
         val sk = spark.read.parquet(s"$store/v=2")
           .withColumnRenamed("sk", "__sk")
         val ex = src.groupBy("grp", "kind").agg(countDistinct(col("item")).as("n_exact"))
@@ -1634,19 +1585,7 @@ object Text {
           graft.streaming.IncrementalQuantile.processBatch(
             feed.filter(pmod(col("doc_id"), lit(3)) === i),
             i, store, Seq("g"), "n_chars"): Unit
-        val store =
-          if (sys.props.get("graft.bench.production").contains("true"))
-            q272ProdStores.computeIfAbsent(dir, _ => {
-              val s = java.nio.file.Files
-                .createTempDirectory("graft_q272_quant_prod").toString
-              batch(s, 0L); batch(s, 1L); s
-            })
-          else {
-            val s = java.nio.file.Files
-              .createTempDirectory("graft_q272_quant").toString
-            batch(s, 0L); batch(s, 1L); s
-          }
-        batch(store, 2L)
+        val store = graft.GraftSession.steadyStateStore("q272", dir)(batch)
         docQuantileReport(
           spark.read.parquet(s"$store/v=2").select("sk", "n"), docs)
       }),
@@ -1714,19 +1653,7 @@ object Text {
           graft.streaming.IncrementalLogHistogram.processBatch(
             feed.filter(pmod(col("doc_id"), lit(3)) === i),
             i, store, Seq("source"), "n_chars", 5): Unit
-        val store =
-          if (sys.props.get("graft.bench.production").contains("true"))
-            q276ProdStores.computeIfAbsent(dir, _ => {
-              val s = java.nio.file.Files
-                .createTempDirectory("graft_q276_loghist_prod").toString
-              batch(s, 0L); batch(s, 1L); s
-            })
-          else {
-            val s = java.nio.file.Files
-              .createTempDirectory("graft_q276_loghist").toString
-            batch(s, 0L); batch(s, 1L); s
-          }
-        batch(store, 2L)
+        val store = graft.GraftSession.steadyStateStore("q276", dir)(batch)
         logHistQuantileReport(spark, dir,
           spark.read.parquet(s"$store/v=2").select("source", "bucket", "cnt"))
       }),

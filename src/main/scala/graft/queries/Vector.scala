@@ -612,7 +612,7 @@ object Vector {
             emb.filter(col("vec_id") % 50 === 0),
             "vec_id", "embedding", 10, nCentroids = 16, nProbe = 4, iters = 2)
           .select("query_id", "vec_id", "cos_sim", "rnk")
-      }),
+      }, twin = true),
 
     // JL-compressed brute force + exact rerank: candidates ranked by the
     // 16-dim projected dot (outDim/dim of the arithmetic and broadcast
@@ -776,7 +776,7 @@ object Vector {
         SimSearch.ivfTopKLloyd(emb, emb.filter(col("vec_id") % 50 === 0),
             "vec_id", "embedding", 10, nCentroids = 16, nProbe = 4, iters = 2)
           .select("query_id", "vec_id", "cos_sim", "rnk")
-      }),
+      }, twin = true),
 
     // BUILD-once half of the IVF serving pair (r18 verdict item 4):
     // train q43's Lloyd centroids ONCE, assign the corpus, persist both
@@ -805,7 +805,7 @@ object Vector {
           .agg(count(lit(1)).as("n_vectors"),
             sum(col("vec_id")).as("id_sum"))
           .orderBy("bucket")
-      }),
+      }, twin = true),
 
     // PROBE-only half: read the q313 index back from parquet and answer
     // the q43 query batch against it — no centroid training, no corpus
@@ -821,7 +821,7 @@ object Vector {
             "vec_id", "embedding", p, 10, nProbe = 4)
           .select(col("query_id"), col("vec_id"), col("cos_sim"),
             col("rnk").cast("int").as("rnk"))
-      }),
+      }, twin = true),
 
     // PRODUCTION-SIZE codebook assignment, hash-oracled: the flat
     // literal-codebook `NearestCentroid` path is exercised by the q43
@@ -874,7 +874,7 @@ object Vector {
             "vec_id", "embedding", col("label") === 1, 10,
             nCentroids = 16, nProbe = 4, iters = 2)
           .select("query_id", "vec_id", "cos_sim", "rnk")
-      }),
+      }, twin = true),
 
     // Product-quantization ANN: per-subspace learned codebooks (id-order
     // seeds + 1 ordered-fold Lloyd step), corpus encoded as 8 code ids
@@ -887,7 +887,7 @@ object Vector {
         SimSearch.pqTopK(emb, emb.filter(col("vec_id") % 50 === 0),
             "vec_id", "embedding", 10, dim = 64, nSub = 8, nCodes = 16, iters = 1)
           .select("query_id", "vec_id", "adc_sim", "rnk")
-      }),
+      }, twin = true),
 
     // IVF×PQ composition — the billion-scale ANN layout: coarse Lloyd
     // cells + product-quantized RESIDUAL codes, probed ADC scan over
@@ -904,7 +904,7 @@ object Vector {
             "vec_id", "embedding", 10, dim = 64, nCent = 8, nProbe = 2,
             cIters = 1, nSub = 8, nCodes = 16, pIters = 1)
           .select("query_id", "vec_id", "adc_sim", "rnk")
-      }),
+      }, twin = true),
 
     // Two-stage PQ retrieval: compressed ADC scan proposes k·4
     // candidates, exact dot rescore picks the final top-10 — PQ's
@@ -918,7 +918,7 @@ object Vector {
             "vec_id", "embedding", 10, dim = 64, nSub = 8, nCodes = 16,
             iters = 1, rerankFactor = 4)
           .select("query_id", "vec_id", "cos_sim", "rnk")
-      }),
+      }, twin = true),
 
     // Scalar-quantization (SQ8) ANN: per-vector int8 codes + (minv,
     // step) — the 8×-smaller persistable scan (1 byte/dim vs 8), far
@@ -1597,7 +1597,7 @@ object Vector {
             round(fold("own") / col("n_vecs"), 6).as("mean_own"),
             round(fold("mar") / col("n_vecs"), 6).as("mean_margin"),
             round(col("__nc").cast("double") / col("n_vecs"), 6).as("frac_correct"))
-      }),
+      }, twin = true),
 
     // Dedup impact report — what the near-dup pass actually buys,
     // stated per cluster size: how many clusters of each size exist,
@@ -1872,18 +1872,17 @@ object Vector {
 
   /** Where the q313/q314 pair persists the IVF index for `dir` (one
     * index per source dataset; /tmp so repeated runs and both gates
-    * share it). Bump [[IvfIndexVersion]] whenever the build semantics
+    * share it). Bump [[ivfIndexVersion]] whenever the build semantics
     * change — a stale marker must never serve an old layout.
     */
   /** The centroid-mean form is mode-dependent since the bucketMeans
-    * production twin (plain sums under `graft.bench.production`, the
-    * oracle's ordered fold otherwise — ~1e-16 float drift between
-    * them), so the marker carries the mode: a production-built index
-    * never serves an oracle probe across a mode switch, and vice versa.
+    * production twin (plain sums in production mode, the oracle's
+    * ordered fold otherwise — ~1e-16 float drift between them), so the
+    * marker carries the mode: a production-built index never serves an
+    * oracle probe across a mode switch, and vice versa.
     */
-  private def IvfIndexVersion: String =
-    if (sys.props.get("graft.bench.production").contains("true"))
-      "v1-lloyd16x2-prod"
+  private def ivfIndexVersion(spark: org.apache.spark.sql.SparkSession): String =
+    if (graft.GraftSession.production(spark)) "v1-lloyd16x2-prod"
     else "v1-lloyd16x2"
   private def ivfIndexPath(dir: String): String =
     "/tmp/graft_ivf_index_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
@@ -1895,7 +1894,7 @@ object Vector {
     SimSearch.buildIvfIndexLloyd(T(spark, dir, "embeddings"),
       "vec_id", "embedding", p, nCentroids = 16, iters = 2)
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(p, "_built"), IvfIndexVersion)
+      java.nio.file.Paths.get(p, "_built"), ivfIndexVersion(spark))
     p
   }
 
@@ -1908,7 +1907,7 @@ object Vector {
     val p = ivfIndexPath(dir)
     val marker = java.nio.file.Paths.get(p, "_built")
     if (!java.nio.file.Files.exists(marker)
-        || java.nio.file.Files.readString(marker) != IvfIndexVersion)
+        || java.nio.file.Files.readString(marker) != ivfIndexVersion(spark))
       buildIvfIndexFiles(spark, dir)
     else p
   }

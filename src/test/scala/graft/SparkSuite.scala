@@ -6,14 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM, one session). */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.extensions", "graft.engine.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.builder(cores = 4).appName("graft-tests").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

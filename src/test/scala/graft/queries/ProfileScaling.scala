@@ -3,15 +3,15 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev-only empirical-scaling harness: build key-shifted unions of the
+/** Scaled inputs for scale-up measurements: key-shifted unions of the
   * sf0.1 fact tables (customer/orders/lineitem x2, x4 — surrogate keys
   * offset per copy so cross-table references stay consistent and no
-  * artificial duplicates collapse), then time the headline relational /
-  * report / ML flows at each scale. Dimension and content tables are
-  * passed through unchanged (content dedup workloads are deliberately
-  * NOT scaled this way: verbatim copies would near-dup against each
-  * other and grow the candidate space quadratically, measuring a
-  * different workload, not the same one scaled).
+  * artificial duplicates collapse), written as an sf dir that
+  * `graft.Profile` times like any other. Dimension tables pass through
+  * unchanged; documents, embeddings and events get their own scalers
+  * below (verbatim document copies would near-dup against each other
+  * and grow the candidate space quadratically, measuring a different
+  * workload, not the same one scaled).
   */
 object ProfileScaling {
 
@@ -100,67 +100,15 @@ object ProfileScaling {
       .write.mode("overwrite").parquet(s"$dst/documents.parquet")
   }
 
+  /** Write a `copies`-times scaled sf dir: `<src> <dst> <copies>`.
+    * Time it with `graft.Profile summary <dst> ...`.
+    */
   def main(args: Array[String]): Unit = {
-    val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    // cores, data multiples, and query list overridable via env so the
-    // same harness measures weak scaling (data grows, cores fixed) and
-    // strong scaling (data fixed, cores vary)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val mults = sys.env.get("SPARK_GRAFT_MULTS")
-      .map(_.split(",").toSeq.map(_.toInt)).getOrElse(Seq(1, 2, 4))
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val Array(src, dst, copies) = args
+    val spark = graft.GraftSession.builder(
+      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    val dirs = mults.map {
-      case 1 => 1 -> src
-      case c =>
-        val d = s"/tmp/graft_scale_x$c"
-        if (!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$d/lineitem.parquet"))) {
-          println(s"[scale] building x$c at $d")
-          buildScaled(spark, src, d, c)
-        } else {
-          if (!java.nio.file.Files.exists(
-              java.nio.file.Paths.get(s"$d/documents.parquet"))) {
-            println(s"[scale] adding scaled documents to x$c at $d")
-            buildScaledDocs(spark, src, d, c)
-          }
-          if (!java.nio.file.Files.exists(
-              java.nio.file.Paths.get(s"$d/embeddings.parquet"))) {
-            println(s"[scale] adding scaled embeddings to x$c at $d")
-            buildScaledEmbeddings(spark, src, d, c)
-          }
-          if (!java.nio.file.Files.exists(
-              java.nio.file.Paths.get(s"$d/events.parquet"))) {
-            println(s"[scale] adding scaled events to x$c at $d")
-            buildScaledEvents(spark, src, d, c)
-          }
-        }
-        c -> d
-    }
-
-    val queries: Seq[(String, (SparkSession, String) => DataFrame)] =
-      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq).getOrElse(Seq(
-        "q01_pricing_summary", "q05_revenue_by_nation", "q12_topk_customers",
-        "q13_confidence", "q14_penetration", "q22_peer_search",
-        "q40_als_recommend", "q44_peer_search_flow",
-      )).map(n => n -> graft.SparkEntry.queries(n))
-
-    // warm-up
-    spark.read.parquet(s"$src/lineitem.parquet").groupBy("l_returnflag").count().collect()
-    for ((mult, dir) <- dirs; (name, fn) <- queries) {
-      def once(): Double = {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val t = math.min(once(), once())
-      println(f"[scale] x$mult%-2d $name%-24s $t%7.2f s")
-    }
+    buildScaled(spark, src, dst, copies.toInt)
     spark.stop()
   }
 }
