@@ -12,16 +12,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * gates; ModeParitySpec pins the two to the same rows.
   *
   * Methodology: fixed name order; an untimed warm-up absorbs one-time
-  * JVM/codegen/scan-setup cost; the cache is cleared between queries so
-  * one query's cached artifacts (ALS training RDDs, LSH signatures)
-  * can't distort its neighbors. Each query is timed over TWO
-  * back-to-back executions (cache cleared before each) and the MIN is
-  * reported: paired same-config runs on this host differ up to 2x on
-  * individual queries from host-level stalls (hypervisor steal / IO
-  * hiccups — e.g. one recorded pair has q31 at 22.1s vs 1.5s with zero
-  * code change), and the min of two adjacent runs is the standard
-  * steady-state estimator that strips that one-sided noise while still
-  * counting every shuffle, scan and codegen execution the plan does.
+  * JVM/codegen/scan-setup cost; then every query runs the same protocol,
+  * [[Profile.measure]]: a `System.gc()`, then min-of-3 `count()`s, each
+  * inside `GraftSession.withQueryCaches`, which releases what the query
+  * cached or persisted. Each reading carries the min-wall run's Spark
+  * job, stage and task counts, executor run/CPU/GC ms, shuffle and spill
+  * MB and planning ms, and the RDDs and storage the query left behind.
+  * Counts are the noise-free evidence: same-code walls on a shared host
+  * differ up to 2x from host-level stalls.
   *
   * A query that throws has no time: it is left out of the total, listed
   * under "failed" with its exception class, and the run exits nonzero
@@ -31,28 +29,20 @@ object Bench {
 
   type QueryFn = (SparkSession, String) => DataFrame
 
-  /** One query's reading: min-of-N seconds, or the failure that stopped it. */
-  final case class Timing(name: String, secs: Double, failure: Option[Throwable])
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(cores = cpus.toInt, mode = GraftSession.Mode.production)
-      // Broadcast/shuffle/RDD cleanup in Spark is GC-driven (ContextCleaner
-      // acts on weak-reference queues); with a large heap a full GC may
-      // never happen across a 157-query suite and block-manager state from
-      // hundreds of finished broadcasts accumulates. Tighten the cleaner's
-      // own periodic-GC fallback from its 30min default so long suites
-      // self-clean even between the explicit sweeps below.
+      // ContextCleaner frees finished broadcasts, shuffles and RDDs only
+      // when a GC collects their weak refs; tighten its periodic-GC
+      // fallback from 30min so a long suite keeps draining between the
+      // protocol's pre-query GCs.
       .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Two benign WARN families flood stderr across a 237-query run and
-    // scroll real [bench-diag] lines out of the driver's 2000-char
-    // capture window: "RDD N was locally checkpointed" on every
-    // post-query unpersist sweep of an iterative op's checkpoint, and
-    // the block-manager's removal chatter. Silence just those loggers;
-    // everything else stays at WARN.
+    // Two benign WARN families (unpersisting local checkpoints, block
+    // removal) would scroll [bench-diag] lines out of the 2000-char
+    // capture window; silence just those loggers.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
     org.apache.logging.log4j.core.config.Configurator.setLevel(
@@ -78,12 +68,9 @@ object Bench {
       spark.catalog.clearCache()
     }
 
-    // Host-speed calibration scalar (r16 advice #3): a deterministic
-    // single-core md5 fold, fixed work, no Spark involvement — emitted
-    // into every artifact so cross-round totals can be NORMALIZED for
-    // host speed instead of asserting "today's host is 1.3x slower".
-    // Min-of-3 one-second-ish runs strips scheduler noise from the
-    // calibrator itself.
+    // Host-speed calibration: a fixed single-core md5 fold, no Spark,
+    // min of 3 runs; recorded in every artifact so totals from different
+    // hosts or days can be normalized (`cal_norm`).
     val cal: Double = {
       val md = java.security.MessageDigest.getInstance("MD5")
       def run(): Double = {
@@ -106,26 +93,17 @@ object Bench {
       .filter { case (name, _) => only.forall(_.contains(name)) })
     val (json, fullJson) = report(results, cal, sfDir)
     println(json)
-    // Echo the same line on stderr LAST: the driver's BENCH_rN.json
-    // keeps only a 2000-char tail of the captured (interleaved) output,
-    // and rounds 1-18 showed the stdout line can scroll out of that
-    // window behind buffered [bench-diag] stderr — landing it on both
-    // streams at the very end makes the tail self-contained either way.
+    // Echo the line on stderr LAST: a capture that keeps only the
+    // 2000-char tail of interleaved output then ends with it either way.
     System.err.println(json)
-    // Full-name full-precision map for local protocol merging. NOT
-    // BENCH_LOCAL.json: that file is the curated min-across-protocols
-    // artifact (SCALE.md "Re-measure protocol") — writing it from every
-    // run silently clobbered the merge three rounds running.
+    // The full record (every query's reading); not BENCH_LOCAL.json,
+    // the curated min-across-protocols artifact.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LASTRUN.json")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outPath), fullJson + "\n")
     catch { case _: Throwable => () }
-    // Append-only run ledger (committed): BENCH_LASTRUN is overwritten
-    // by every local iteration run, so the round's OFFICIAL sf0.1 run
-    // was never in git and judges re-derived per-query numbers from the
-    // truncated tail (r18 verdict item 8). One line per run with a
-    // wall-clock stamp + cpu count makes every run — including the
-    // driver's end-of-round one — a durable, parseable record.
+    // Append-only run ledger (committed): one row per run, stamped with
+    // wall-clock time and cpu count, so every run stays on record.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_RUNS.jsonl"),
       s"""{"ts":${System.currentTimeMillis / 1000},"cpus":$cpus,""" +
@@ -137,153 +115,41 @@ object Bench {
     if (results.exists(_.failure.isDefined)) sys.exit(1)
   }
 
-  // Inter-query hygiene (all of it OUTSIDE the timed region). Root cause
-  // of the r9 in-suite collapse (q139 36.9s in-suite vs 2.98s isolated,
-  // identical code): suite-JVM state accumulation, not the queries' plans.
-  // Two mechanisms, two counters:
-  //  (a) `spark.catalog.clearCache()` empties only the SQL CacheManager.
-  //      RDDs persisted OUTSIDE it — MLlib internals (ALS/KMeans),
-  //      localCheckpoints — survive it and pin executor storage for the
-  //      rest of the suite, so later queries run with less execution
-  //      memory and spill. `withQueryCaches` releases exactly what each
-  //      query persisted; the sweep below is the backstop for anything
-  //      persisted outside the scope.
-  //  (b) ContextCleaner reclaims finished broadcasts / shuffle files /
-  //      accumulators only when a JVM GC collects their weak refs; a
-  //      large heap can run the whole suite without a single full GC,
-  //      so hundreds of dead broadcasts stay resident in the block
-  //      manager. A periodic explicit GC between queries (plus the
-  //      1min periodicGC fallback above) keeps the cleaner's queue
-  //      draining.
+  /** Measure every query with [[Profile.measure]], one protocol for all
+    * of them, under one [[Profile.Recorder]]. A `[bench-diag]` line per
+    * query shows its reading's counts and what it left persisted.
+    */
   def timeAll(spark: SparkSession, sfDir: String,
-              queries: Seq[(String, QueryFn)]): Seq[Timing] = {
-    val sc = spark.sparkContext
-    // Residual block-manager storage across ALL executors (cached RDD
-    // blocks + still-referenced broadcast blocks) — the direct gauge of
-    // the state whose accumulation caused the r9 collapse.
-    def storageUsedMB(): Double =
-      sc.getExecutorMemoryStatus.values
-        .map { case (max, remaining) => max - remaining }.sum / 1e6
-    def sweep(forceGc: Boolean): Unit = {
-      spark.catalog.clearCache()
-      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      // GC when asked OR whenever measured residue says the cleaner's
-      // queue is behind — dead broadcasts hold storage until a GC
-      // collects their weak refs, so storage residue IS the trigger
-      if (forceGc || storageUsedMB() > 256.0) System.gc()
-    }
-    // The heaviest allocator families get an unconditional pre-run GC:
-    // r10's i%8 cadence left BENCH_r10 q139/q120/q101 3-4.5x their
-    // isolated mins when the GC slot landed just before a lighter query.
-    // q102 rides q101's wake (PQ rerank right after PQ training — r11
-    // measured 3.74s in-suite vs 1.96s isolated); q214/q215 are the r11
-    // media/sequence heavies.
-    // q226 is the r12 heavy: 10 edge-sweeps (5 HITS iterations) over the
-    // ~550k-edge customer→supplier graph. q217/q233/q235/q236 are the
-    // rest of the r12 graph family (iterative, many short-lived
-    // checkpoint RDDs + broadcasts): BENCH_r12 carried 3 small queries
-    // at 7-9x their isolated mins right after this block of the sorted
-    // order — a pre-run GC ahead of each bounds how much cleaner debt
-    // any neighbor can inherit.
-    // q249/q251 join the set in r13: 8 and 6 frontier rounds (Brandes
-    // sweeps / harmonic BFS), the same short-lived-checkpoint class.
-    // q40/q41 join in r14: ALS training persists factor/instrumentation
-    // RDDs and broadcasts outside the CacheManager, and the feature
-    // pipeline (q41) rode that wake at 13x its isolated min in the r13
-    // official artifact. q128/q131/q164 are the other r13 residue
-    // victims — pre-run GC bounds what they can inherit.
-    // q200 joins in r15: it sits alphabetically right after the q2xx
-    // graph heavies' debt window and ran 2.2x its isolated min in the
-    // r14 official artifact — the last >2x residue.
-    // q76 joins in r16: media fingerprinting (mapPartitions binary
-    // decode) ran 1.87x its isolated min in the r15 official artifact —
-    // the largest >1s inflation — while q214 (the same decode family)
-    // was already in the set and stayed clean.
-    // q34/q126/q127/q204/q259/q285/q286 join in r17: the BENCH_r16
-    // official artifact carried them at 3.6-12.5x their same-code mins
-    // (q286 3.28s vs 0.26s on a 3,486-pair plan — nothing in the plan
-    // can cost that; suite debt + host contention). q43 joins because
-    // its official reading breached 2x of baseline (3.43s vs 1.04s)
-    // while its min sits at 1.61x — the pre-run GC plus the retry
-    // protocol below is how the artifact re-proves it.
-    // q255/q274/q279 join in r18: both full quiet-host r18 runs carried
-    // them 1.3-2.1x their same-code mins (oracle-exact ordered folds,
-    // nothing in the plan can drift) — straight min-of-3 members now.
-    // q196 joins in r20: the driver's BENCH_r19 carried it at 8.08s vs
-    // a 1.23s committed min and 1.58s same-code in-session reading (the
-    // largest r19 in-suite inflation, VERDICT item 5) — it sits right
-    // after the q19x curation block's allocator debt in sorted order.
-    val heavy = Set("q34", "q40", "q41", "q43", "q76", "q99", "q101", "q102",
-      "q115", "q120", "q126", "q127", "q128", "q131", "q139", "q157", "q159",
-      "q164", "q166", "q196", "q200", "q204", "q214", "q215", "q217", "q226",
-      "q233", "q235", "q236", "q249", "q251", "q255", "q259", "q274", "q279",
-      "q285", "q286")
-
-    var i = 0
-    queries.map { case (name, fn) =>
-      val isHeavy = heavy.contains(name.takeWhile(_ != '_'))
-      def once(): Double = {
-        sweep(forceGc = isHeavy)
-        val t0 = System.nanoTime()
-        GraftSession.withQueryCaches(spark) { fn(spark, sfDir).count() }
-        (System.nanoTime() - t0) / 1e9
+              queries: Seq[(String, QueryFn)]): Seq[Profile.Reading] =
+    Profile.recording(spark) { rec =>
+      queries.map { case (name, fn) =>
+        val r = Profile.measure(spark, rec, name, fn, sfDir)
+        val c = r.counters
+        val outcome = r.failure.fold(f"sec=${r.secs}%.3f")(e =>
+          s"FAILED ${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}")
+        System.err.println(f"[bench-diag] $name%-28s jobs=${c.jobs}%-4d " +
+          f"stages=${c.stages.size}%-4d tasks=${c.tasks}%-5d rdds=${r.rdds}%-3d " +
+          f"storageMB=${r.storageMB}%8.1f $outcome")
+        r
       }
-      // Min-of-2, plus an adaptive third attempt when the pair
-      // DISAGREES (>1.4x spread): min-of-2 strips a one-run spike but
-      // not a stall spanning both back-to-back runs — BENCH_r16 carried
-      // a 0.26s query at 3.28s even with min-of-2 because the
-      // contention window outlasted the pair. A disagreeing pair is
-      // direct evidence the host was unstable during at least one run,
-      // so one more sample is bought exactly where it pays; an agreeing
-      // pair (the common case) costs nothing extra.
-      // Heavy-set members take a STRAIGHT third sample (min-of-3):
-      // BENCH_r17 still carried q139/q101/q102 at 1.8-3.3x their
-      // same-code mins because a contention window outlasted both
-      // back-to-back samples, and the adaptive retry below only fires
-      // when the pair DISAGREES — a stall spanning both samples
-      // produces an agreeing-but-inflated pair it cannot see. A third
-      // unconditional sample for the ~30 heavy names costs seconds and
-      // buys the artifact its honest floor exactly where it has
-      // repeatedly paid inflation.
-      val timing = try {
-        val a = once(); val b = once()
-        val pairMin = math.min(a, b)
-        val t0min = if (isHeavy && pairMin > 0.05) math.min(pairMin, once())
-          else pairMin
-        val t = if (math.max(a, b) > 1.4 * t0min && t0min > 0.05)
-          math.min(t0min, once()) else t0min
-        Timing(name, t, None)
-      } catch { case e: Throwable => Timing(name, Double.NaN, Some(e)) }
-      i += 1
-      // post-run, pre-cleanup: what THIS query left behind (the leaker
-      // shows up here as rdds>0 / storage growth in the artifact's log)
-      val outcome = timing.failure.fold(f"sec=${timing.secs}%.3f")(e =>
-        s"FAILED ${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}")
-      System.err.println(f"[bench-diag] $name%-28s rdds=${sc.getPersistentRDDs.size}%-3d " +
-        f"storageMB=${storageUsedMB()}%8.1f $outcome")
-      // Heavy allocators also drain EAGERLY after their timed region —
-      // ALS factor RDDs / instr broadcasts (q40) and iterative-graph
-      // checkpoint debt otherwise sit in the cleaner's weak-ref queue
-      // until the next scheduled GC, taxing whichever query runs next.
-      sweep(forceGc = isHeavy || i % 8 == 0)
-      timing
     }
-  }
 
   /** The compact stdout line and the full-precision record of a run.
-    * Failed queries are left out of "queries" and the total and listed
-    * under "failed" (name -> exception class).
+    * Failed queries are left out of "queries", "readings" and the total
+    * and listed under "failed" (name -> exception class). The stdout
+    * line's "cal_norm" is the total in calibrator units (total / cal),
+    * comparable across hosts of different speed; the record's
+    * "readings" hold every timed query's full [[Profile.Reading]].
     */
-  def report(results: Seq[Timing], cal: Double, sfDir: String): (String, String) = {
-    val timed = results.filter(_.failure.isEmpty).map(t => t.name -> t.secs)
+  def report(results: Seq[Profile.Reading], cal: Double, sfDir: String): (String, String) = {
+    val ok = results.filter(_.failure.isEmpty)
+    val timed = ok.map(t => t.name -> t.secs)
     val total = timed.map(_._2).sum
     val failed = results.flatMap(t => t.failure.map(e =>
       "\"" + t.name + "\":\"" + e.getClass.getName + "\"")).mkString("{", ",", "}")
-    // The driver captures only the LAST 2000 chars of output; a full-name
-    // full-precision per-query map (~3.5KB at 90 queries) truncates
-    // mid-line and the bench JSON parses as null (rounds 1-4). Stdout
-    // gets a compact line — `qNN` keys, millisecond precision — sized to
-    // fit the window; BENCH_LOCAL.json keeps full names + precision.
+    // Output is captured as a 2000-char tail, which a full-name map
+    // overflows: stdout gets `qNN` keys at millisecond precision; the
+    // full record keeps full names and precision.
     def fmt(v: Double): String = f"$v%.3f"
     def entry(k: String, v: Double): String = "\"" + k + "\":" + fmt(v)
     val shortKeys = timed.map { case (k, v) => entry(k.takeWhile(_ != '_'), v) }
@@ -295,7 +161,15 @@ object Bench {
     }
     val fullQs = timed.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    (s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cal":${fmt(cal)},"queries":$qs,"failed":$failed,"sf":"$sfDir"}""",
-      s"""{"metric":"total","value":$total,"unit":"sec","cal":$cal,"queries":$fullQs,"failed":$failed,"sf":"$sfDir"}""")
+    val readings = ok.map { r =>
+      val c = r.counters
+      "\"" + r.name + "\":" + s"""{"wall_s":${r.secs},"jobs":${c.jobs},"stages":${c.stages.size},""" +
+        s""""tasks":${c.tasks},"run_ms":${c.runMs},"cpu_ms":${c.cpuMs},"gc_ms":${c.gcMs},""" +
+        s""""shuffle_read_mb":${c.readMB},"shuffle_write_mb":${c.writeMB},""" +
+        s""""spill_mb":${c.spillMB},"plan_ms":${c.planMs},"rdds":${r.rdds},""" +
+        s""""storage_mb":${r.storageMB}}"""
+    }.mkString("{", ",", "}")
+    (s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cal":${fmt(cal)},"cal_norm":${fmt(total / cal)},"queries":$qs,"failed":$failed,"sf":"$sfDir"}""",
+      s"""{"metric":"total","value":$total,"unit":"sec","cal":$cal,"cal_norm":${total / cal},"reps":${Profile.Reps},"queries":$fullQs,"readings":$readings,"failed":$failed,"sf":"$sfDir"}""")
   }
 }

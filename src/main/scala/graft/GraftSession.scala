@@ -1,7 +1,8 @@
 package graft
 
-import java.nio.file.{Files, Path}
-import java.util.Comparator
+import java.io.IOException
+import java.nio.file.{FileVisitResult, Files, Path, SimpleFileVisitor}
+import java.nio.file.attribute.BasicFileAttributes
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.SparkSession
@@ -66,8 +67,8 @@ object GraftSession {
     * follow the version-overwrite protocol (batch i rewrites `v=i` from
     * `v=i-1`), which makes the store after batch 2 bit-identical to a
     * cold 3-batch replay; a one-query-per-JVM run (Verify) therefore
-    * still gates the cold replay. The directories live under one scratch
-    * root in `java.io.tmpdir`, deleted when the JVM exits.
+    * still gates the cold replay. The directories live under the
+    * [[scratchDir]] root, deleted when the JVM exits.
     *
     * One store serves every call for its (query, dir), in both modes, and
     * each call rewrites its `v=2`. A frame read from the store must
@@ -77,7 +78,7 @@ object GraftSession {
     */
   def steadyStateStore(query: String, dir: String)(batch: (String, Long) => Unit): String = {
     val store = stores.computeIfAbsent((query, dir), _ => {
-      val s = Files.createTempDirectory(storeRoot, query).toString
+      val s = scratchDir(query).toString
       batch(s, 0L); batch(s, 1L); s
     })
     batch(store, 2L)
@@ -86,13 +87,26 @@ object GraftSession {
 
   private val stores = new ConcurrentHashMap[(String, String), String]()
 
-  private lazy val storeRoot: Path = {
-    val root = Files.createTempDirectory("graft_stores")
-    sys.addShutdownHook {
-      val paths = Files.walk(root)
-      try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
-      finally paths.close()
-    }
+  /** A fresh directory, named `prefix` plus a random suffix, under this
+    * JVM's one scratch root in `java.io.tmpdir`. The root and everything
+    * under it is deleted when the JVM exits, so no store, index or test
+    * fixture written here outlives the process.
+    */
+  def scratchDir(prefix: String): Path = Files.createTempDirectory(scratchRoot, prefix)
+
+  private lazy val scratchRoot: Path = {
+    val root = Files.createTempDirectory("graft_scratch")
+    // Entries may vanish mid-walk (Spark's own exit hook deletes
+    // checkpoint files): a missing entry is skipped, not an error.
+    sys.addShutdownHook(Files.walkFileTree(root, new SimpleFileVisitor[Path] {
+      private def delete(p: Path): FileVisitResult = {
+        try Files.deleteIfExists(p) catch { case _: IOException => () }
+        FileVisitResult.CONTINUE
+      }
+      override def visitFile(f: Path, a: BasicFileAttributes): FileVisitResult = delete(f)
+      override def visitFileFailed(f: Path, e: IOException): FileVisitResult = delete(f)
+      override def postVisitDirectory(d: Path, e: IOException): FileVisitResult = delete(d)
+    }))
     root
   }
 

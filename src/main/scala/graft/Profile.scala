@@ -6,22 +6,26 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One profiler for every registered query, on the session Bench and
-  * Verify build (`GraftSession.builder`). Usage, from the repo root:
+  * Verify build (`GraftSession.builder`), and the one measured run that
+  * Bench times the suite with ([[measure]]). Usage, from the repo root:
   *
   *   sbt "runMain graft.Profile <report> <sfDir> [options] [query ...]"
   *
   * Reports (all registered queries when none is named):
-  *  - `summary` — per query and rep: wall time, Spark jobs, stages and
-  *    tasks, summed executor run/CPU/GC ms, shuffle read/write MB, spill
-  *    MB and planning ms (analysis + optimization + physical planning
-  *    of every action). Job, stage and task counts are the noise-free
-  *    evidence: wall time on a shared host swings far more;
-  *  - `stages` — the last rep's per-stage table, costliest first;
+  *  - `summary` — per query, its [[Reading]]: min wall time, then the
+  *    Spark jobs, stages and tasks, summed executor run/CPU/GC ms,
+  *    shuffle read/write MB, spill MB and planning ms (analysis +
+  *    optimization + physical planning of every action) of the min-wall
+  *    rep, and the RDDs and storage the query left persisted. Job, stage
+  *    and task counts are the noise-free evidence: wall time on a shared
+  *    host swings far more;
+  *  - `stages` — the summary plus the min-wall rep's per-stage table,
+  *    costliest first;
   *  - `action` — the formatted executed plan of the query's Nth action
   *    (a mid-loop round of an iterative op, not just its final frame);
   *  - `explain` — the formatted plan of the query's returned frame,
@@ -30,57 +34,64 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Options: `--mode exact|production` (default exact, what Verify runs;
   * Bench runs production — the two differ only for twin queries) and
   * `--action N` (default 1). Cores come from SPARK_GRAFT_CPUS (default
-  * 4), as for Bench and Verify. `summary` and `stages` run 2 reps, each
-  * the query's `count()` inside `withQueryCaches` — Bench's min-of-2
-  * protocol.
+  * 4), as for Bench and Verify. `summary` and `stages` run Bench's
+  * protocol ([[measure]]).
   *
   * Scaled inputs: `Test/runMain graft.queries.ProfileScaling <src> <dst>
   * <copies>` writes a key-shifted sf dir; profile it like any other.
   */
 object Profile {
 
-  private final case class Opts(report: String, sfDir: String, queries: Seq[String],
-                                mode: GraftSession.Mode.Value, cores: Int, action: Int)
-
-  private val Reps = 2
-
-  private def parse(args: Seq[String]): Opts = {
-    val usage = "usage: graft.Profile summary|stages|action|explain <sfDir> " +
-      "[--mode exact|production] [--action N] [query ...]"
-    require(args.length >= 2 && Set("summary", "stages", "action", "explain")(args.head), usage)
-    def go(rest: List[String], o: Opts): Opts = rest match {
-      case "--mode" :: v :: t => go(t, o.copy(mode = GraftSession.Mode.withName(v)))
-      case "--action" :: v :: t => go(t, o.copy(action = v.toInt))
-      case flag :: _ if flag.startsWith("--") => throw new IllegalArgumentException(usage)
-      case q :: t => go(t, o.copy(queries = o.queries :+ q))
-      case Nil => o
-    }
-    go(args.drop(2).toList, Opts(args.head, args(1), Nil, GraftSession.Mode.exact,
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, action = 1))
-  }
+  /** Runs per measured query, in Bench and in `summary`/`stages`. */
+  val Reps = 3
 
   /** One completed stage's task metrics. */
-  private final case class Stage(id: Int, tasks: Int, runMs: Long, cpuMs: Long, gcMs: Long,
-                                 fetchWaitMs: Long, readB: Long, writeB: Long,
-                                 spillB: Long, name: String)
+  final case class Stage(id: Int, tasks: Int, runMs: Long, cpuMs: Long, gcMs: Long,
+                         fetchWaitMs: Long, readB: Long, writeB: Long,
+                         spillB: Long, name: String)
+
+  /** What one run did: its Spark jobs, completed stages and planning ms. */
+  final case class Counters(jobs: Int, stages: Seq[Stage], planMs: Long) {
+    def tasks: Int = stages.map(_.tasks).sum
+    def runMs: Long = stages.map(_.runMs).sum
+    def cpuMs: Long = stages.map(_.cpuMs).sum
+    def gcMs: Long = stages.map(_.gcMs).sum
+    def readMB: Double = mb(stages.map(_.readB).sum)
+    def writeMB: Double = mb(stages.map(_.writeB).sum)
+    def spillMB: Double = mb(stages.map(_.spillB).sum)
+  }
+
+  /** One query's reading: the min wall seconds over [[Reps]] runs and
+    * that run's counters; or, when a run throws, NaN seconds, the
+    * failing run's counters and the failure. `rdds` and `storageMB` are
+    * what stayed persisted after the query's cache scope closed: a query
+    * that leaks shows here, and nothing sweeps it before the next one.
+    */
+  final case class Reading(name: String, secs: Double, counters: Counters,
+                           rdds: Int, storageMB: Double, failure: Option[Throwable])
 
   /** Collects the scheduler and planner events of one measured run.
     * Events reach listeners asynchronously; [[drain]] runs a marker job
     * and waits for its end event, which the shared listener queue
     * delivers after every event of the measured run.
     */
-  private final class Recorder(sc: SparkContext) extends SparkListener
+  final class Recorder private[Profile] (sc: SparkContext) extends SparkListener
       with QueryExecutionListener {
-    val stages = new ConcurrentLinkedQueue[Stage]()
-    val plans = new ConcurrentLinkedQueue[QueryExecution]()
-    @volatile var jobs = 0
-    @volatile var planMs = 0L
+    private val stages = new ConcurrentLinkedQueue[Stage]()
+    private val plans = new ConcurrentLinkedQueue[QueryExecution]()
+    @volatile private var jobs = 0
+    @volatile private var planMs = 0L
     @volatile private var marker: Option[(Int, CountDownLatch)] = None
     private val MarkerKey = "graft.profile.marker"
 
-    def reset(): Unit = { stages.clear(); plans.clear(); jobs = 0; planMs = 0L }
+    private[Profile] def reset(): Unit = { stages.clear(); plans.clear(); jobs = 0; planMs = 0L }
 
-    def drain(): Unit = {
+    private[Profile] def counters: Counters = Counters(jobs, stages.asScala.toSeq, planMs)
+
+    /** The executed plans of the last run's actions, in order. */
+    private[Profile] def actions: Seq[QueryExecution] = plans.asScala.toSeq
+
+    private[Profile] def drain(): Unit = {
       val done = new CountDownLatch(1)
       marker = Some((-1, done))
       sc.setLocalProperty(MarkerKey, "true")
@@ -118,65 +129,119 @@ object Profile {
       planMs += qe.tracker.phases.values.map(_.durationMs).sum
   }
 
+  /** Run `f` with a [[Recorder]] listening on `spark`, removed on exit. */
+  def recording[T](spark: SparkSession)(f: Recorder => T): T = {
+    val rec = new Recorder(spark.sparkContext)
+    spark.sparkContext.addSparkListener(rec)
+    spark.listenerManager.register(rec)
+    try f(rec)
+    finally {
+      spark.listenerManager.unregister(rec)
+      spark.sparkContext.removeSparkListener(rec)
+    }
+  }
+
+  /** The measured protocol, the same for every query: a `System.gc()`,
+    * then [[Reps]] runs, each the query's `count()` inside
+    * `withQueryCaches`; the reading keeps the min-wall run. The min of
+    * adjacent runs strips one-sided host stalls while still counting
+    * every scan, shuffle and codegen execution the plan does. The first
+    * run that throws ends the query's measurement.
+    */
+  def measure(spark: SparkSession, rec: Recorder, name: String, fn: Bench.QueryFn,
+              sfDir: String): Reading = {
+    System.gc()
+    var runs = List.empty[Reading]
+    while (runs.size < Reps && runs.forall(_.failure.isEmpty)) runs ::= run(spark, rec, name, fn, sfDir)
+    val best = runs.find(_.failure.isDefined).fold(runs.minBy(_.secs))(_.copy(secs = Double.NaN))
+    val sc = spark.sparkContext
+    // block-manager storage in use: cached RDD blocks plus live broadcasts
+    val storageMB = sc.getExecutorMemoryStatus.values.map { case (max, free) => max - free }.sum / 1e6
+    best.copy(rdds = sc.getPersistentRDDs.size, storageMB = storageMB)
+  }
+
+  /** One run: the query's `count()` in a cache scope, read as its wall
+    * seconds, counters and failure.
+    */
+  private def run(spark: SparkSession, rec: Recorder, name: String, fn: Bench.QueryFn,
+                  sfDir: String): Reading = {
+    rec.reset()
+    val t0 = System.nanoTime()
+    val failure =
+      try { GraftSession.withQueryCaches(spark) { fn(spark, sfDir).count() }; None }
+      catch { case e: Throwable => Some(e) }
+    val wall = (System.nanoTime() - t0) / 1e9
+    rec.drain()
+    Reading(name, wall, rec.counters, rdds = 0, storageMB = 0.0, failure)
+  }
+
+  private final case class Opts(report: String, sfDir: String, queries: Seq[String],
+                                mode: GraftSession.Mode.Value, cores: Int, action: Int)
+
+  private def parse(args: Seq[String]): Opts = {
+    val usage = "usage: graft.Profile summary|stages|action|explain <sfDir> " +
+      "[--mode exact|production] [--action N] [query ...]"
+    require(args.length >= 2 && Set("summary", "stages", "action", "explain")(args.head), usage)
+    def go(rest: List[String], o: Opts): Opts = rest match {
+      case "--mode" :: v :: t => go(t, o.copy(mode = GraftSession.Mode.withName(v)))
+      case "--action" :: v :: t => go(t, o.copy(action = v.toInt))
+      case flag :: _ if flag.startsWith("--") => throw new IllegalArgumentException(usage)
+      case q :: t => go(t, o.copy(queries = o.queries :+ q))
+      case Nil => o
+    }
+    go(args.drop(2).toList, Opts(args.head, args(1), Nil, GraftSession.Mode.exact,
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, action = 1))
+  }
+
   def main(args: Array[String]): Unit = {
     val o = parse(args.toSeq)
     val spark = GraftSession.builder(cores = o.cores, mode = o.mode)
       .appName("graft-profile").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (o.queries.nonEmpty) o.queries else SparkEntry.queries.keys.toSeq.sorted
-    val rec = new Recorder(spark.sparkContext)
-    spark.sparkContext.addSparkListener(rec)
-    spark.listenerManager.register(rec)
     println(s"[profile] ${o.report} sf=${o.sfDir} mode=${o.mode} cores=${o.cores}")
-    names.foreach { n =>
-      val fn = SparkEntry.queries.getOrElse(n,
-        throw new NoSuchElementException(s"no registered query $n"))
-      try o.report match {
-        case "explain" =>
-          println(s"\n========== $n ==========")
-          println(fn(spark, o.sfDir).queryExecution.explainString(FormattedMode))
-        case "action" =>
-          run(spark, rec, fn, o.sfDir)
-          val qes = rec.plans.asScala.toSeq
-          println(s"\n========== $n action ${o.action} of ${qes.size} ==========")
-          qes.lift(o.action - 1).foreach(qe => println(qe.explainString(FormattedMode)))
-        case _ =>
-          (1 to Reps).foreach { rep =>
-            val wall = run(spark, rec, fn, o.sfDir)
-            summary(n, rep, wall, rec)
-            if (o.report == "stages" && rep == Reps) stageTable(rec)
-          }
-      } catch {
-        case e: Throwable => println(s"[profile] $n FAILED ${e.getClass.getName}: ${e.getMessage}")
+    recording(spark) { rec =>
+      names.foreach { n =>
+        val fn = SparkEntry.queries.getOrElse(n,
+          throw new NoSuchElementException(s"no registered query $n"))
+        o.report match {
+          case "explain" =>
+            println(s"\n========== $n ==========")
+            try println(fn(spark, o.sfDir).queryExecution.explainString(FormattedMode))
+            catch { case e: Throwable => failed(n, e) }
+          case "action" =>
+            run(spark, rec, n, fn, o.sfDir).failure.foreach(failed(n, _))
+            val qes = rec.actions
+            println(s"\n========== $n action ${o.action} of ${qes.size} ==========")
+            qes.lift(o.action - 1).foreach(qe => println(qe.explainString(FormattedMode)))
+          case report =>
+            val r = measure(spark, rec, n, fn, o.sfDir)
+            println(line(r))
+            if (report == "stages") stageTable(r.counters)
+        }
       }
     }
     spark.stop()
   }
 
-  /** One measured run: the query's `count()` in a cache scope; wall seconds. */
-  private def run(spark: SparkSession, rec: Recorder,
-                  fn: (SparkSession, String) => DataFrame, sfDir: String): Double = {
-    rec.reset()
-    val t0 = System.nanoTime()
-    try {
-      GraftSession.withQueryCaches(spark) { fn(spark, sfDir).count() }
-      (System.nanoTime() - t0) / 1e9
-    } finally rec.drain()
-  }
+  private def failed(name: String, e: Throwable): Unit =
+    println(s"[profile] $name FAILED ${e.getClass.getName}: ${e.getMessage}")
 
   private def mb(bytes: Long): Double = bytes / 1e6
 
-  private def summary(name: String, rep: Int, wall: Double, rec: Recorder): Unit = {
-    val s = rec.stages.asScala.toSeq
-    println(f"[profile] $name%-28s rep$rep wall=$wall%7.2f s jobs=${rec.jobs}%4d " +
-      f"stages=${s.size}%4d tasks=${s.map(_.tasks).sum}%6d " +
-      f"runMs=${s.map(_.runMs).sum}%8d cpuMs=${s.map(_.cpuMs).sum}%8d gcMs=${s.map(_.gcMs).sum}%6d " +
-      f"shuffleReadMB=${mb(s.map(_.readB).sum)}%8.1f shuffleWriteMB=${mb(s.map(_.writeB).sum)}%8.1f " +
-      f"spillMB=${mb(s.map(_.spillB).sum)}%7.1f planMs=${rec.planMs}%6d")
+  /** A reading as one fixed-width line. */
+  private def line(r: Reading): String = {
+    val c = r.counters
+    val outcome = r.failure.fold(f"wall=${r.secs}%7.2f s")(e =>
+      s"FAILED ${e.getClass.getName}: ${e.getMessage}")
+    f"[profile] ${r.name}%-28s $outcome jobs=${c.jobs}%4d stages=${c.stages.size}%4d " +
+      f"tasks=${c.tasks}%6d runMs=${c.runMs}%8d cpuMs=${c.cpuMs}%8d gcMs=${c.gcMs}%6d " +
+      f"shuffleReadMB=${c.readMB}%8.1f shuffleWriteMB=${c.writeMB}%8.1f " +
+      f"spillMB=${c.spillMB}%7.1f planMs=${c.planMs}%6d rdds=${r.rdds}%3d storageMB=${r.storageMB}%8.1f"
   }
 
-  private def stageTable(rec: Recorder): Unit =
-    rec.stages.asScala.toSeq.sortBy(-_.runMs).foreach { r =>
+  private def stageTable(c: Counters): Unit =
+    c.stages.sortBy(-_.runMs).foreach { r =>
       println(f"[stages]   id=${r.id}%4d tasks=${r.tasks}%4d runMs=${r.runMs}%7d " +
         f"cpuMs=${r.cpuMs}%7d gcMs=${r.gcMs}%5d fetchWaitMs=${r.fetchWaitMs}%5d " +
         f"readMB=${mb(r.readB)}%7.1f writeMB=${mb(r.writeB)}%7.1f " +

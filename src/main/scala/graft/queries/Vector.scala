@@ -1870,22 +1870,28 @@ object Vector {
     DedupOps.lshCandidates(shingled, "doc_id", "sh", bands = 4, rowsPerBand = 2)
   }
 
-  /** Where the q313/q314 pair persists the IVF index for `dir` (one
-    * index per source dataset; /tmp so repeated runs and both gates
-    * share it). Bump [[ivfIndexVersion]] whenever the build semantics
-    * change — a stale marker must never serve an old layout.
-    */
   /** The centroid-mean form is mode-dependent since the bucketMeans
     * production twin (plain sums in production mode, the oracle's
     * ordered fold otherwise — ~1e-16 float drift between them), so the
     * marker carries the mode: a production-built index never serves an
-    * oracle probe across a mode switch, and vice versa.
+    * oracle probe across a mode switch, and vice versa. Bump the version
+    * whenever the build semantics change — a stale marker must never
+    * serve an old layout.
     */
   private def ivfIndexVersion(spark: org.apache.spark.sql.SparkSession): String =
     if (graft.GraftSession.production(spark)) "v1-lloyd16x2-prod"
     else "v1-lloyd16x2"
+
+  /** Where the q313/q314 pair persists the IVF index for `dir`: one
+    * index per source dataset, under the JVM's scratch root, so q313 then
+    * q314 in one JVM share it and nothing outlives the JVM. A fresh JVM
+    * finds no marker and q314 builds the index on its miss.
+    */
   private def ivfIndexPath(dir: String): String =
-    "/tmp/graft_ivf_index_" + dir.replaceAll("[^A-Za-z0-9._-]", "_")
+    ivfIndexDirs.computeIfAbsent(dir, d => graft.GraftSession.scratchDir(
+      "graft_ivf_index_" + d.replaceAll("[^A-Za-z0-9._-]", "_")).toString)
+
+  private val ivfIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Unconditional index (re)build + persist — the q313 body. */
   private def buildIvfIndexFiles(spark: org.apache.spark.sql.SparkSession,

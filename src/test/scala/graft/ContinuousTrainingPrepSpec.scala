@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.flows.TrainingPrep
@@ -38,8 +36,8 @@ class ContinuousTrainingPrepSpec extends SparkSuite {
   }
 
   test("incremental prep over doc_id-ordered slices equals the one-shot run") {
-    val out = Files.createTempDirectory("ctp_out").toString
-    val state = Files.createTempDirectory("ctp_state").toString
+    val out = GraftSession.scratchDir("ctp_out").toString
+    val state = GraftSession.scratchDir("ctp_state").toString
     val slices = Seq(
       docs.filter(col("doc_id") < 120),
       docs.filter(col("doc_id") >= 120 && col("doc_id") < 300),
@@ -51,8 +49,8 @@ class ContinuousTrainingPrepSpec extends SparkSuite {
   }
 
   test("cross-batch dedup drops a document first seen in an earlier batch") {
-    val out = Files.createTempDirectory("ctp_out2").toString
-    val state = Files.createTempDirectory("ctp_state2").toString
+    val out = GraftSession.scratchDir("ctp_out2").toString
+    val state = GraftSession.scratchDir("ctp_state2").toString
     val base = docs.filter(col("doc_id") < 100)
     // batch 1 re-sends batch 0's text under fresh ids — every row must dedup away
     val dupes = base.withColumn("doc_id", col("doc_id") + 1000000)
@@ -68,8 +66,8 @@ class ContinuousTrainingPrepSpec extends SparkSuite {
   }
 
   test("a crash-replayed batch rewrites identical output and state") {
-    val out = Files.createTempDirectory("ctp_out3").toString
-    val state = Files.createTempDirectory("ctp_state3").toString
+    val out = GraftSession.scratchDir("ctp_out3").toString
+    val state = GraftSession.scratchDir("ctp_state3").toString
     val b0 = docs.filter(col("doc_id") < 200)
     val b1 = docs.filter(col("doc_id") >= 200)
     ContinuousTrainingPrep.processBatch(b0, 0, evalDocs, cfg, out, state)
@@ -82,10 +80,10 @@ class ContinuousTrainingPrepSpec extends SparkSuite {
   }
 
   test("the wired stream survives a mid-corpus restart and matches the batch run") {
-    val src = Files.createTempDirectory("ctp_src").toString
-    val out = Files.createTempDirectory("ctp_out4").toString
-    val state = Files.createTempDirectory("ctp_state4").toString
-    val ckpt = Files.createTempDirectory("ctp_ckpt").toString
+    val src = GraftSession.scratchDir("ctp_src").toString
+    val out = GraftSession.scratchDir("ctp_out4").toString
+    val state = GraftSession.scratchDir("ctp_state4").toString
+    val ckpt = GraftSession.scratchDir("ctp_ckpt").toString
     def stream() = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(src)
 

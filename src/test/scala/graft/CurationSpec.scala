@@ -339,7 +339,7 @@ class CurationSpec extends SparkSuite {
     val one = orig.orderBy("doc_id").head
     val base = one.getString(1)
     def cdc(text: String): Seq[String] = {
-      val dir2 = java.nio.file.Files.createTempDirectory("cdc_one").toString
+      val dir2 = GraftSession.scratchDir("cdc_one").toString
       Seq((1L, text)).toDF("doc_id", "text")
         .write.mode("overwrite").parquet(s"$dir2/documents.parquet")
       graft.SparkEntry.queries("q210_cdc_chunks")(spark, dir2)

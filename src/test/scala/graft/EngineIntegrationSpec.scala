@@ -24,7 +24,7 @@ class EngineIntegrationSpec extends SparkSuite {
   }
 
   test("Sources.latestDatePartition picks max yyyyMMdd dir") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_snap").toFile
+    val tmp = GraftSession.scratchDir("graft_snap").toFile
     Seq("20240101", "20240301", "20231231", "not_a_date").foreach { d =>
       new java.io.File(tmp, d).mkdirs()
     }
@@ -36,7 +36,7 @@ class EngineIntegrationSpec extends SparkSuite {
   test("Sources csv pipe + inferred round-trip via Sinks") {
     import spark.implicits._
     val df = Seq((1, "x|y"), (2, "plain")).toDF("id", "s")
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val dir = GraftSession.scratchDir("graft_csv").toString
     graft.io.Sinks.csv(df.select(col("id"), regexp_replace(col("s"), "\\|", "_").as("s")),
       dir + "/out", singleFile = true)
     val back = Sources.csvInferred(spark, dir + "/out")
@@ -48,7 +48,7 @@ class EngineIntegrationSpec extends SparkSuite {
     import spark.implicits._
     val df = Seq((1L, "a", 0.5), (2L, "b", 1.25), (3L, null.asInstanceOf[String], -2.0))
       .toDF("id", "s", "score")
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val dir = GraftSession.scratchDir("graft_json").toString
     // multi-part write -> read back: same rows, JSON line-record semantics
     // (null field omitted from the record, restored as null on read)
     graft.io.Sinks.json(df, dir + "/multi")
@@ -67,7 +67,7 @@ class EngineIntegrationSpec extends SparkSuite {
 
   test("Sources orc round-trip, text lines, binaryFile ingestion") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_io").toString
+    val dir = GraftSession.scratchDir("graft_io").toString
     // orc: write via Sinks, read via Sources, schema + rows preserved
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
     graft.io.Sinks.orc(df, dir + "/orc")
@@ -100,7 +100,7 @@ class EngineIntegrationSpec extends SparkSuite {
   }
 
   test("csv malformed rows: PERMISSIVE nulls + captures, DROPMALFORMED drops") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_bad").toString
+    val dir = GraftSession.scratchDir("graft_bad").toString
     // row 2 is structurally malformed (MORE tokens than the schema); bad
     // casts merely null the field and short rows are null-padded in
     // Spark 4 — only excess tokens trip the mode machinery
@@ -121,7 +121,7 @@ class EngineIntegrationSpec extends SparkSuite {
 
   test("parquet schema evolution: mergeSchema unions column sets") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toString
+    val dir = GraftSession.scratchDir("graft_evolve").toString
     Seq((1L, "a")).toDF("id", "v1").write.parquet(dir + "/p=1")
     Seq((2L, "b", 9.9)).toDF("id", "v1", "v2").write.parquet(dir + "/p=2")
     val merged = spark.read.option("mergeSchema", "true").parquet(dir)
@@ -191,7 +191,7 @@ class EngineIntegrationSpec extends SparkSuite {
 
   test("foreachBatch parquet sink matches batch aggregation") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft_feb").toString + "/agg"
+    val out = GraftSession.scratchDir("graft_feb").toString + "/agg"
     val streamed = EventStreams.foreachBatchToParquet(spark, sf, out)
       .as[(String, Long)].collect().toMap
     val batch = graft.queries.T(spark, sf, "events")

@@ -5,21 +5,34 @@ import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-/** The run harness: one session factory, the steady-state store helper
-  * and Bench's handling of a failing query.
+/** The run harness: one session factory, one scratch root, the
+  * steady-state store helper, and Bench's measured run — its counters,
+  * their repeatability and its handling of a failing query.
   */
 class HarnessSpec extends SparkSuite {
 
+  // The source scans split their literals so this file does not match itself.
+  private def scalaFiles(root: String): Seq[Path] = Files.walk(Paths.get(root)).iterator().asScala
+    .filter(_.toString.endsWith(".scala")).toSeq
+  private def containing(paths: Seq[Path], s: String): Seq[String] =
+    paths.filter(p => Files.readString(p).contains(s)).map(_.getFileName.toString)
+
   test("one session factory: no other SparkSession builder, no plan-mode system property") {
-    // split literals so this file does not match itself
-    val builder = "SparkSession" + ".builder()"
-    val property = "graft.bench" + ".production"
-    val sources = Files.walk(Paths.get("src")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    val sources = scalaFiles("src")
     assert(sources.size > 100, "expected to scan the repository's src/ tree")
-    def containing(s: String): Seq[Path] = sources.filter(p => Files.readString(p).contains(s))
-    assert(containing(builder).map(_.getFileName.toString) == Seq("GraftSession.scala"))
-    assert(containing(property).isEmpty)
+    assert(containing(sources, "SparkSession" + ".builder()") == Seq("GraftSession.scala"))
+    assert(containing(sources, "graft.bench" + ".production").isEmpty)
+  }
+
+  test("one scratch root and one listener: no other temp directory, no second SparkListener") {
+    assert(containing(scalaFiles("src"), "createTemp" + "Directory") == Seq("GraftSession.scala"))
+    val listener = "extends " + "SparkListener"
+    val main = scalaFiles("src/main")
+    assert(main.map(p => Files.readString(p).split(listener, -1).length - 1).sum == 1)
+    assert(containing(main, listener) == Seq("Profile.scala"))
+    val d = GraftSession.scratchDir("harness_spec")
+    assert(Files.isDirectory(d) && d.getFileName.toString.startsWith("harness_spec"))
+    assert(d.getParent.getParent == Paths.get(System.getProperty("java.io.tmpdir")))
   }
 
   test("steady-state store: versions 0-1 build once per (query, dir), batch 2 on every call") {
@@ -49,6 +62,8 @@ class HarnessSpec extends SparkSuite {
     val res = Bench.timeAll(spark, sf, Seq("q_ok" -> ok, "q_boom" -> boom))
     assert(res.map(_.name) == Seq("q_ok", "q_boom"))
     assert(res.head.failure.isEmpty && res.head.secs > 0)
+    val c = res.head.counters
+    assert(c.jobs > 0 && c.stages.nonEmpty && c.tasks > 0, c)
     assert(res(1).failure.map(_.getClass).contains(classOf[IllegalStateException]))
     val (line, full) = Bench.report(res, cal = 0.05, sfDir = sf)
     for (json <- Seq(line, full)) {
@@ -56,5 +71,18 @@ class HarnessSpec extends SparkSuite {
       assert(!json.contains(""""q_boom":0"""), json)
     }
     assert(line.contains(f""""value":${res.head.secs}%.3f,"""), line)
+    assert(full.contains(s""""readings":{"q_ok":{"wall_s":${res.head.secs},"jobs":${c.jobs},"""), full)
+  }
+
+  test("measured run: job, stage and task counts repeat exactly across two readings") {
+    val q = "q01_pricing_summary"
+    def counts(): (Int, Int, Int) = {
+      val r = Profile.recording(spark)(Profile.measure(spark, _, q, SparkEntry.queries(q), sf))
+      assert(r.failure.isEmpty, r)
+      (r.counters.jobs, r.counters.stages.size, r.counters.tasks)
+    }
+    val first = counts()
+    assert(first._1 > 0 && first._2 > 0 && first._3 > 0, first)
+    assert(counts() == first)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.streaming.IncrementalComponents
@@ -20,7 +18,7 @@ class IncrementalComponentsSpec extends SparkSuite {
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("labels track births, survive quiet batches, and merge across batches exactly") {
-    val storeDir = Files.createTempDirectory("graft_cc").toString
+    val storeDir = GraftSession.scratchDir("graft_cc").toString
     // batch 0: two clusters are born
     val b0 = Seq((1L, 2L), (3L, 4L)).toDF("s", "t")
     assert(labelMap(IncrementalComponents.processBatch(b0, 0, storeDir)) ==
@@ -41,7 +39,7 @@ class IncrementalComponentsSpec extends SparkSuite {
   }
 
   test("a crash-replayed batch rewrites an identical version; a missing predecessor fails fast") {
-    val storeDir = Files.createTempDirectory("graft_cc_rp").toString
+    val storeDir = GraftSession.scratchDir("graft_cc_rp").toString
     val b0 = Seq((1L, 2L)).toDF("s", "t")
     val b1 = Seq((2L, 3L)).toDF("s", "t")
     IncrementalComponents.processBatch(b0, 0, storeDir)
@@ -54,7 +52,7 @@ class IncrementalComponentsSpec extends SparkSuite {
     // relabel from only the live batch
     val orphan = intercept[IllegalStateException] {
       IncrementalComponents.processBatch(b0, 7,
-        Files.createTempDirectory("graft_cc_orphan").toString)
+        GraftSession.scratchDir("graft_cc_orphan").toString)
     }
     assert(orphan.getMessage.contains("store version missing"))
   }

@@ -26,7 +26,7 @@ class IncrementalCooccurSpec extends SparkSuite {
   }
 
   test("incremental store over order-atomic batches equals the one-shot q157") {
-    val storeDir = Files.createTempDirectory("graft_cooccur").toString
+    val storeDir = GraftSession.scratchDir("graft_cooccur").toString
     slices.zipWithIndex.foreach { case (s, i) =>
       IncrementalCooccur.processBatch(s, i, storeDir)
     }
@@ -39,7 +39,7 @@ class IncrementalCooccurSpec extends SparkSuite {
   }
 
   test("a crash-replayed batch rewrites an identical store version") {
-    val storeDir = Files.createTempDirectory("graft_cooccur_rp").toString
+    val storeDir = GraftSession.scratchDir("graft_cooccur_rp").toString
     val ss = slices
     ss.zipWithIndex.foreach { case (s, i) =>
       IncrementalCooccur.processBatch(s, i, storeDir)
@@ -57,7 +57,7 @@ class IncrementalCooccurSpec extends SparkSuite {
   }
 
   test("missing predecessor store version fails fast") {
-    val storeDir = Files.createTempDirectory("graft_cooccur_ff").toString
+    val storeDir = GraftSession.scratchDir("graft_cooccur_ff").toString
     intercept[IllegalStateException] {
       IncrementalCooccur.processBatch(slices.head, 1, storeDir)
     }
@@ -66,16 +66,16 @@ class IncrementalCooccurSpec extends SparkSuite {
   test("the live streaming wiring maintains the same store as direct batches") {
     // stage each order-atomic slice as one file; maxFilesPerTrigger=1
     // makes each file one micro-batch through the real foreachBatch path
-    val srcDir = Files.createTempDirectory("graft_cooccur_src")
+    val srcDir = GraftSession.scratchDir("graft_cooccur_src")
     slices.zipWithIndex.foreach { case (s, i) =>
-      val tmp = Files.createTempDirectory("graft_cooccur_stage")
+      val tmp = GraftSession.scratchDir("graft_cooccur_stage")
       s.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp)
         .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
       Files.move(part, srcDir.resolve(f"slice$i%02d.parquet"))
     }
-    val storeDir = Files.createTempDirectory("graft_cooccur_live").toString
-    val ckpt = Files.createTempDirectory("graft_cooccur_ckpt").toString
+    val storeDir = GraftSession.scratchDir("graft_cooccur_live").toString
+    val ckpt = GraftSession.scratchDir("graft_cooccur_ckpt").toString
     val stream = spark.readStream.schema(li.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
     val q = IncrementalCooccur.start(stream, storeDir, ckpt)

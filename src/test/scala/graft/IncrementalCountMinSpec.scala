@@ -27,7 +27,7 @@ class IncrementalCountMinSpec extends SparkSuite {
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "token")
     val oneShot = grid(all.agg(CountMin.sketch(col("token"), 3, 32).as("sk")))
     def run(order: Seq[Long]): Seq[Seq[Long]] = {
-      val dir = Files.createTempDirectory("graft_cm_inc").toString
+      val dir = GraftSession.scratchDir("graft_cm_inc").toString
       order.zipWithIndex.foreach { case (m, i) =>
         IncrementalCountMin.processBatch(
           all.filter(pmod(col("id"), lit(3)) === m), i.toLong, dir,
@@ -38,7 +38,7 @@ class IncrementalCountMinSpec extends SparkSuite {
     assert(run(Seq(0L, 1L, 2L)) == oneShot, "in-order store != one-shot")
     assert(run(Seq(2L, 0L, 1L)) == oneShot, "reordered store != one-shot")
     // replay: batch 1 reprocessed over the same v=0 rewrites v=1 identically
-    val dir = Files.createTempDirectory("graft_cm_rp").toString
+    val dir = GraftSession.scratchDir("graft_cm_rp").toString
     def b(m: Long, id: Long) = IncrementalCountMin.processBatch(
       all.filter(pmod(col("id"), lit(3)) === m), id, dir, "token", 3, 32)
     b(0L, 0L)
@@ -47,7 +47,7 @@ class IncrementalCountMinSpec extends SparkSuite {
     // a non-initial batch with no predecessor refuses to run
     val orphan = intercept[IllegalStateException] {
       IncrementalCountMin.processBatch(all, 5L,
-        Files.createTempDirectory("graft_cm_orphan").toString,
+        GraftSession.scratchDir("graft_cm_orphan").toString,
         "token", 3, 32)
     }
     assert(orphan.getMessage.contains("store version missing"))

@@ -23,7 +23,7 @@ class IncrementalDailyMomentsSpec extends SparkSuite {
         r.getDecimal(3).toBigInteger)).toMap
 
   test("3-batch store == one-shot aggregate, any batch order; replay rewrites") {
-    val store = Files.createTempDirectory("graft_incdm").toString
+    val store = GraftSession.scratchDir("graft_incdm").toString
     def part(i: Int) = rows.filter(pmod(col("v"), lit(3)) === i)
     IncrementalDailyMoments.processBatch(part(2), 0L, store, Seq("day"), "v")
     IncrementalDailyMoments.processBatch(part(0), 1L, store, Seq("day"), "v")
@@ -54,7 +54,7 @@ class IncrementalDailyMomentsSpec extends SparkSuite {
       val arm = i % 2 + 1
       (day, arm, (i * 37L + 11) % 6000L)
     }.toDF("day", "arm", "v")
-    val store = Files.createTempDirectory("graft_incdm_late").toString
+    val store = GraftSession.scratchDir("graft_incdm_late").toString
     // batch 0: everything except day 04, plus only HALF of day 07;
     // batch 1: the rest of day 07; batch 2: day 04 arrives last
     val b0 = ev.filter(col("day") =!= "2024-01-04" &&
@@ -74,7 +74,7 @@ class IncrementalDailyMomentsSpec extends SparkSuite {
   }
 
   test("missing and torn predecessors fail fast; replay recovers a torn store") {
-    val store = Files.createTempDirectory("graft_incdm_torn").toString
+    val store = GraftSession.scratchDir("graft_incdm_torn").toString
     def part(i: Int) = rows.filter(pmod(col("v"), lit(3)) === i)
     val gap = intercept[IllegalStateException] {
       IncrementalDailyMoments.processBatch(rows, 3L, store, Seq("day"), "v")

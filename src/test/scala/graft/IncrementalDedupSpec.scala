@@ -36,7 +36,7 @@ class IncrementalDedupSpec extends SparkSuite {
     df.collect().toSeq.map(_.toSeq).sortBy(_.toString)
 
   test("admission is near-dup-free, replay-idempotent, and dup_of points at admitted docs") {
-    val store = Files.createTempDirectory("inc_dedup").toString
+    val store = GraftSession.scratchDir("inc_dedup").toString
     val d = docs.cache()
     val slices = Seq(
       d.filter(col("doc_id") % 3 === 0),
@@ -87,7 +87,7 @@ class IncrementalDedupSpec extends SparkSuite {
   }
 
   test("arrival order does not admit a near-dup pair (adversarial slicing)") {
-    val store = Files.createTempDirectory("inc_dedup_order").toString
+    val store = GraftSession.scratchDir("inc_dedup_order").toString
     val d = docs.cache()
     // put every planted copy FIRST, sources later — the copy becomes the
     // admitted representative and the source must then be rejected
@@ -113,22 +113,22 @@ class IncrementalDedupSpec extends SparkSuite {
       d.filter(col("doc_id") % 3 === 1),
       d.filter(col("doc_id") % 3 === 2))
     // direct-batch reference store
-    val direct = Files.createTempDirectory("inc_dedup_direct").toString
+    val direct = GraftSession.scratchDir("inc_dedup_direct").toString
     slices.zipWithIndex.foreach { case (s, i) =>
       IncrementalDedup.processBatch(s, i, "doc_id", "sh", direct, cfg)
     }
     // stage each slice as one file; maxFilesPerTrigger=1 makes each file
     // one micro-batch through the real foreachBatch path
-    val srcDir = Files.createTempDirectory("inc_dedup_src")
+    val srcDir = GraftSession.scratchDir("inc_dedup_src")
     slices.zipWithIndex.foreach { case (s, i) =>
-      val tmp = Files.createTempDirectory("inc_dedup_stage")
+      val tmp = GraftSession.scratchDir("inc_dedup_stage")
       s.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp)
         .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
       Files.move(part, srcDir.resolve(f"slice$i%02d.parquet"))
     }
-    val live = Files.createTempDirectory("inc_dedup_live").toString
-    val ckpt = Files.createTempDirectory("inc_dedup_ckpt").toString
+    val live = GraftSession.scratchDir("inc_dedup_live").toString
+    val ckpt = GraftSession.scratchDir("inc_dedup_ckpt").toString
     val stream = spark.readStream.schema(d.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
     val q = IncrementalDedup.start(stream, "doc_id", "sh", live, ckpt, cfg)
@@ -143,20 +143,20 @@ class IncrementalDedupSpec extends SparkSuite {
     val nSlices = 5
     val slices = (0 until nSlices).map(i => d.filter(col("doc_id") % nSlices === i))
     // never-compacted direct-batch reference
-    val direct = Files.createTempDirectory("inc_dedup_ac_direct").toString
+    val direct = GraftSession.scratchDir("inc_dedup_ac_direct").toString
     slices.zipWithIndex.foreach { case (s, i) =>
       IncrementalDedup.processBatch(s, i, "doc_id", "sh", direct, cfg)
     }
-    val srcDir = Files.createTempDirectory("inc_dedup_ac_src")
+    val srcDir = GraftSession.scratchDir("inc_dedup_ac_src")
     slices.zipWithIndex.foreach { case (s, i) =>
-      val tmp = Files.createTempDirectory("inc_dedup_ac_stage")
+      val tmp = GraftSession.scratchDir("inc_dedup_ac_stage")
       s.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp)
         .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
       Files.move(part, srcDir.resolve(f"slice$i%02d.parquet"))
     }
-    val live = Files.createTempDirectory("inc_dedup_ac_live").toString
-    val ckpt = Files.createTempDirectory("inc_dedup_ac_ckpt").toString
+    val live = GraftSession.scratchDir("inc_dedup_ac_live").toString
+    val ckpt = GraftSession.scratchDir("inc_dedup_ac_ckpt").toString
     val stream = spark.readStream.schema(d.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
     val q = IncrementalDedup.start(stream, "doc_id", "sh", live, ckpt, cfg,
@@ -179,7 +179,7 @@ class IncrementalDedupSpec extends SparkSuite {
   }
 
   test("compaction: decisions identical, dirs folded, replay-after-fold fails fast") {
-    val store = Files.createTempDirectory("inc_dedup_compact").toString
+    val store = GraftSession.scratchDir("inc_dedup_compact").toString
     val d = docs.cache()
     val slices = Seq(
       d.filter(col("doc_id") % 3 === 0),
@@ -203,7 +203,7 @@ class IncrementalDedupSpec extends SparkSuite {
     // batch 2 on top of the generation: history = gen + nothing live,
     // and the result equals the never-compacted 3-batch store
     IncrementalDedup.processBatch(slices(2), 2, "doc_id", "sh", store, cfg)
-    val direct = Files.createTempDirectory("inc_dedup_nocompact").toString
+    val direct = GraftSession.scratchDir("inc_dedup_nocompact").toString
     slices.zipWithIndex.foreach { case (s, i) =>
       IncrementalDedup.processBatch(s, i, "doc_id", "sh", direct, cfg)
     }
@@ -221,7 +221,7 @@ class IncrementalDedupSpec extends SparkSuite {
   }
 
   test("history scan prunes to the batch's signature buckets") {
-    val store = Files.createTempDirectory("inc_dedup_prune").toString
+    val store = GraftSession.scratchDir("inc_dedup_prune").toString
     val d = docs.cache()
     IncrementalDedup.processBatch(d.filter(col("doc_id") % 2 === 0), 0,
       "doc_id", "sh", store, cfg)

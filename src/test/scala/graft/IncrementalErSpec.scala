@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -36,7 +34,7 @@ class IncrementalErSpec extends SparkSuite {
     df.collect().toSeq.map(_.toSeq).sortBy(_.toString)
 
   test("incremental ER: stable mappings, separated canonicals, replay-identical") {
-    val store = Files.createTempDirectory("inc_er").toString
+    val store = GraftSession.scratchDir("inc_er").toString
     val all = names.cache()
     val slices = Seq(
       all.filter(pmod(xxhash64(col("p_name")), lit(3)) === 0),
@@ -75,7 +73,7 @@ class IncrementalErSpec extends SparkSuite {
   }
 
   test("single-batch stream == batch canonicalize; re-arrival writes nothing new") {
-    val store = Files.createTempDirectory("inc_er_one").toString
+    val store = GraftSession.scratchDir("inc_er_one").toString
     val all = names.cache()
     IncrementalEntityResolution.processBatch(all, 0, "p_name", store, cfg)
     val streamed = img(IncrementalEntityResolution.resolve(spark, store))
@@ -90,7 +88,7 @@ class IncrementalErSpec extends SparkSuite {
   }
 
   test("compaction preserves resolve/canonicals; folded batch replay fails fast") {
-    val store = Files.createTempDirectory("inc_er_cmp").toString
+    val store = GraftSession.scratchDir("inc_er_cmp").toString
     val all = names.cache()
     val s0 = all.filter(pmod(xxhash64(col("p_name")), lit(2)) === 0)
     val s1 = all.filter(pmod(xxhash64(col("p_name")), lit(2)) === 1)

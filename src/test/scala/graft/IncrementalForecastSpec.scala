@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.streaming.IncrementalForecast
@@ -21,7 +19,7 @@ class IncrementalForecastSpec extends SparkSuite {
   private val (alpha, beta) = (0.5, 0.3)
 
   private def store(): String =
-    Files.createTempDirectory("graft_fc").toString
+    GraftSession.scratchDir("graft_fc").toString
 
   private def proc(df: org.apache.spark.sql.DataFrame, id: Long, dir: String) =
     IncrementalForecast.processBatch(df, id, dir, keys, "t", "v", alpha, beta)

@@ -76,7 +76,7 @@ class IncrementalHllSpec extends SparkSuite {
       s"k${i % 37}")).toDF("id", "g", "item")
     val oneShot = grid(all.groupBy("g").agg(Hll.sketch(col("item"), 6).as("sk")))
     def run(order: Seq[Long]): Map[String, Seq[Int]] = {
-      val dir = Files.createTempDirectory("graft_hll_inc").toString
+      val dir = GraftSession.scratchDir("graft_hll_inc").toString
       order.zipWithIndex.foreach { case (m, i) =>
         IncrementalHll.processBatch(
           all.filter(pmod(col("id"), lit(3)) === m), i.toLong, dir,
@@ -87,14 +87,14 @@ class IncrementalHllSpec extends SparkSuite {
     assert(run(Seq(0L, 1L, 2L)) == oneShot, "in-order store != one-shot")
     assert(run(Seq(2L, 0L, 1L)) == oneShot, "reordered store != one-shot")
     // replay: batch 1 reprocessed over the same v=0 rewrites v=1 identically
-    val dir = Files.createTempDirectory("graft_hll_rp").toString
+    val dir = GraftSession.scratchDir("graft_hll_rp").toString
     def b(m: Long, id: Long) = IncrementalHll.processBatch(
       all.filter(pmod(col("id"), lit(3)) === m), id, dir, Seq("g"), "item", 6)
     b(0L, 0L)
     val first = grid(b(1L, 1L))
     assert(grid(b(1L, 1L)) == first, "replay drifted")
     // a group absent from early batches appears intact later
-    val dir2 = Files.createTempDirectory("graft_hll_newgrp").toString
+    val dir2 = GraftSession.scratchDir("graft_hll_newgrp").toString
     IncrementalHll.processBatch(all.filter(col("g") === "odd"), 0L, dir2,
       Seq("g"), "item", 6)
     val merged = grid(IncrementalHll.processBatch(
@@ -103,7 +103,7 @@ class IncrementalHllSpec extends SparkSuite {
     // a non-initial batch with no predecessor refuses to run
     val orphan = intercept[IllegalStateException] {
       IncrementalHll.processBatch(all, 5L,
-        Files.createTempDirectory("graft_hll_orphan").toString,
+        GraftSession.scratchDir("graft_hll_orphan").toString,
         Seq("g"), "item", 6)
     }
     assert(orphan.getMessage.contains("store version missing"))

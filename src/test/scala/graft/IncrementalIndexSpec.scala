@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.llm.{Bm25, TextOps}
@@ -23,7 +21,7 @@ class IncrementalIndexSpec extends SparkSuite {
       .collect().toSeq.map(_.toSeq).sortBy(_.toString)
 
   test("incrementally built index probes identically to batch BM25; replay and compaction preserve it") {
-    val root = Files.createTempDirectory("inv_idx").toString
+    val root = GraftSession.scratchDir("inv_idx").toString
     val slices = Seq(
       docs.filter(col("doc_id") % 3 === 0),
       docs.filter(col("doc_id") % 3 === 1),
@@ -64,7 +62,7 @@ class IncrementalIndexSpec extends SparkSuite {
   }
 
   test("the probe scan prunes to the query terms' bucket partitions") {
-    val root = Files.createTempDirectory("inv_prune").toString
+    val root = GraftSession.scratchDir("inv_prune").toString
     IncrementalIndex.processBatch(docs, 0L, "doc_id", "text", root)
     val probe = IncrementalIndex.probe(spark, root, Seq("data"), k = 5)
     probe.collect()

@@ -34,7 +34,7 @@ class IncrementalIvfSpec extends SparkSuite {
   }
 
   test("incrementally built index probes identically to the batch path") {
-    val dir = Files.createTempDirectory("ivf_idx").toString
+    val dir = GraftSession.scratchDir("ivf_idx").toString
     val c = cents.cache()
     val slices = Seq(
       emb.filter(col("vec_id") < 600),
@@ -55,7 +55,7 @@ class IncrementalIvfSpec extends SparkSuite {
   }
 
   test("the probe scan prunes to the probed bucket partitions") {
-    val dir = Files.createTempDirectory("ivf_idx2").toString
+    val dir = GraftSession.scratchDir("ivf_idx2").toString
     val c = cents.cache()
     IncrementalIvf.processBatch(emb, 0, c, "vec_id", "embedding", dir)
     val one = queries.limit(1)
@@ -71,16 +71,16 @@ class IncrementalIvfSpec extends SparkSuite {
     val c = cents.cache()
     val nSlices = 5
     val slices = (0 until nSlices).map(i => emb.filter(col("vec_id") % nSlices === i))
-    val srcDir = Files.createTempDirectory("ivf_ac_src")
+    val srcDir = GraftSession.scratchDir("ivf_ac_src")
     slices.zipWithIndex.foreach { case (s, i) =>
-      val tmp = Files.createTempDirectory("ivf_ac_stage")
+      val tmp = GraftSession.scratchDir("ivf_ac_stage")
       s.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp)
         .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
       Files.move(part, srcDir.resolve(f"slice$i%02d.parquet"))
     }
-    val dir = Files.createTempDirectory("ivf_ac_idx").toString
-    val ckpt = Files.createTempDirectory("ivf_ac_ckpt").toString
+    val dir = GraftSession.scratchDir("ivf_ac_idx").toString
+    val ckpt = GraftSession.scratchDir("ivf_ac_ckpt").toString
     val stream = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir.toString)
     val q = IncrementalIvf.start(stream, c, "vec_id", "embedding", dir, ckpt,
@@ -99,7 +99,7 @@ class IncrementalIvfSpec extends SparkSuite {
   }
 
   test("compaction: probes identical, batch dirs folded, crash-restart exactly-once") {
-    val dir = Files.createTempDirectory("ivf_idx4").toString
+    val dir = GraftSession.scratchDir("ivf_idx4").toString
     val c = cents.cache()
     // sf0.001 has vec_ids 0-499; all four slices are non-empty
     val slices = Seq(
@@ -157,9 +157,9 @@ class IncrementalIvfSpec extends SparkSuite {
   }
 
   test("the wired stream builds the same index as direct batch calls") {
-    val src = Files.createTempDirectory("ivf_src").toString
-    val dir = Files.createTempDirectory("ivf_idx3").toString
-    val ckpt = Files.createTempDirectory("ivf_ckpt").toString
+    val src = GraftSession.scratchDir("ivf_src").toString
+    val dir = GraftSession.scratchDir("ivf_idx3").toString
+    val ckpt = GraftSession.scratchDir("ivf_ckpt").toString
     val c = cents.cache()
     emb.coalesce(1).write.mode("append").parquet(src)
     val q = IncrementalIvf.start(
@@ -174,7 +174,7 @@ class IncrementalIvfSpec extends SparkSuite {
   }
 
   test("centroid refresh: objective never degrades, probes stay batch-consistent, ingestion continues") {
-    val dir = Files.createTempDirectory("ivf_idx4").toString
+    val dir = GraftSession.scratchDir("ivf_idx4").toString
     val c = cents.cache()
     val early = emb.filter(col("vec_id") % 4 =!= 3)
     val late = emb.filter(col("vec_id") % 4 === 3)

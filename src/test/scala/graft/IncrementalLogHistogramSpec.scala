@@ -27,7 +27,7 @@ class IncrementalLogHistogramSpec extends SparkSuite {
     df.collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
 
   test("3-batch store == one-shot histogram of the union; replay rewrites, never double-counts") {
-    val store = Files.createTempDirectory("graft_incloghist").toString
+    val store = GraftSession.scratchDir("graft_incloghist").toString
     def part(i: Int) = rows.filter(pmod(col("v"), lit(3)) === i)
     IncrementalLogHistogram.processBatch(part(1), 0L, store, Seq("g"), "v")
     IncrementalLogHistogram.processBatch(part(2), 1L, store, Seq("g"), "v")
@@ -42,7 +42,7 @@ class IncrementalLogHistogramSpec extends SparkSuite {
   }
 
   test("missing predecessor version fails fast") {
-    val store = Files.createTempDirectory("graft_incloghist_gap").toString
+    val store = GraftSession.scratchDir("graft_incloghist_gap").toString
     val err = intercept[IllegalStateException] {
       IncrementalLogHistogram.processBatch(rows, 2L, store, Seq("g"), "v")
     }
@@ -50,7 +50,7 @@ class IncrementalLogHistogramSpec extends SparkSuite {
   }
 
   test("torn predecessor (no _SUCCESS marker) fails fast; replay recovers") {
-    val store = Files.createTempDirectory("graft_incloghist_torn").toString
+    val store = GraftSession.scratchDir("graft_incloghist_torn").toString
     def part(i: Int) = rows.filter(pmod(col("v"), lit(3)) === i)
     IncrementalLogHistogram.processBatch(part(0), 0L, store, Seq("g"), "v")
     IncrementalLogHistogram.processBatch(part(1), 1L, store, Seq("g"), "v")

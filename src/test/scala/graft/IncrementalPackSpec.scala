@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.ops.PrefixSum
@@ -25,8 +23,8 @@ class IncrementalPackSpec extends SparkSuite {
   test("incremental batches reproduce the one-shot packing exactly") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "text").orderBy("doc_id")
-    val out = Files.createTempDirectory("ipack_out").toString
-    val state = Files.createTempDirectory("ipack_state").toString
+    val out = GraftSession.scratchDir("ipack_out").toString
+    val state = GraftSession.scratchDir("ipack_state").toString
     // three doc_id-ordered slices arriving as micro-batches 0..2
     val slices = Seq(
       docs.filter(col("doc_id") < 150),
@@ -48,8 +46,8 @@ class IncrementalPackSpec extends SparkSuite {
   test("a replayed micro-batch rewrites its output instead of appending") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "text")
-    val out = Files.createTempDirectory("ipack_out2").toString
-    val state = Files.createTempDirectory("ipack_state2").toString
+    val out = GraftSession.scratchDir("ipack_out2").toString
+    val state = GraftSession.scratchDir("ipack_state2").toString
     val b0 = docs.filter(col("doc_id") < 200)
     val b1 = docs.filter(col("doc_id") >= 200)
     IncrementalPack.processBatch(b0, 0, out, state, Cap)
@@ -65,10 +63,10 @@ class IncrementalPackSpec extends SparkSuite {
   test("the wired stream packs a growing directory end-to-end") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "text")
-    val src = Files.createTempDirectory("ipack_src").toString
-    val out = Files.createTempDirectory("ipack_out3").toString
-    val state = Files.createTempDirectory("ipack_state3").toString
-    val ckpt = Files.createTempDirectory("ipack_ckpt").toString
+    val src = GraftSession.scratchDir("ipack_src").toString
+    val out = GraftSession.scratchDir("ipack_out3").toString
+    val state = GraftSession.scratchDir("ipack_state3").toString
+    val ckpt = GraftSession.scratchDir("ipack_ckpt").toString
     docs.filter(col("doc_id") < 250).coalesce(1).write.mode("append").parquet(src)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(src)

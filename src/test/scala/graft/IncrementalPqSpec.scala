@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.llm.SimSearch
@@ -42,7 +40,7 @@ class IncrementalPqSpec extends SparkSuite {
   }
 
   test("incremental encode is replay-idempotent and probe-consistent across compaction") {
-    val dir = Files.createTempDirectory("pq_store").toString
+    val dir = GraftSession.scratchDir("pq_store").toString
     val corpus = clustered(seed = 3, n = 400, idFrom = 0L).cache()
     val books = IncrementalPq.trainCodebooks(corpus, "vec_id", "embedding", dim)
       .cache()
@@ -75,7 +73,7 @@ class IncrementalPqSpec extends SparkSuite {
   }
 
   test("codebook refresh recovers drift recall; ingestion resolves committed codebooks") {
-    val dir = Files.createTempDirectory("pq_drift").toString
+    val dir = GraftSession.scratchDir("pq_drift").toString
     // bootstrap distribution A; codebooks trained on A only
     val a = clustered(seed = 5, n = 300, idFrom = 0L).cache()
     val booksA = IncrementalPq.trainCodebooks(a, "vec_id", "embedding", dim).cache()

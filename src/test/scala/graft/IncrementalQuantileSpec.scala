@@ -28,7 +28,7 @@ class IncrementalQuantileSpec extends SparkSuite {
 
   test("3-batch store == one-shot sketch of the union, in any batch order; replay rewrites, never double-counts") {
     QuantileSketch.register(spark)
-    val store = Files.createTempDirectory("graft_incq").toString
+    val store = GraftSession.scratchDir("graft_incq").toString
     def part(i: Int) = rows.filter(pmod(col("v"), lit(3)) === i)
     // deliberately scrambled batch content order relative to ids
     IncrementalQuantile.processBatch(part(2), 0L, store, Seq("g"), "v")
@@ -52,7 +52,7 @@ class IncrementalQuantileSpec extends SparkSuite {
   }
 
   test("missing predecessor version fails fast") {
-    val store = Files.createTempDirectory("graft_incq_gap").toString
+    val store = GraftSession.scratchDir("graft_incq_gap").toString
     val err = intercept[IllegalStateException] {
       IncrementalQuantile.processBatch(rows, 3L, store, Seq("g"), "v")
     }
@@ -64,7 +64,7 @@ class IncrementalQuantileSpec extends SparkSuite {
     // commit marker (written LAST by the FileOutputCommitter) does not —
     // folding such a partial grid forward would under-count forever
     QuantileSketch.register(spark)
-    val store = Files.createTempDirectory("graft_incq_torn").toString
+    val store = GraftSession.scratchDir("graft_incq_torn").toString
     def part(i: Int) = rows.filter(pmod(col("v"), lit(3)) === i)
     IncrementalQuantile.processBatch(part(0), 0L, store, Seq("g"), "v")
     IncrementalQuantile.processBatch(part(1), 1L, store, Seq("g"), "v")
@@ -104,7 +104,7 @@ class IncrementalQuantileSpec extends SparkSuite {
       .agg(QuantileSketch.sketch(col("v")).as("sk"), count(col("v")).as("n"))
       .cache()
     // (a) incremental: the fixture split across 3 store batches
-    val store = Files.createTempDirectory("graft_incq_adv").toString
+    val store = GraftSession.scratchDir("graft_incq_adv").toString
     def part(i: Int) = df.filter(pmod(col("v"), lit(3)) === i)
     IncrementalQuantile.processBatch(part(0), 0L, store, Seq("g"), "v")
     IncrementalQuantile.processBatch(part(1), 1L, store, Seq("g"), "v")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -37,7 +35,7 @@ class IncrementalScd2Spec extends SparkSuite {
   }
 
   test("streaming deltas reconstruct the sequential batch Scd2 exactly; replay identical") {
-    val store = Files.createTempDirectory("inc_scd2").toString
+    val store = GraftSession.scratchDir("inc_scd2").toString
     val bs = batches
     bs.zipWithIndex.foreach { case (b, i) =>
       IncrementalScd2.processBatch(b, i, "k", Seq("seg", "bal"), store)
@@ -66,7 +64,7 @@ class IncrementalScd2Spec extends SparkSuite {
   }
 
   test("compaction preserves history; folded batch replay fails fast") {
-    val store = Files.createTempDirectory("inc_scd2_cmp").toString
+    val store = GraftSession.scratchDir("inc_scd2_cmp").toString
     val bs = batches
     bs.zipWithIndex.foreach { case (b, i) =>
       IncrementalScd2.processBatch(b, i, "k", Seq("seg", "bal"), store)

@@ -101,7 +101,7 @@ class KMeansParSpec extends SparkSuite {
   }
 
   test("IncrementalIvf seeded with KMeans|| centroids probes identically to the batch path") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_kpar").toString
+    val dir = GraftSession.scratchDir("ivf_kpar").toString
     val u = SimSearch.unitized(corpus, "vec_id", "emb", "vec_id", "__ne")
     // same (seed, rounds, iters) defaults as ivfTopKPar -> identical
     // centroid space, so the streamed index must probe identically

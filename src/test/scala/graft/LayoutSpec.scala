@@ -30,7 +30,7 @@ class LayoutSpec extends SparkSuite {
   }
 
   test("partitioned parquet prunes partitions at scan time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = GraftSession.scratchDir("graft_part").toString
     val events = graft.queries.T(spark, sf, "events") // handles ns timestamps
     graft.io.Sinks.parquetPartitioned(
       events.select(col("event_id"), col("user_id"), col("event_type"), col("value")),

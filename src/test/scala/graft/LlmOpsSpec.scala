@@ -703,7 +703,7 @@ class LlmOpsSpec extends SparkSuite {
   test("persisted IVF index: queryIvfIndex == ivfTopKKMeans, postings bucket-partitioned") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val queries = emb.filter(col("vec_id") % 100 === 0)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf").toString + "/idx"
+    val path = GraftSession.scratchDir("graft_ivf").toString + "/idx"
     SimSearch.buildIvfIndex(emb, "vec_id", "embedding", path, nCentroids = 8)
     val fromIndex = SimSearch.queryIvfIndex(queries, "vec_id", "embedding", path, 5, nProbe = 4)
       .select("query_id", "vec_id", "cos_sim").as[(Long, Long, Double)].collect().toSet
@@ -718,7 +718,7 @@ class LlmOpsSpec extends SparkSuite {
     // the Lloyd build (q313/q314's oracle-replayable variant) must be
     // bit-identical to the in-memory ivfTopKLloyd through the SAME
     // persisted layout — build-once / probe-many loses nothing
-    val lp = java.nio.file.Files.createTempDirectory("graft_ivf_l").toString + "/idx"
+    val lp = GraftSession.scratchDir("graft_ivf_l").toString + "/idx"
     SimSearch.buildIvfIndexLloyd(emb, "vec_id", "embedding", lp,
       nCentroids = 8, iters = 2)
     val lloydIdx = SimSearch.queryIvfIndex(queries, "vec_id", "embedding", lp, 5, nProbe = 4)

@@ -1078,7 +1078,7 @@ class OpsSpec extends SparkSuite {
 
   test("TableMaintenance.smallFiles: fragmented partitions flagged, compacted ones clean") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("tm_tbl").toString
+    val dir = GraftSession.scratchDir("tm_tbl").toString
     val df = (0 until 2000).map(i => (i.toLong, i % 2, "x" * 50)).toDF("id", "p", "s")
     // p=0 fragmented into 8 files; p=1 compacted to one
     df.filter(col("p") === 0).repartition(8)
@@ -1248,7 +1248,7 @@ class OpsSpec extends SparkSuite {
     // the production path: two INDEPENDENT parquet reads of the same
     // path (separate FileIndex objects — plan-object equality fails,
     // the structural fingerprint must not)
-    val dir = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    val dir = GraftSession.scratchDir("graft-skew").toString
     try {
       data.toDF("o", "p").write.mode("overwrite").parquet(dir)
       val c1 = sp.computes.get()

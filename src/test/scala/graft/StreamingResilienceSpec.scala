@@ -15,7 +15,7 @@ class StreamingResilienceSpec extends SparkSuite {
 
   /** Write `df` as a single parquet file named `name` inside `dir`. */
   private def addFile(df: org.apache.spark.sql.DataFrame, dir: Path, name: String): Unit = {
-    val tmp = Files.createTempDirectory("graft_stage")
+    val tmp = GraftSession.scratchDir("graft_stage")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = Files.list(tmp).filter(_.getFileName.toString.endsWith(".parquet"))
       .findFirst().get()
@@ -40,7 +40,7 @@ class StreamingResilienceSpec extends SparkSuite {
       .sameElements(expected))
     // vintage 2: un-flagged TIMESTAMP(MICROS), i.e. TIMESTAMP_NTZ —
     // round-trip through a parquet file to exercise the real reader path
-    val ntzDir = Files.createTempDirectory("graft_ntz").toString
+    val ntzDir = GraftSession.scratchDir("graft_ntz").toString
     base.select(col("event_id"), col("ts").cast(TimestampNTZType).as("ts"))
       .write.mode("overwrite").parquet(ntzDir)
     val reread = spark.read.parquet(ntzDir)
@@ -56,9 +56,9 @@ class StreamingResilienceSpec extends SparkSuite {
     val events = spark.read.parquet(s"$sf/events.parquet")
       .select(col("event_id"), col("user_id"), col("event_type"))
     val total = events.count()
-    val srcDir = Files.createTempDirectory("graft_restart_src")
-    val outDir = Files.createTempDirectory("graft_restart_out").toString
-    val ckpt = Files.createTempDirectory("graft_restart_ckpt").toString
+    val srcDir = GraftSession.scratchDir("graft_restart_src")
+    val outDir = GraftSession.scratchDir("graft_restart_out").toString
+    val ckpt = GraftSession.scratchDir("graft_restart_ckpt").toString
     val schema = events.schema
 
     def runOnce(): Unit = {
@@ -95,7 +95,7 @@ class StreamingResilienceSpec extends SparkSuite {
     // batches to match the batch-mode result.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val events = spark.read.parquet(s"$sf/events.parquet")
-    val srcDir = Files.createTempDirectory("graft_multibatch")
+    val srcDir = GraftSession.scratchDir("graft_multibatch")
     (0 until 4).foreach(i =>
       addFile(events.filter(col("event_id") % 4 === i), srcDir, s"part$i.parquet"))
     val agg = graft.queries.T.normalizeTs(
@@ -129,7 +129,7 @@ class StreamingResilienceSpec extends SparkSuite {
     val events = graft.queries.T.normalizeTs(spark.read.parquet(s"$sf/events.parquet"))
       .withColumn("tsv", unix_micros(col("ts")))
     val qs = events.stat.approxQuantile("tsv", Array(0.25, 0.5, 0.75), 0.0)
-    val srcDir = Files.createTempDirectory("graft_wm")
+    val srcDir = GraftSession.scratchDir("graft_wm")
     val bounds = (Double.MinValue +: qs.map(_.toDouble)) :+ Double.MaxValue
     bounds.sliding(2).zipWithIndex.foreach { case (pair, i) =>
       val (lo, hi) = (pair(0), pair(1))
@@ -186,7 +186,7 @@ class StreamingResilienceSpec extends SparkSuite {
     assert(streamed === batch)
     // state must MERGE across micro-batches, not restart: 4 staged files
     // each spanning the full time range, drained one file per trigger
-    val srcDir = Files.createTempDirectory("graft_kmv_mb")
+    val srcDir = GraftSession.scratchDir("graft_kmv_mb")
     (0 until 4).foreach(i =>
       addFile(events.filter(col("event_id") % 4 === i), srcDir, s"part$i.parquet"))
     val agg = graft.queries.T.normalizeTs(

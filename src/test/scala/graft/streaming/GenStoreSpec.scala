@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** The shared generation-store protocol's replay guard, pinned directly:
@@ -16,7 +14,7 @@ class GenStoreSpec extends graft.SparkSuite {
     .select("vec_id", "embedding")
 
   test("autoCompact: threshold-gated, never folds the current (replayable) batch") {
-    val dir = Files.createTempDirectory("genstore_ac").toString
+    val dir = graft.GraftSession.scratchDir("genstore_ac").toString
     val cents = graft.llm.SimSearch.seedCentroids(emb, "vec_id", "embedding", 8).cache()
     def ingest(id: Long): Unit = IncrementalIvf.processBatch(
       emb.filter(col("vec_id") % 3 === id % 3), id, cents, "vec_id", "embedding", dir)
