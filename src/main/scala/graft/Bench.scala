@@ -5,11 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Perf harness: times every registered query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line (driver contract, BASELINE.md).
   *
-  * Bench builds its session in production mode: a twin query
-  * (`QueryDef.twin`, e.g. q120's ordered fold, which exists only so the
-  * DuckDB hash gate can match its floats bit for bit) runs its
-  * production plan here, while Verify runs the exact plan the oracle
-  * gates; ModeParitySpec pins the two to the same rows.
+  * Bench times the same plans Verify dumps for the oracle: every query
+  * has one plan.
   *
   * Methodology: fixed name order; an untimed warm-up absorbs one-time
   * JVM/codegen/scan-setup cost; then every query runs the same protocol,
@@ -18,8 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cached or persisted. Each reading carries the min-wall run's Spark
   * job, stage and task counts, executor run/CPU/GC ms, shuffle and spill
   * MB and planning ms, and the RDDs and storage the query left behind.
-  * Counts are the noise-free evidence: same-code walls on a shared host
-  * differ up to 2x from host-level stalls.
+  * Counts are the steadier evidence: same-code walls on a shared host
+  * differ up to 2x from host-level stalls. A count that differs between
+  * reps (AQE may run an extra query-stage job) is shown as its min-max
+  * span, so a count is never read off one rep alone.
   *
   * A query that throws has no time: it is left out of the total, listed
   * under "failed" with its exception class, and the run exits nonzero
@@ -32,7 +31,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(cores = cpus.toInt, mode = GraftSession.Mode.production)
+    val spark = GraftSession.builder(cores = cpus.toInt)
       // ContextCleaner frees finished broadcasts, shuffles and RDDs only
       // when a GC collects their weak refs; tighten its periodic-GC
       // fallback from 30min so a long suite keeps draining between the
@@ -127,8 +126,8 @@ object Bench {
         val c = r.counters
         val outcome = r.failure.fold(f"sec=${r.secs}%.3f")(e =>
           s"FAILED ${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}")
-        System.err.println(f"[bench-diag] $name%-28s jobs=${c.jobs}%-4d " +
-          f"stages=${c.stages.size}%-4d tasks=${c.tasks}%-5d rdds=${r.rdds}%-3d " +
+        System.err.println(f"[bench-diag] $name%-28s jobs=${r.jobSpan}%-4s " +
+          f"stages=${r.stageSpan}%-4s tasks=${r.taskSpan}%-5s rdds=${r.rdds}%-3d " +
           f"storageMB=${r.storageMB}%8.1f $outcome")
         r
       }
@@ -139,7 +138,9 @@ object Bench {
     * and listed under "failed" (name -> exception class). The stdout
     * line's "cal_norm" is the total in calibrator units (total / cal),
     * comparable across hosts of different speed; the record's
-    * "readings" hold every timed query's full [[Profile.Reading]].
+    * "readings" hold every timed query's full [[Profile.Reading]]. A
+    * count whose reps disagree also gets its `[min, max]` span
+    * (`jobs_span`, `stages_span`, `tasks_span`).
     */
   def report(results: Seq[Profile.Reading], cal: Double, sfDir: String): (String, String) = {
     val ok = results.filter(_.failure.isEmpty)
@@ -163,8 +164,10 @@ object Bench {
       .mkString("{", ",", "}")
     val readings = ok.map { r =>
       val c = r.counters
+      val spans = Seq("jobs" -> r.jobSpan, "stages" -> r.stageSpan, "tasks" -> r.taskSpan)
+        .collect { case (k, s) if s.min != s.max => s""""${k}_span":[${s.min},${s.max}],""" }
       "\"" + r.name + "\":" + s"""{"wall_s":${r.secs},"jobs":${c.jobs},"stages":${c.stages.size},""" +
-        s""""tasks":${c.tasks},"run_ms":${c.runMs},"cpu_ms":${c.cpuMs},"gc_ms":${c.gcMs},""" +
+        s""""tasks":${c.tasks},${spans.mkString}"run_ms":${c.runMs},"cpu_ms":${c.cpuMs},"gc_ms":${c.gcMs},""" +
         s""""shuffle_read_mb":${c.readMB},"shuffle_write_mb":${c.writeMB},""" +
         s""""spill_mb":${c.spillMB},"plan_ms":${c.planMs},"rdds":${r.rdds},""" +
         s""""storage_mb":${r.storageMB}}"""

@@ -24,40 +24,22 @@ import org.apache.spark.sql.execution.{CacheManager, CachedData}
   *    self-join the whole join runs single-threaded (measured 3x on the
   *    flow queries); the floor keeps tiny-but-exploding map stages wide
   *    (see SCALE.md, "Optimizer interactions");
-  *  - UTC session timezone — deterministic date math across deployments;
-  *  - `spark.graft.mode` — the plan mode, see [[Mode]].
+  *  - UTC session timezone — deterministic date math across deployments.
+  *
+  * There is no plan switch: every query has one plan, and the plan the
+  * bench times is the plan the oracle gates.
   */
 object GraftSession {
 
-  /** Which plan a twin query runs (`QueryDef.twin`). A twin's oracle
-    * replays a float-addition order that a deployment would not pay for
-    * (an id-ordered fold that gathers a group's whole membership into
-    * one buffer); `exact` runs that fold so the DuckDB oracle matches bit
-    * for bit, `production` runs plain partial-aggregated sums. Both give
-    * the same rows at test scale (ModeParitySpec). Every other query has
-    * one plan and ignores the mode.
-    */
-  object Mode extends Enumeration { val exact, production = Value }
-
-  val ModeKey = "spark.graft.mode"
-
   def builder(cores: Int = Runtime.getRuntime.availableProcessors(),
-              local: Boolean = true,
-              mode: Mode.Value = Mode.exact): SparkSession.Builder = {
+              local: Boolean = true): SparkSession.Builder = {
     val b = SparkSession.builder()
       .config("spark.sql.extensions", classOf[graft.engine.GraftExtensions].getName)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      .config(ModeKey, mode.toString)
     if (local) b.master(s"local[$cores]").config("spark.sql.shuffle.partitions", cores)
     else b
   }
-
-  /** True when `spark` runs twin queries' production plans. Call sites
-    * that hold only a frame pass `df.sparkSession`.
-    */
-  def production(spark: SparkSession): Boolean =
-    spark.conf.get(ModeKey, Mode.exact.toString) == Mode.production.toString
 
   /** A "steady-state store" for an incremental query: a store directory
     * whose versions 0-1 are built once per (query, sf dir) in this JVM,
@@ -70,8 +52,8 @@ object GraftSession {
     * still gates the cold replay. The directories live under the
     * [[scratchDir]] root, deleted when the JVM exits.
     *
-    * One store serves every call for its (query, dir), in both modes, and
-    * each call rewrites its `v=2`. A frame read from the store must
+    * One store serves every call for its (query, dir), and each call
+    * rewrites its `v=2`. A frame read from the store must
     * therefore be consumed before the same query runs again on the same
     * dir, and concurrent calls for one (query, dir) are not supported.
     * Bench, Verify and the specs consume each result before the next call.

@@ -22,8 +22,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    shuffle read/write MB, spill MB and planning ms (analysis +
   *    optimization + physical planning of every action) of the min-wall
   *    rep, and the RDDs and storage the query left persisted. Job, stage
-  *    and task counts are the noise-free evidence: wall time on a shared
-  *    host swings far more;
+  *    and task counts are the steadier evidence: wall time on a shared
+  *    host swings far more. They are not always the same in every rep
+  *    (AQE may run an extra query-stage job), so each is shown as its
+  *    min-max over the reps when the reps disagree;
   *  - `stages` — the summary plus the min-wall rep's per-stage table,
   *    costliest first;
   *  - `action` — the formatted executed plan of the query's Nth action
@@ -31,9 +33,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *  - `explain` — the formatted plan of the query's returned frame,
   *    without running it.
   *
-  * Options: `--mode exact|production` (default exact, what Verify runs;
-  * Bench runs production — the two differ only for twin queries) and
-  * `--action N` (default 1). Cores come from SPARK_GRAFT_CPUS (default
+  * Option: `--action N` (default 1). Every query has one plan, the one
+  * Verify dumps and Bench times. Cores come from SPARK_GRAFT_CPUS (default
   * 4), as for Bench and Verify. `summary` and `stages` run Bench's
   * protocol ([[measure]]).
   *
@@ -61,14 +62,29 @@ object Profile {
     def spillMB: Double = mb(stages.map(_.spillB).sum)
   }
 
+  /** A count's min and max over a query's reps. */
+  final case class Span(min: Int, max: Int) {
+    override def toString: String = if (min == max) s"$min" else s"$min-$max"
+  }
+
+  private def span(counts: Seq[Int]): Span = Span(counts.min, counts.max)
+
   /** One query's reading: the min wall seconds over [[Reps]] runs and
     * that run's counters; or, when a run throws, NaN seconds, the
-    * failing run's counters and the failure. `rdds` and `storageMB` are
-    * what stayed persisted after the query's cache scope closed: a query
-    * that leaks shows here, and nothing sweeps it before the next one.
+    * failing run's counters and the failure. `reps` holds every run's
+    * counters; the spans are their job, stage and task counts' min and
+    * max. `rdds` and
+    * `storageMB` are what stayed persisted after the query's cache scope
+    * closed: a query that leaks shows here, and nothing sweeps it before
+    * the next one.
     */
   final case class Reading(name: String, secs: Double, counters: Counters,
-                           rdds: Int, storageMB: Double, failure: Option[Throwable])
+                           rdds: Int, storageMB: Double, failure: Option[Throwable],
+                           reps: Seq[Counters]) {
+    def jobSpan: Span = span(reps.map(_.jobs))
+    def stageSpan: Span = span(reps.map(_.stages.size))
+    def taskSpan: Span = span(reps.map(_.tasks))
+  }
 
   /** Collects the scheduler and planner events of one measured run.
     * Events reach listeners asynchronously; [[drain]] runs a marker job
@@ -157,7 +173,8 @@ object Profile {
     val sc = spark.sparkContext
     // block-manager storage in use: cached RDD blocks plus live broadcasts
     val storageMB = sc.getExecutorMemoryStatus.values.map { case (max, free) => max - free }.sum / 1e6
-    best.copy(rdds = sc.getPersistentRDDs.size, storageMB = storageMB)
+    best.copy(rdds = sc.getPersistentRDDs.size, storageMB = storageMB,
+      reps = runs.map(_.counters))
   }
 
   /** One run: the query's `count()` in a cache scope, read as its wall
@@ -172,34 +189,34 @@ object Profile {
       catch { case e: Throwable => Some(e) }
     val wall = (System.nanoTime() - t0) / 1e9
     rec.drain()
-    Reading(name, wall, rec.counters, rdds = 0, storageMB = 0.0, failure)
+    val c = rec.counters
+    Reading(name, wall, c, rdds = 0, storageMB = 0.0, failure, reps = Seq(c))
   }
 
   private final case class Opts(report: String, sfDir: String, queries: Seq[String],
-                                mode: GraftSession.Mode.Value, cores: Int, action: Int)
+                                cores: Int, action: Int)
 
   private def parse(args: Seq[String]): Opts = {
     val usage = "usage: graft.Profile summary|stages|action|explain <sfDir> " +
-      "[--mode exact|production] [--action N] [query ...]"
+      "[--action N] [query ...]"
     require(args.length >= 2 && Set("summary", "stages", "action", "explain")(args.head), usage)
     def go(rest: List[String], o: Opts): Opts = rest match {
-      case "--mode" :: v :: t => go(t, o.copy(mode = GraftSession.Mode.withName(v)))
       case "--action" :: v :: t => go(t, o.copy(action = v.toInt))
       case flag :: _ if flag.startsWith("--") => throw new IllegalArgumentException(usage)
       case q :: t => go(t, o.copy(queries = o.queries :+ q))
       case Nil => o
     }
-    go(args.drop(2).toList, Opts(args.head, args(1), Nil, GraftSession.Mode.exact,
+    go(args.drop(2).toList, Opts(args.head, args(1), Nil,
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, action = 1))
   }
 
   def main(args: Array[String]): Unit = {
     val o = parse(args.toSeq)
-    val spark = GraftSession.builder(cores = o.cores, mode = o.mode)
+    val spark = GraftSession.builder(cores = o.cores)
       .appName("graft-profile").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (o.queries.nonEmpty) o.queries else SparkEntry.queries.keys.toSeq.sorted
-    println(s"[profile] ${o.report} sf=${o.sfDir} mode=${o.mode} cores=${o.cores}")
+    println(s"[profile] ${o.report} sf=${o.sfDir} cores=${o.cores}")
     recording(spark) { rec =>
       names.foreach { n =>
         val fn = SparkEntry.queries.getOrElse(n,
@@ -234,8 +251,8 @@ object Profile {
     val c = r.counters
     val outcome = r.failure.fold(f"wall=${r.secs}%7.2f s")(e =>
       s"FAILED ${e.getClass.getName}: ${e.getMessage}")
-    f"[profile] ${r.name}%-28s $outcome jobs=${c.jobs}%4d stages=${c.stages.size}%4d " +
-      f"tasks=${c.tasks}%6d runMs=${c.runMs}%8d cpuMs=${c.cpuMs}%8d gcMs=${c.gcMs}%6d " +
+    f"[profile] ${r.name}%-28s $outcome jobs=${r.jobSpan}%4s stages=${r.stageSpan}%4s " +
+      f"tasks=${r.taskSpan}%6s runMs=${c.runMs}%8d cpuMs=${c.cpuMs}%8d gcMs=${c.gcMs}%6d " +
       f"shuffleReadMB=${c.readMB}%8.1f shuffleWriteMB=${c.writeMB}%8.1f " +
       f"spillMB=${c.spillMB}%7.1f planMs=${c.planMs}%6d rdds=${r.rdds}%3d storageMB=${r.storageMB}%8.1f"
   }

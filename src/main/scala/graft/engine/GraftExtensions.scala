@@ -168,15 +168,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         str(exprs(2)), str(exprs(3)), int(exprs(4)),
         candFactor = optInt(exprs, 5, 4))
     }
-    // sparse lexical near-dup, PRODUCTION float path (plain-sum;
-    // q120's ordered-fold twin exists only for its oracle) —
+    // sparse lexical near-dup (q120's exact-sum plan) —
     // `graft_sparse_sim('docs', 'doc_id', 'text'[, gramN, maxDf, minSim])`
     injectTable(e, "graft_sparse_sim", classOf[graft.llm.SparseSim.type]) { exprs =>
       graft.llm.SparseSim.idfCosineJoin(activeTable(exprs(0)),
         str(exprs(1)), str(exprs(2)),
         gramN = optInt(exprs, 3, 3), maxDf = optInt(exprs, 4, 100),
-        minSim = if (exprs.length > 5) foldedDouble(exprs(5)) else 0.5,
-        exactFold = false)
+        minSim = if (exprs.length > 5) foldedDouble(exprs(5)) else 0.5)
     }
     // tiered retrieval: truncated-prefix candidates + exact rerank —
     // `graft_matryoshka_topk('emb', 'queries', 'id', 'emb', k,

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.engine.expressions.DotProduct.dot
-import graft.ops.TopK
+import graft.ops.{ExactSum, TopK}
 
 /** Approximate-nearest-neighbor search over an embedding array column.
   *
@@ -245,9 +245,9 @@ object SimSearch {
 
   /** [[ivfTopK]] with LEARNED centroids and a FULL HASH ORACLE: id-order
     * seeding refined by `iters` deterministic spherical-Lloyd steps.
-    * Every arithmetic step is an ordered fold — assignment by the
-    * left-to-right dot product, per-bucket mean summed in vec_id order
-    * (sorted collect_list, not an unordered avg), then L2-renormalized —
+    * Every arithmetic step is exact across engines — assignment by the
+    * left-to-right dot product, per-bucket mean as exact scaled-integer
+    * sums ([[bucketMeans]]), then L2-renormalized —
     * so a SQL twin replays the exact double bits and the bucket
     * decisions can never diverge at float boundaries. Empty buckets
     * keep their previous centroid. [[ivfTopKKMeans]] (KMeans‖ init,
@@ -274,7 +274,7 @@ object SimSearch {
     * never starved of results by post-filtering an unfiltered top-K.
     *
     * The index is FILTER-AGNOSTIC: centroids are learned on the FULL
-    * corpus ([[ivfTopKLloyd]]'s ordered-fold Lloyd discipline), exactly
+    * corpus ([[ivfTopKLloyd]]'s exact-sum Lloyd discipline), exactly
     * as a prebuilt index would be shared across every filter. Bucket
     * assignment is per-row (a row's cell depends only on its own
     * embedding and the centroids), so filtering before assignment is
@@ -548,7 +548,7 @@ object SimSearch {
     var cents = seeds
     for (_ <- 0 until iters) {
       val assigned = nearestBuckets(c, cents, idCol, "__ne", 1)
-      val refined = bucketMeans(assigned, idCol)
+      val refined = bucketMeans(assigned)
       // Materialize each refined centroid set (nCentroids rows — tiny).
       // Unmaterialized, iteration i+1's assignment AND the final bucket
       // + probe stages each re-run every prior iteration's |corpus|
@@ -564,54 +564,41 @@ object SimSearch {
   }
 
   /** Per-bucket unit-normalized means of an assignment frame
-    * (id, __ne, bucket) → (cent_id, __new) with a DETERMINISTIC
-    * summation order: members sorted by id, element-wise left fold
-    * seeded from the first member (the same shape as DuckDB's
-    * list_reduce), divided by the exact integer count, renormalized to
-    * the unit sphere.
-    *
-    * The fold exists only so the oracle can replay the float-addition
-    * order: collect_list gathers a bucket's ENTIRE membership into one
-    * aggregation buffer — |corpus|/nCentroids vectors per group, with a
-    * sort on top, and only nCentroids groups carry all the work. In
-    * production mode (`GraftSession.production`, the pqTrainBooks twin
-    * discipline) the mean is per-component declarative sums instead:
-    * posexplode keys the partial aggregation on (bucket, component) —
-    * fixed-width state, map-side combine, nCentroids·dim groups instead
-    * of nCentroids — then the dim-bounded components reassemble into
-    * the mean array. Same arithmetic up to float re-ordering (~1e-16);
-    * ModeParitySpec pins every twin query through this path
-    * output-identical under both forms. Verify runs in exact mode, so
-    * the oracle keeps gating the fold.
+    * (id, __ne, bucket) → (cent_id, __new): per-component
+    * [[graft.ops.ExactSum]] sums divided by the exact integer count,
+    * renormalized to the unit sphere. posexplode keys the partial
+    * aggregation on (bucket, component) — fixed-width state, map-side
+    * combine, nCentroids·dim groups — and the dim-bounded components
+    * then reassemble into the mean array. The sums are exact integers,
+    * so the mean does not depend on row order or partitioning, and the
+    * oracle's per-component sums (`Vector.meanSql`) match bit for bit.
     */
-  private[graft] def bucketMeans(assigned: DataFrame, idCol: String): DataFrame =
-    if (graft.GraftSession.production(assigned.sparkSession))
-      assigned
-        .select(col("bucket"), posexplode(col("__ne")).as(Seq("__i", "__x")))
-        .groupBy(col("bucket"), col("__i"))
-        .agg(sum(col("__x")).as("__s"), count(lit(1)).as("__n"))
-        .groupBy(col("bucket"))
-        .agg(array_sort(collect_list(struct(col("__i"),
-          (col("__s") / col("__n")).as("__m")))).as("__ms"))
-        .select(col("bucket").as("cent_id"),
-          transform(col("__ms"), m => m.getField("__m")).as("__mean"))
-        .select(col("cent_id"),
-          transform(col("__mean"), x => x / sqrt(dot(col("__mean"), col("__mean"))))
-            .as("__new"))
-    else
-      assigned.groupBy(col("bucket"))
-        .agg(count(lit(1)).as("__cnt"),
-          array_sort(collect_list(struct(col(idCol).as("id"), col("__ne").as("ne"))))
-            .as("__ms"))
-        .select(col("bucket").as("cent_id"),
-          transform(
-            aggregate(expr("slice(__ms, 2, size(__ms) - 1)"),
-              element_at(col("__ms"), 1).getField("ne"),
-              (acc, m) => zip_with(acc, m.getField("ne"), (a, b) => a + b)),
-            x => x / col("__cnt")).as("__mean"))
-        .select(col("cent_id"),
-          transform(col("__mean"), x => x / sqrt(dot(col("__mean"), col("__mean"))))
-            .as("__new"))
+  private[graft] def bucketMeans(assigned: DataFrame): DataFrame =
+    assigned
+      .select(col("bucket"), posexplode(col("__ne")).as(Seq("__i", "__x")))
+      .groupBy(col("bucket"), col("__i"))
+      .agg((ExactSum(col("__x")) / count(lit(1))).as("__m"))
+      .groupBy(col("bucket"))
+      .agg(array_sort(collect_list(struct(col("__i"), col("__m")))).as("__ms"))
+      .select(col("bucket").as("cent_id"),
+        transform(col("__ms"), m => m.getField("__m")).as("__mean"))
+      .select(col("cent_id"),
+        transform(col("__mean"), x => x / sqrt(dot(col("__mean"), col("__mean"))))
+          .as("__new"))
+
+  /** Per-(m, code) means of the `dim`-long subvectors `sv` → (m, code,
+    * __new): one aggregation of `dim` [[graft.ops.ExactSum]] sums and
+    * the integer count (fixed-width state, map-side combine), each sum
+    * divided by the count, no renorm — PQ codewords are plain subspace
+    * means. The oracle's `Vector.meanSql` computes the same integers.
+    */
+  private def codeMeans(assigned: DataFrame, dim: Int): DataFrame =
+    assigned.groupBy(col("m"), col("code"))
+      .agg(count(lit(1)).as("__cnt"),
+        array((0 until dim).map(i => ExactSum.sumOf(element_at(col("sv"), i + 1))): _*)
+          .as("__sum"))
+      .select(col("m"), col("code"),
+        transform(col("__sum"), s => ExactSum.value(s) / col("__cnt")).as("__new"))
 
   /** [[ivfTopK]] with LEARNED centroids: a seeded MLlib KMeans fit
     * replaces the id-order seeding stand-in — the real centroid path at
@@ -746,7 +733,7 @@ object SimSearch {
   /** ORACLE-replayable BUILD of the build-once / probe-many serving
     * shape (r18 verdict item 4): same bucket-partitioned postings
     * layout as [[buildIvfIndex]] (probes prune to `nProbe` posting
-    * directories), but with [[ivfTopKLloyd]]'s ordered-fold Lloyd
+    * directories), but with [[ivfTopKLloyd]]'s exact-sum Lloyd
     * centroids instead of KMeans‖ — so a [[queryIvfIndex]] probe over
     * the PERSISTED index is bit-identical to the in-memory
     * [[ivfTopKLloyd]] answer and a SQL twin can hash-gate both halves
@@ -769,7 +756,7 @@ object SimSearch {
   /** Product-quantization ANN (the FAISS-PQ shape, dot-product variant):
     * each unit vector splits into `nSub` subvectors; per subspace a
     * `nCodes`-entry codebook is learned (id-order seeds + `iters`
-    * deterministic Lloyd steps, every sum an ordered fold — the same
+    * deterministic Lloyd steps, every mean an exact scaled-integer sum — the same
     * oracle discipline as [[ivfTopKLloyd]]); the corpus is ENCODED as
     * `nSub` small code ids per vector. Search is an asymmetric-distance
     * scan: per query, dot each subvector against every codeword (a
@@ -906,7 +893,8 @@ object SimSearch {
 
   /** PQ codebook training: id-order seeds (subvectors of the nCodes
     * lowest ids, code = seed id) refined by `iters` subspace Lloyd
-    * passes — the [[pqTopK]] discipline factored out so the streaming
+    * passes of exact per-(m, code) means ([[codeMeans]]) — the
+    * [[pqTopK]] discipline factored out so the streaming
     * store ([[graft.streaming.IncrementalPq]]) retrains with the exact
     * batch semantics. `c` is the unitized (id, __ne) corpus, `subs` its
     * [[pqSubSplit]] (cached by the caller — read once per pass).
@@ -941,39 +929,8 @@ object SimSearch {
       seedRows,
       "code", "__ne", nSub, subDim).withColumnRenamed("sv", "ce")
     for (_ <- 0 until iters) {
-      // per-(m, code) mean in id order (ordered fold, exact count
-      // division, NO renorm — PQ codewords are plain subspace means);
-      // empty codes keep their previous codeword.
-      //
-      // The fold exists only so an external oracle can replay the
-      // float-addition order bit for bit: collect_list gathers a code's
-      // ENTIRE membership into one array per group — at production
-      // corpus sizes that is |corpus|/nCodes vectors in one aggregation
-      // buffer, with a sort on top, where a plain sum needs fixed-width
-      // state and map-side partial combine. In production mode (the
-      // q120/q226 twin discipline) the mean is computed as declarative
-      // per-component sums instead — same arithmetic up to float
-      // re-ordering (~1e-16), and ModeParitySpec pins that every twin's
-      // output is identical under both paths at test scale. Verify runs
-      // in exact mode, so the oracle keeps gating the fold.
-      val refined =
-        if (graft.GraftSession.production(c.sparkSession))
-          pqNearestCode(subs, books, idCol).groupBy(col("m"), col("code"))
-            .agg(count(lit(1)).as("__cnt"),
-              array((0 until subDim).map(i =>
-                sum(element_at(col("sv"), i + 1))): _*).as("__sum"))
-            .select(col("m"), col("code"),
-              transform(col("__sum"), x => x / col("__cnt")).as("__new"))
-        else
-          pqNearestCode(subs, books, idCol).groupBy(col("m"), col("code"))
-            .agg(count(lit(1)).as("__cnt"),
-              array_sort(collect_list(struct(col(idCol).as("id"), col("sv")))).as("__ms"))
-            .select(col("m"), col("code"),
-              transform(
-                aggregate(expr("slice(__ms, 2, size(__ms) - 1)"),
-                  element_at(col("__ms"), 1).getField("sv"),
-                  (acc, v) => zip_with(acc, v.getField("sv"), (a, b) => a + b)),
-                x => x / col("__cnt")).as("__new"))
+      // per-(m, code) exact mean; empty codes keep their previous codeword
+      val refined = codeMeans(pqNearestCode(subs, books, idCol), subDim)
       // Materialize each refined codebook (nSub·nCodes rows — tiny).
       // Unmaterialized, the codebook's lineage re-runs EVERY prior
       // iteration's |corpus|·nSub assignment join each time it is read —
@@ -1068,7 +1025,7 @@ object SimSearch {
     * per vector (the full-precision corpus is touched only at
     * build), and a query batch SCANS only `nProbe`/`nCent` of those
     * codes — IVF bounds what is read, PQ bounds the bytes per row
-    * read. Every arithmetic step keeps the ordered-fold oracle
+    * read. Every arithmetic step keeps the exact-sum oracle
     * discipline of [[ivfTopKLloyd]]/[[pqTopK]], so the q159 DuckDB
     * twin replays the exact double bits.
     *
@@ -1120,32 +1077,8 @@ object SimSearch {
     def nearestCodeL2(points: DataFrame, id: String): DataFrame =
       assignNearestCode(points, books, id, l2 = true)
     for (_ <- 0 until pIters) {
-      // Per-(m, code) mean in id order (ordered fold, exact count
-      // division, no renorm); empty codes keep their codeword. In
-      // production mode the mean is declarative per-component sums
-      // instead — the pqTrainBooks twin (fixed-width state, map-side
-      // combine; the fold gathers a code's whole membership into one
-      // buffer). ModeParitySpec pins q159 output-identical under both
-      // forms; Verify runs in exact mode, so the oracle keeps gating
-      // the fold.
-      val refined =
-        if (graft.GraftSession.production(corpus.sparkSession))
-          nearestCodeL2(rsubs, idCol).groupBy(col("m"), col("code"))
-            .agg(count(lit(1)).as("__cnt"),
-              array((0 until subDim).map(i =>
-                sum(element_at(col("sv"), i + 1))): _*).as("__sum"))
-            .select(col("m"), col("code"),
-              transform(col("__sum"), x => x / col("__cnt")).as("__new"))
-        else
-          nearestCodeL2(rsubs, idCol).groupBy(col("m"), col("code"))
-            .agg(count(lit(1)).as("__cnt"),
-              array_sort(collect_list(struct(col(idCol).as("id"), col("sv")))).as("__ms"))
-            .select(col("m"), col("code"),
-              transform(
-                aggregate(expr("slice(__ms, 2, size(__ms) - 1)"),
-                  element_at(col("__ms"), 1).getField("sv"),
-                  (acc, v) => zip_with(acc, v.getField("sv"), (a, b) => a + b)),
-                x => x / col("__cnt")).as("__new"))
+      // per-(m, code) exact mean; empty codes keep their codeword
+      val refined = codeMeans(nearestCodeL2(rsubs, idCol), subDim)
       val next = books.join(refined, Seq("m", "code"), "left")
         .select(col("m"), col("code"), coalesce(col("__new"), col("ce")).as("ce"))
         .cache()

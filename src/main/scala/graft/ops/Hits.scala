@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * keeps the oracle arithmetic plain SQL, and since normalization is
   * only a shared scale factor the RANKING is identical.
   *
-  * Exact path, per half-step: the raw scores are checkpointed eagerly
-  * and the same pass observes their total and row count
+  * Per half-step, the raw scores are checkpointed eagerly and the same
+  * pass observes their total and row count
   * ([[Checkpoints.TruncateOps.truncatedObserving]]). The total divides
   * the raw scores as a plan literal. The row count sizes the NEXT
   * half-step's join: when rows × Spark's per-row size estimate fit
@@ -79,22 +79,12 @@ object Hits {
     }
   }
 
-  /** @param exactRounding true (the oracle-parity contract above):
-    *        normalize + round(10) after EVERY half-update — each
-    *        normalization is a global reduction, so the run pays
-    *        2·iters sequential checkpoint passes. false (production): HITS
-    *        is scale-invariant, so run the raw join+agg chain without
-    *        per-step totals and normalize each side once at the end — same
-    *        ranking, floats differ below the rounding grid (the q120
-    *        fold-vs-plain-sum pattern; spec-pinned agreement). Raw
-    *        magnitudes drift by ~(mean weighted degree)^iters between
-    *        the end-point normalizations — far inside double range for
-    *        real graphs, but don't feed 1e30-scale weights at high
-    *        iters without normalizing.
+  /** Normalize + round(10) after EVERY half-update (the oracle-parity
+    * contract above); each normalization is one eager pass that also
+    * sizes the next half-step's join.
     */
   def bipartite(edges: DataFrame, hubCol: String, authCol: String,
-                weightCol: String, iters: Int,
-                exactRounding: Boolean = true): DataFrame = {
+                weightCol: String, iters: Int): DataFrame = {
     require(iters >= 1, s"iters must be at least 1, got $iters")
     // Eager, so the caller's edge lineage (for q226: the
     // lineitem⋈orders groupBy) runs once; every later read is of these
@@ -118,28 +108,13 @@ object Hits {
        Some(m("__n").asInstanceOf[Long]))
     }
     for (_ <- 1 to iters) {
-      val aRaw = e.half(h, hRows, "__c", "__s")
-      // Production path checkpoints only the h-half: a is referenced
-      // exactly once (by the next h update), so an inline a costs one
-      // extra join re-evaluation ONLY for the final output's a side,
-      // while halving the per-iteration (node, score) materializations
-      // — at cluster scale, half the barriers.
-      val (aNext, aRows) =
-        if (exactRounding) normalized(aRaw)
-        else (aRaw.select(col("node"), col("__raw").as("score")), None)
+      val (aNext, aRows) = normalized(e.half(h, hRows, "__c", "__s"))
       a = aNext
-      val hRaw = e.half(a, aRows, "__s", "__c")
-      val (hNext, hNextRows) =
-        if (exactRounding) normalized(hRaw)
-        else (hRaw.truncated.select(col("node"), col("__raw").as("score")), None)
+      val (hNext, hNextRows) = normalized(e.half(a, aRows, "__s", "__c"))
       h = hNext
       hRows = hNextRows
     }
-    val (hOut, aOut) =
-      if (exactRounding) (h, a)
-      else (normalized(h.select(col("node"), col("score").as("__raw")))._1,
-            normalized(a.select(col("node"), col("score").as("__raw")))._1)
-    hOut.select(lit("hub").as("kind"), col("node"), col("score"))
-      .unionByName(aOut.select(lit("auth").as("kind"), col("node"), col("score")))
+    h.select(lit("hub").as("kind"), col("node"), col("score"))
+      .unionByName(a.select(lit("auth").as("kind"), col("node"), col("score")))
   }
 }

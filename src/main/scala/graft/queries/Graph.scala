@@ -370,14 +370,10 @@ object Graph {
           .join(T(spark, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("s"))
           .agg(count(lit(1)).as("w"))
-        // gate runs the per-half-step rounding contract the oracle
-        // replays; bench measures the production single-normalization
-        // path (same ranking, floats pinned by spec — the q120 pattern)
-        graft.ops.Hits.bipartite(e, "c", "s", "w", iters = HitsIters,
-            exactRounding = !graft.GraftSession.production(spark))
+        graft.ops.Hits.bipartite(e, "c", "s", "w", iters = HitsIters)
           .select(col("kind"), col("node").cast("long").as("node"),
             round(col("score"), 6).as("score"))
-      }, twin = true),
+      }),
 
     // Label-propagation communities (ops.LabelProp — synchronous
     // deterministic LPA, min-label tie-break) over the part

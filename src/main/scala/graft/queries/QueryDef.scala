@@ -14,12 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final case class QueryDef(
     name: String,
     oracle: Option[String],
-    fn: (SparkSession, String) => DataFrame,
-    // reads `GraftSession.production`, directly or through an op it
-    // calls (e.g. `SimSearch.bucketMeans`), to pick between the
-    // oracle-exact plan and a production plan with the same rows
-    // (ModeParitySpec)
-    twin: Boolean = false)
+    fn: (SparkSession, String) => DataFrame)
 
 object T {
   /** Load one driver test table from an sf dir. */

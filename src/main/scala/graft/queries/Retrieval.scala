@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.llm.TextOps
+import graft.ops.ExactSum
 
 /** Retrieval-index construction and distributional statistics over the
   * documents table: a segment-sharded inverted index and token
@@ -213,9 +214,9 @@ object Retrieval {
     // through shared grams (inverted-posting join), so the pair space is
     // Σ_g df(g)², bounded by the SimMaxDf cap — the same
     // rare-feature-blocking idea as MinHash banding, but with an exact
-    // cosine on the surviving pairs. Every float reduction is an
-    // ordered fold (by gram), so both engines sum in the identical
-    // sequence and the hash oracle is exact.
+    // cosine on the surviving pairs. Both float reductions are
+    // ExactSum scaled-integer sums, partial-aggregated and independent
+    // of summation order, so the hash oracle is exact.
     QueryDef("q120_sparse_sim_join", Some(s"""
       WITH tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
       sh AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(t) - 1),
@@ -226,13 +227,12 @@ object Retrieval {
       n AS (SELECT count(*) AS n_docs FROM documents),
       w AS (SELECT doc_id, g, tf * ln(CAST(n_docs AS DOUBLE) / df) AS w
             FROM tf JOIN df USING (g) CROSS JOIN n WHERE df <= $SimMaxDf),
-      nrm AS (SELECT doc_id,
-                     sqrt(list_reduce(list(w * w ORDER BY g), (x, y) -> x + y)) AS nrm
+      nrm AS (SELECT doc_id, sqrt(${ExactSum.sql("w * w")}) AS nrm
               FROM w GROUP BY doc_id),
       pp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.g, a.w * b.w AS p
              FROM w a JOIN w b ON a.g = b.g AND a.doc_id < b.doc_id),
       dots AS (SELECT doc_a, doc_b, CAST(count(*) AS INTEGER) AS n_shared,
-                      list_reduce(list(p ORDER BY g), (x, y) -> x + y) AS dot
+                      ${ExactSum.sql("p")} AS dot
                FROM pp GROUP BY doc_a, doc_b)
       SELECT doc_a, doc_b, n_shared,
              round(dot / (na.nrm * nb.nrm), 6) AS sim
@@ -240,17 +240,8 @@ object Retrieval {
                 JOIN nrm nb ON doc_b = nb.doc_id
       WHERE dot / (na.nrm * nb.nrm) >= $SimMinSim"""),
       (spark, dir) =>
-        // exactFold pays the ordered-fold oracle tax deliberately: this
-        // gated query must hash-match DuckDB's list_reduce bit for bit.
-        // Production mode runs the plain-sum fast path
-        // (SparseSim.idfCosineJoin(exactFold = false) — same pair set,
-        // partial-aggregated; `graft.Profile --mode` measures the gap),
-        // so Bench times the production plan instead of the gate-only
-        // fold; Verify runs in exact mode and the oracle still gates the
-        // exact fold.
         graft.llm.SparseSim.idfCosineJoin(T(spark, dir, "documents"),
-          "doc_id", "text", SimGramN, SimMaxDf, SimMinSim,
-          exactFold = !graft.GraftSession.production(spark)), twin = true),
+          "doc_id", "text", SimGramN, SimMaxDf, SimMinSim)),
 
     // Tokenizer training: learn BPE merge rules from the corpus word
     // counts — ONE corpus pass for the frequency table, then every

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.engine.{functions => F}
 import graft.llm.{DedupOps, SimSearch, TextOps}
+import graft.ops.ExactSum
 
 /** Embedding similarity search + MinHash-LSH near-dedup over the
   * embeddings/documents tables. Cosine is accumulated in double on both
@@ -73,16 +74,24 @@ object Vector {
       SELECT query_id, step, vec_id, round(score, 6) AS score FROM cum$k"""
   }
 
-  /** SQL twin of `SimSearch.ivfTopKLloyd`: id-order seed centroids,
-    * `iters` unrolled spherical-Lloyd refinements (assignment by the
-    * left-to-right dot, per-bucket mean as an id-ordered `list_reduce`
-    * fold — the same fold shape Spark's sorted-aggregate uses — divided
-    * by the integer count and L2-renormalized, empty buckets keeping
-    * the previous centroid), then the bucket/probe/top-K pipeline.
+  /** Per-`keys` component means of the list column `vec` over `src`, as
+    * the list `mn`: each component is an exact scaled-integer sum
+    * ([[ExactSum]]) divided by the integer count — the SQL side of
+    * `SimSearch.bucketMeans` and the PQ codebook means. The two zipped
+    * `unnest`s are Spark's `posexplode`.
     */
+  private def meanSql(src: String, keys: String, vec: String): String =
+    s"""SELECT $keys, list(mj ORDER BY j) AS mn FROM (
+          SELECT $keys, j, ${ExactSum.sql("x")} / count(*) AS mj
+          FROM (SELECT $keys, unnest(range(1, len($vec) + 1)) AS j, unnest($vec) AS x FROM $src)
+          GROUP BY $keys, j)
+        GROUP BY $keys"""
+
   /** CTE chain `cents0 … cents$iters` — id-order seeds + `iters`
-    * spherical-Lloyd refinements over `un` (the q43 discipline), shared
-    * by [[ivfLloydSql]] and [[ivfPqSql]].
+    * spherical-Lloyd refinements over `un` (the q43 discipline: assignment
+    * by the left-to-right dot, per-bucket [[meanSql]] L2-renormalized,
+    * empty buckets keeping the previous centroid), shared by
+    * [[ivfLloydSql]] and [[ivfPqSql]].
     */
   private def lloydCentCtes(nCent: Int, iters: Int): String = {
     val lloyd = (1 to iters).map { i =>
@@ -94,24 +103,21 @@ object Vector {
         SELECT vec_id, ne, cent_id AS bucket
         FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cent_id) AS rn FROM assign$i)
         WHERE rn = 1),
-      mem$i AS (
-        SELECT bucket, list(ne ORDER BY vec_id) AS ms, count(*) AS cnt FROM b$i GROUP BY bucket),
-      mean$i AS (
-        SELECT bucket, list_transform(
-                 list_reduce(ms, (a, b) -> list_transform(range(1, len(a) + 1), j -> a[j] + b[j])),
-                 x -> x / cnt) AS m
-        FROM mem$i),
+      mean$i AS (${meanSql(s"b$i", "bucket", "ne")}),
       cents$i AS (
         SELECT c.cent_id,
-               CASE WHEN n.m IS NULL THEN c.ce
-                    ELSE list_transform(n.m, x -> x / sqrt(${dotSql("n.m", "n.m")})) END AS ce
+               CASE WHEN n.mn IS NULL THEN c.ce
+                    ELSE list_transform(n.mn, x -> x / sqrt(${dotSql("n.mn", "n.mn")})) END AS ce
         FROM cents${i - 1} c LEFT JOIN mean$i n ON c.cent_id = n.bucket)"""
     }.mkString(",")
     s"""cents0 AS (SELECT vec_id AS cent_id, ne AS ce FROM un ORDER BY vec_id LIMIT $nCent),
       ${lloyd.stripPrefix("\n")}"""
   }
 
-  /** @param filterSql optional corpus predicate over `embeddings e`
+  /** SQL twin of `SimSearch.ivfTopKLloyd`: [[lloydCentCtes]] centroids,
+    * then the bucket/probe/top-K pipeline.
+    *
+    * @param filterSql optional corpus predicate over `embeddings e`
     *        (e.g. "e.label = 1"): centroids stay full-corpus (the
     *        filter-agnostic index), only the bucketed side is filtered —
     *        mirrors `SimSearch.filteredIvfTopK` exactly.
@@ -150,8 +156,8 @@ object Vector {
 
   /** SQL twin of `SimSearch.pqTopK`: subvector rows via slicing, id-order
     * codebook seeds, `iters` unrolled Lloyd refinements per (m, code)
-    * with id-ordered folds, encode, then the ADC scan — per-(query,
-    * vector) score as the m-ordered sum of codeword partials.
+    * with exact-sum means ([[meanSql]]), encode, then the ADC scan —
+    * per-(query, vector) score as the m-ordered sum of codeword partials.
     */
   private def pqSql(dim: Int, nSub: Int, nCodes: Int, k: Int, iters: Int): String =
     s"""
@@ -175,13 +181,7 @@ object Vector {
         SELECT vec_id, m, sv, code
         FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY s DESC, code) AS rn FROM passign$i)
         WHERE rn = 1),
-      pmem$i AS (
-        SELECT m, code, list(sv ORDER BY vec_id) AS ms, count(*) AS cnt FROM pa$i GROUP BY m, code),
-      pmean$i AS (
-        SELECT m, code, list_transform(
-                 list_reduce(ms, (a, b) -> list_transform(range(1, len(a) + 1), j -> a[j] + b[j])),
-                 x -> x / cnt) AS mn
-        FROM pmem$i),
+      pmean$i AS (${meanSql(s"pa$i", "m, code", "sv")}),
       books$i AS (
         SELECT c.m, c.code, coalesce(n.mn, c.ce) AS ce
         FROM books${i - 1} c LEFT JOIN pmean$i n ON c.m = n.m AND c.code = n.code)"""
@@ -262,13 +262,7 @@ object Vector {
         SELECT vec_id, m, sv, code
         FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, m ORDER BY d ASC, code) AS rn FROM rpassign$i)
         WHERE rn = 1),
-      rpmem$i AS (
-        SELECT m, code, list(sv ORDER BY vec_id) AS ms, count(*) AS cnt FROM rpa$i GROUP BY m, code),
-      rpmean$i AS (
-        SELECT m, code, list_transform(
-                 list_reduce(ms, (a, b) -> list_transform(range(1, len(a) + 1), j -> a[j] + b[j])),
-                 x -> x / cnt) AS mn
-        FROM rpmem$i),
+      rpmean$i AS (${meanSql(s"rpa$i", "m, code", "sv")}),
       rbooks$i AS (
         SELECT c.m, c.code, coalesce(n.mn, c.ce) AS ce
         FROM rbooks${i - 1} c LEFT JOIN rpmean$i n ON c.m = n.m AND c.code = n.code)"""
@@ -612,7 +606,7 @@ object Vector {
             emb.filter(col("vec_id") % 50 === 0),
             "vec_id", "embedding", 10, nCentroids = 16, nProbe = 4, iters = 2)
           .select("query_id", "vec_id", "cos_sim", "rnk")
-      }, twin = true),
+      }),
 
     // JL-compressed brute force + exact rerank: candidates ranked by the
     // 16-dim projected dot (outDim/dim of the arithmetic and broadcast
@@ -764,9 +758,9 @@ object Vector {
 
     // IVF-bucketed approximate ANN with LEARNED centroids: id-order
     // seeding refined by 2 deterministic spherical-Lloyd iterations
-    // (every sum an ordered fold, so the SQL twin replays the exact
-    // double bits — same trick as the literal LSH sign matrix), corpus
-    // bucketed by nearest centroid, queries probe their 4 nearest
+    // (every mean an exact scaled-integer sum, so the SQL twin replays
+    // the exact double bits — same trick as the literal LSH sign
+    // matrix), corpus bucketed by nearest centroid, queries probe their 4 nearest
     // buckets. MLlib-KMeans centroids (ivfTopKKMeans) remain the scale
     // path — KMeans‖ init is not SQL-expressible, so that variant is
     // spec-covered (recall + persisted-index equivalence) instead.
@@ -776,7 +770,7 @@ object Vector {
         SimSearch.ivfTopKLloyd(emb, emb.filter(col("vec_id") % 50 === 0),
             "vec_id", "embedding", 10, nCentroids = 16, nProbe = 4, iters = 2)
           .select("query_id", "vec_id", "cos_sim", "rnk")
-      }, twin = true),
+      }),
 
     // BUILD-once half of the IVF serving pair (r18 verdict item 4):
     // train q43's Lloyd centroids ONCE, assign the corpus, persist both
@@ -805,7 +799,7 @@ object Vector {
           .agg(count(lit(1)).as("n_vectors"),
             sum(col("vec_id")).as("id_sum"))
           .orderBy("bucket")
-      }, twin = true),
+      }),
 
     // PROBE-only half: read the q313 index back from parquet and answer
     // the q43 query batch against it — no centroid training, no corpus
@@ -821,7 +815,7 @@ object Vector {
             "vec_id", "embedding", p, 10, nProbe = 4)
           .select(col("query_id"), col("vec_id"), col("cos_sim"),
             col("rnk").cast("int").as("rnk"))
-      }, twin = true),
+      }),
 
     // PRODUCTION-SIZE codebook assignment, hash-oracled: the flat
     // literal-codebook `NearestCentroid` path is exercised by the q43
@@ -874,26 +868,26 @@ object Vector {
             "vec_id", "embedding", col("label") === 1, 10,
             nCentroids = 16, nProbe = 4, iters = 2)
           .select("query_id", "vec_id", "cos_sim", "rnk")
-      }, twin = true),
+      }),
 
     // Product-quantization ANN: per-subspace learned codebooks (id-order
-    // seeds + 1 ordered-fold Lloyd step), corpus encoded as 8 code ids
+    // seeds + 1 exact-sum Lloyd step), corpus encoded as 8 code ids
     // per vector (the 100 TB storage shape: 512 B of doubles → 8 code
     // bytes), asymmetric-distance scan against the broadcast query
-    // lookup table. Full hash oracle — every sum is an ordered fold.
+    // lookup table. Full hash oracle — every mean is an exact sum.
     QueryDef("q101_pq_ann", Some(pqSql(dim = 64, nSub = 8, nCodes = 16, k = 10, iters = 1)),
       (spark, dir) => {
         val emb = T(spark, dir, "embeddings")
         SimSearch.pqTopK(emb, emb.filter(col("vec_id") % 50 === 0),
             "vec_id", "embedding", 10, dim = 64, nSub = 8, nCodes = 16, iters = 1)
           .select("query_id", "vec_id", "adc_sim", "rnk")
-      }, twin = true),
+      }),
 
     // IVF×PQ composition — the billion-scale ANN layout: coarse Lloyd
     // cells + product-quantized RESIDUAL codes, probed ADC scan over
     // codes only. Storage is cell id + 8 code bytes per vector; a query
     // reads 2/8 of the cells. Full hash oracle: every stage keeps the
-    // q43/q101 ordered-fold discipline (argmin-L2 codewords, dist asc /
+    // q43/q101 exact-sum discipline (argmin-L2 codewords, dist asc /
     // code asc; score = centroid dot + m-ordered partial sum).
     QueryDef("q159_ivfpq_ann",
       Some(ivfPqSql(dim = 64, nSub = 8, nCodes = 16, k = 10, nCent = 8,
@@ -904,7 +898,7 @@ object Vector {
             "vec_id", "embedding", 10, dim = 64, nCent = 8, nProbe = 2,
             cIters = 1, nSub = 8, nCodes = 16, pIters = 1)
           .select("query_id", "vec_id", "adc_sim", "rnk")
-      }, twin = true),
+      }),
 
     // Two-stage PQ retrieval: compressed ADC scan proposes k·4
     // candidates, exact dot rescore picks the final top-10 — PQ's
@@ -918,7 +912,7 @@ object Vector {
             "vec_id", "embedding", 10, dim = 64, nSub = 8, nCodes = 16,
             iters = 1, rerankFactor = 4)
           .select("query_id", "vec_id", "cos_sim", "rnk")
-      }, twin = true),
+      }),
 
     // Scalar-quantization (SQ8) ANN: per-vector int8 codes + (minv,
     // step) — the 8×-smaller persistable scan (1 byte/dim vs 8), far
@@ -1532,7 +1526,7 @@ object Vector {
 
     // Embedding class-separation report — the retrieval-embedding QA
     // check before an index is trusted: per label, the spherical
-    // centroid (id-ordered fold mean, renormalized — the q43 Lloyd
+    // centroid (exact-sum mean, renormalized — the q43 Lloyd
     // discipline), then each vector's cosine to its OWN centroid vs its
     // best OTHER centroid. mean margin ≈ a centroid silhouette;
     // frac_correct is nearest-centroid classification accuracy. Labels
@@ -1541,14 +1535,9 @@ object Vector {
     QueryDef("q186_class_separation", Some(s"""
       WITH $unitSql,
       lb AS (SELECT u.vec_id, u.ne, e.label FROM un u JOIN embeddings e USING (vec_id)),
-      mem AS (SELECT label, list(ne ORDER BY vec_id) AS ms, count(*) AS cnt
-              FROM lb GROUP BY label),
-      meanv AS (SELECT label, list_transform(
-                  list_reduce(ms, (a, b) -> list_transform(range(1, len(a) + 1), j -> a[j] + b[j])),
-                  x -> x / cnt) AS m
-                FROM mem),
+      meanv AS (${meanSql("lb", "label", "ne")}),
       cent AS (SELECT label AS clabel,
-                      list_transform(m, x -> x / sqrt(${dotSql("m", "m")})) AS ce
+                      list_transform(mn, x -> x / sqrt(${dotSql("mn", "mn")})) AS ce
                FROM meanv),
       sc AS (SELECT l.vec_id, l.label, c.clabel, ${dotSql("l.ne", "c.ce")} AS s
              FROM lb l CROSS JOIN cent c),
@@ -1558,10 +1547,8 @@ object Vector {
                      o.s_own - t.s_oth AS margin, o.s_own > t.s_oth AS correct
               FROM own o JOIN oth t USING (vec_id))
       SELECT label, CAST(count(*) AS BIGINT) AS n_vecs,
-             round(list_reduce(list_prepend(0.0, list(s_own ORDER BY vec_id)),
-                     (a, v) -> a + v) / count(*), 6) AS mean_own,
-             round(list_reduce(list_prepend(0.0, list(margin ORDER BY vec_id)),
-                     (a, v) -> a + v) / count(*), 6) AS mean_margin,
+             round(${ExactSum.sql("s_own")} / count(*), 6) AS mean_own,
+             round(${ExactSum.sql("margin")} / count(*), 6) AS mean_margin,
              round(CAST(sum(CASE WHEN correct THEN 1 ELSE 0 END) AS DOUBLE)
                    / count(*), 6) AS frac_correct
       FROM per GROUP BY label"""),
@@ -1570,8 +1557,7 @@ object Vector {
         val emb = T(spark, dir, "embeddings")
         val u = SimSearch.unitized(emb, "vec_id", "embedding", "vec_id", "__ne")
         val lb = u.join(emb.select(col("vec_id"), col("label")), "vec_id")
-        val cents = SimSearch.bucketMeans(
-          lb.withColumnRenamed("label", "bucket"), "vec_id")
+        val cents = SimSearch.bucketMeans(lb.withColumnRenamed("label", "bucket"))
         val sc = lb.crossJoin(broadcast(cents))
           .select(col("vec_id"), col("label"), col("cent_id").as("clabel"),
             DotProduct.dot(col("__ne"), col("__new")).as("s"))
@@ -1582,22 +1568,16 @@ object Vector {
         val per = own.join(oth, "vec_id")
           .withColumn("margin", col("s_own") - col("s_oth"))
           .withColumn("correct", col("s_own") > col("s_oth"))
-        def fold(src: String) =
-          aggregate(col(s"__$src"), lit(0.0), (a, x) => a + x.getField("v"))
-        per.select(col("label"),
-            struct(col("vec_id"), col("s_own").as("v")).as("eo"),
-            struct(col("vec_id"), col("margin").as("v")).as("em"),
-            col("correct"))
-          .groupBy("label")
+        per.groupBy("label")
           .agg(count(lit(1)).as("n_vecs"),
-            array_sort(collect_list(col("eo"))).as("__own"),
-            array_sort(collect_list(col("em"))).as("__mar"),
+            ExactSum(col("s_own")).as("__own"),
+            ExactSum(col("margin")).as("__mar"),
             sum(when(col("correct"), 1L).otherwise(0L)).as("__nc"))
           .select(col("label"), col("n_vecs"),
-            round(fold("own") / col("n_vecs"), 6).as("mean_own"),
-            round(fold("mar") / col("n_vecs"), 6).as("mean_margin"),
+            round(col("__own") / col("n_vecs"), 6).as("mean_own"),
+            round(col("__mar") / col("n_vecs"), 6).as("mean_margin"),
             round(col("__nc").cast("double") / col("n_vecs"), 6).as("frac_correct"))
-      }, twin = true),
+      }),
 
     // Dedup impact report — what the near-dup pass actually buys,
     // stated per cluster size: how many clusters of each size exist,
@@ -1870,17 +1850,12 @@ object Vector {
     DedupOps.lshCandidates(shingled, "doc_id", "sh", bands = 4, rowsPerBand = 2)
   }
 
-  /** The centroid-mean form is mode-dependent since the bucketMeans
-    * production twin (plain sums in production mode, the oracle's
-    * ordered fold otherwise — ~1e-16 float drift between them), so the
-    * marker carries the mode: a production-built index never serves an
-    * oracle probe across a mode switch, and vice versa. Bump the version
+  /** The `_built` marker of the q313/q314 index. Bump the version
     * whenever the build semantics change — a stale marker must never
-    * serve an old layout.
+    * serve an old layout. v2: centroid means are exact scaled-integer
+    * sums.
     */
-  private def ivfIndexVersion(spark: org.apache.spark.sql.SparkSession): String =
-    if (graft.GraftSession.production(spark)) "v1-lloyd16x2-prod"
-    else "v1-lloyd16x2"
+  private val IvfIndexVersion = "v2-lloyd16x2-exactsum"
 
   /** Where the q313/q314 pair persists the IVF index for `dir`: one
     * index per source dataset, under the JVM's scratch root, so q313 then
@@ -1900,7 +1875,7 @@ object Vector {
     SimSearch.buildIvfIndexLloyd(T(spark, dir, "embeddings"),
       "vec_id", "embedding", p, nCentroids = 16, iters = 2)
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(p, "_built"), ivfIndexVersion(spark))
+      java.nio.file.Paths.get(p, "_built"), IvfIndexVersion)
     p
   }
 
@@ -1913,7 +1888,7 @@ object Vector {
     val p = ivfIndexPath(dir)
     val marker = java.nio.file.Paths.get(p, "_built")
     if (!java.nio.file.Files.exists(marker)
-        || java.nio.file.Files.readString(marker) != ivfIndexVersion(spark))
+        || java.nio.file.Files.readString(marker) != IvfIndexVersion)
       buildIvfIndexFiles(spark, dir)
     else p
   }

@@ -231,7 +231,7 @@ object IncrementalIvf {
       else sources.map(spark.read.parquet(_)).reduce(_ unionByName _))
       .select(col(idCol), col("__ne"),
         col("bucket").cast("long").as("bucket")).cache()
-    val seeds = SimSearch.bucketMeans(c, idCol)
+    val seeds = SimSearch.bucketMeans(c)
       .select(col("cent_id"), col("__new").as("cent_emb"))
     val cents = SimSearch.lloydIterate(c.select(col(idCol), col("__ne")),
       seeds, idCol, iters)

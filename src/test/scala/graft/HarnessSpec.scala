@@ -22,6 +22,10 @@ class HarnessSpec extends SparkSuite {
     assert(sources.size > 100, "expected to scan the repository's src/ tree")
     assert(containing(sources, "SparkSession" + ".builder()") == Seq("GraftSession.scala"))
     assert(containing(sources, "graft.bench" + ".production").isEmpty)
+    // one plan per query: no plan-mode conf and no exact/production fork
+    for (fork <- Seq("spark.graft" + ".mode", "GraftSession" + ".production",
+        "exact" + "Rounding", "exact" + "Fold"))
+      assert(containing(sources, fork).isEmpty, fork)
   }
 
   test("one scratch root and one listener: no other temp directory, no second SparkListener") {

@@ -72,8 +72,6 @@ class RulesSpec extends SparkSuite {
     assert(spark.conf.get("spark.sql.extensions") == classOf[graft.engine.GraftExtensions].getName)
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize") == "16k")
-    assert(spark.conf.get(GraftSession.ModeKey) == "exact")
-    assert(!GraftSession.production(spark))
     assert(spark.sql("SELECT graft_dot_product(array(1.0d), array(2.0d)) v")
       .head.getDouble(0) == 2.0)
   }
