@@ -8,8 +8,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Bench times the same plans Verify dumps for the oracle: every query
   * has one plan.
   *
-  * Methodology: fixed name order; an untimed warm-up absorbs one-time
-  * JVM/codegen/scan-setup cost; then every query runs the same protocol,
+  * Methodology: fixed name order; an untimed warm-up
+  * ([[Profile.warmUp]]) absorbs one-time JVM/codegen/scan-setup cost;
+  * then every query runs the same protocol,
   * [[Profile.measure]]: a `System.gc()`, then min-of-3 `count()`s, each
   * inside `GraftSession.withQueryCaches`, which releases what the query
   * cached or persisted. Each reading carries the min-wall run's Spark
@@ -47,25 +48,7 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.storage", org.apache.logging.log4j.Level.ERROR)
 
-    // Warm-up (untimed): exercise the parquet reader, shuffle machinery,
-    // and the JIT paths the suite leans on (whole-stage codegen compile,
-    // WindowExec, broadcast + sort-merge joins, object hash agg) with
-    // tiny sf-independent plans. Queries still compile their own codegen
-    // classes; this warms the compiler and executor hot loops.
-    {
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions._
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet").limit(10000).cache()
-      li.groupBy("l_returnflag").count().collect()
-      li.withColumn("rn", row_number().over(
-        Window.partitionBy("l_returnflag").orderBy("l_orderkey")))
-        .filter(col("rn") <= 5).count()
-      val dim = li.select("l_returnflag").distinct()
-      li.join(broadcast(dim), "l_returnflag").count()
-      li.alias("a").join(li.alias("b"), Seq("l_orderkey")).count()
-      li.unpersist()
-      spark.catalog.clearCache()
-    }
+    Profile.warmUp(spark, sfDir)
 
     // Host-speed calibration: a fixed single-core md5 fold, no Spark,
     // min of 3 runs; recorded in every artifact so totals from different

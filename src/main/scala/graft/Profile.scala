@@ -36,7 +36,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Option: `--action N` (default 1). Every query has one plan, the one
   * Verify dumps and Bench times. Cores come from SPARK_GRAFT_CPUS (default
   * 4), as for Bench and Verify. `summary` and `stages` run Bench's
-  * protocol ([[measure]]).
+  * warm-up ([[warmUp]]) and protocol ([[measure]]).
   *
   * Scaled inputs: `Test/runMain graft.queries.ProfileScaling <src> <dst>
   * <copies>` writes a key-shifted sf dir; profile it like any other.
@@ -100,14 +100,14 @@ object Profile {
     @volatile private var marker: Option[(Int, CountDownLatch)] = None
     private val MarkerKey = "graft.profile.marker"
 
-    private[Profile] def reset(): Unit = { stages.clear(); plans.clear(); jobs = 0; planMs = 0L }
+    private[graft] def reset(): Unit = { stages.clear(); plans.clear(); jobs = 0; planMs = 0L }
 
-    private[Profile] def counters: Counters = Counters(jobs, stages.asScala.toSeq, planMs)
+    private[graft] def counters: Counters = Counters(jobs, stages.asScala.toSeq, planMs)
 
     /** The executed plans of the last run's actions, in order. */
     private[Profile] def actions: Seq[QueryExecution] = plans.asScala.toSeq
 
-    private[Profile] def drain(): Unit = {
+    private[graft] def drain(): Unit = {
       val done = new CountDownLatch(1)
       marker = Some((-1, done))
       sc.setLocalProperty(MarkerKey, "true")
@@ -143,6 +143,29 @@ object Profile {
 
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
       planMs += qe.tracker.phases.values.map(_.durationMs).sum
+  }
+
+  /** Untimed warm-up before the first measured query, in Bench and in
+    * `summary`/`stages`: tiny sf-independent plans over the parquet
+    * reader, shuffle machinery and the JIT paths the suite leans on
+    * (whole-stage codegen compile, WindowExec, broadcast and sort-merge
+    * joins, object hash agg), so the first query named does not read JVM
+    * and codegen start-up as query time. Queries still compile their own
+    * codegen classes; this warms the compiler and executor hot loops.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val li = spark.read.parquet(s"$sfDir/lineitem.parquet").limit(10000).cache()
+    li.groupBy("l_returnflag").count().collect()
+    li.withColumn("rn", row_number().over(
+      Window.partitionBy("l_returnflag").orderBy("l_orderkey")))
+      .filter(col("rn") <= 5).count()
+    val dim = li.select("l_returnflag").distinct()
+    li.join(broadcast(dim), "l_returnflag").count()
+    li.alias("a").join(li.alias("b"), Seq("l_orderkey")).count()
+    li.unpersist()
+    spark.catalog.clearCache()
   }
 
   /** Run `f` with a [[Recorder]] listening on `spark`, removed on exit. */
@@ -217,6 +240,7 @@ object Profile {
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (o.queries.nonEmpty) o.queries else SparkEntry.queries.keys.toSeq.sorted
     println(s"[profile] ${o.report} sf=${o.sfDir} cores=${o.cores}")
+    if (o.report == "summary" || o.report == "stages") warmUp(spark, o.sfDir)
     recording(spark) { rec =>
       names.foreach { n =>
         val fn = SparkEntry.queries.getOrElse(n,

@@ -1,8 +1,14 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
+
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB oracle compare (tools/check_oracle.py).
-  * The plans are the ones Bench times. */
+  * The plans are the ones Bench times. A query that throws is reported
+  * on stderr and the dump goes on; once oracle_sql.json is written, the
+  * run exits 1 naming every failed query, as Bench does.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -10,14 +16,28 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(cores = cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val failed = dump(spark, sfDir, outDir, SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.isEmpty || only(name) })
+    spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Writes each query's rows to `outDir/<name>` and the oracle SQL to
+    * `outDir/oracle_sql.json`; returns the names of the queries that threw.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String,
+           queries: Seq[(String, Bench.QueryFn)]): Seq[String] = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = queries.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -35,6 +55,6 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    failed
   }
 }

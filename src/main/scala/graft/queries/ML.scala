@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.feature.FeaturePipeline
 import graft.rec.AlsPipeline
 
-/** ML-pipeline queries. The iterative MLlib fits (ALS) are not
-  * DuckDB-expressible and register without oracles (driver records a
-  * rows-only check; statistical correctness lives in the ScalaTest
-  * specs, SURVEY.md §5.4). The deterministic pipelines — the flagship
+/** ML-pipeline queries. The ALS fit (q40) is not DuckDB-expressible,
+  * so its oracle is structural: the recommendation rows' counts, ranks
+  * and item distinctness, replayed from the base join; statistical
+  * correctness lives in the ScalaTest specs (MlSpec, SURVEY.md §5.4).
+  * The deterministic pipelines — the flagship
   * peer-search flow (q44) and the feature pipeline (q41) — carry full
   * SQL twins: their only non-SQL ingredient was ml.Imputer's
   * approx-median, replaced by the exact interpolated median
@@ -120,9 +121,7 @@ object ML {
                       ELSE 0.0 END, 6) AS val
     FROM scaled, positions"""
 
-  /** The q40 ALS pipeline up to rounded top-5 recommendations — shared
-    * by q40 (full rows) and the q101 golden digest.
-    */
+  /** The q40 ALS pipeline up to rounded top-5 recommendations. */
   private def alsRecs(spark: SparkSession, dir: String): DataFrame = {
     // Item universe is brand-level (FIXTURES.md: products ≈ part ⋈
     // lineitem), matching the reference's SKU-scale item space.
@@ -133,19 +132,22 @@ object ML {
       .join(T(spark, dir, "part"), col("l_partkey") === col("p_partkey"))
       .groupBy(col("o_custkey").as("cust"), col("p_brand").as("item"))
       .agg(sum(col("l_quantity")).as("intensity"))
-    // Cached across indexedTriples' three plan branches; released right
-    // after the eager fit materializes the factors (the factors are what
-    // recommendationsDirect reads — the ratings never re-execute).
+    // Cached across indexedTriples' two passes and train's reads of the
+    // triples; released right after the eager fit materializes the
+    // factors (the factors are what recommendationsDirect reads — the
+    // ratings never re-execute).
     val rated = AlsPipeline.accumulate(usage, "cust", "item", "intensity").cache()
     val triples = AlsPipeline.indexedTriples(rated, "cust", "item")
-    // MEMORY_ONLY intermediate storage: bench-path override of the
-    // spill-safe library default — this local run is memory-sized.
+    // The brand-level item space (25 items × rank 15) takes train's
+    // fused path: one job per iteration. MEMORY_ONLY for its grouped
+    // ratings: an override of the spill-safe library default, since
+    // this local run is memory-sized.
     val model = AlsPipeline.train(triples,
       AlsPipeline.Config(intermediateStorage = "MEMORY_ONLY"))
     rated.unpersist(blocking = false)
-    // Direct path: the brand item space fits a broadcast, so blockified
-    // recommendForAllUsers is pure overhead (see recommendationsDirect;
-    // MlSpec pins score parity between the two paths).
+    // Direct path: the brand item space fits a task closure, so
+    // blockified recommendForAllUsers is pure overhead (see
+    // recommendationsDirect; MlSpec pins score parity between the two).
     AlsPipeline.recommendationsDirect(model, 5)
       .select(col("userId"), col("itemId"), round(col("score"), 3).as("score"),
         col("rec_rank"))
@@ -154,13 +156,13 @@ object ML {
   val defs: Seq[QueryDef] = Seq(
 
     // ALS end-to-end: usage triples (customer × part-brand intensity) →
-    // surrogate ids → implicit ALS → top-5 recs per user, joined back to
-    // the entity maps. Factor values are not SQL-reproducible (MlSpec
-    // pins score parity and planted structure instead), but the
-    // pipeline's STRUCTURE is, exactly: every user with >=1 usage row
-    // gets exactly 5 recommendations (n_users replayed from the base
-    // join), ranks run 1..5, recommended items are distinct per user,
-    // and every score is a finite non-null double.
+    // surrogate ids → implicit ALS → top-5 recs per user. Factor values
+    // are not SQL-reproducible (MlSpec pins score parity and planted
+    // structure instead), but the pipeline's STRUCTURE is, exactly:
+    // every user with >=1 usage row gets exactly 5 recommendations
+    // (n_users replayed from the base join), ranks run 1..5, recommended
+    // items are distinct per user, and every score is a finite non-null
+    // double.
     QueryDef("q40_als_recommend", Some("""
       WITH u AS (SELECT DISTINCT o_custkey FROM orders
                  JOIN lineitem ON o_orderkey = l_orderkey)

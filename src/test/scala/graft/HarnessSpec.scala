@@ -6,8 +6,9 @@ import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 /** The run harness: one session factory, one scratch root, the
-  * steady-state store helper, and Bench's measured run — its counters,
-  * their repeatability and its handling of a failing query.
+  * steady-state store helper, Bench's measured run — its counters,
+  * their repeatability and its handling of a failing query — and
+  * Verify's handling of a failing query.
   */
 class HarnessSpec extends SparkSuite {
 
@@ -76,6 +77,16 @@ class HarnessSpec extends SparkSuite {
     }
     assert(line.contains(f""""value":${res.head.secs}%.3f,"""), line)
     assert(full.contains(s""""readings":{"q_ok":{"wall_s":${res.head.secs},"jobs":${c.jobs},"""), full)
+  }
+
+  test("Verify: a throwing query is named among the failures and the dump still completes") {
+    val ok: Bench.QueryFn = (s, d) => queries.T(s, d, "nation")
+    val boom: Bench.QueryFn = (_, _) => throw new IllegalStateException("planted")
+    val out = GraftSession.scratchDir("harness_verify")
+    val failed = Verify.dump(spark, sf, out.toString, Seq("q_boom" -> boom, "q_ok" -> ok))
+    assert(failed == Seq("q_boom"))
+    assert(Files.isDirectory(out.resolve("q_ok")) && !Files.exists(out.resolve("q_boom")))
+    assert(Files.readString(out.resolve("oracle_sql.json")).contains("\"q01_pricing_summary\""))
   }
 
   test("measured run: job, stage and task counts repeat exactly across two readings") {

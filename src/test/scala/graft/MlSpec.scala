@@ -45,6 +45,113 @@ class MlSpec extends SparkSuite {
     }
   }
 
+  // Planted two-block preference data: block users rate block items.
+  // Implicit: intensities 1.1-4.4 in block, sparse 0.3 off block.
+  // Explicit: 5.0 in block, 0.1 off block, every pair rated. The
+  // non-dyadic ratings make float sums depend on their order.
+  private val implicitRows = for {
+    u <- 0 until 60; i <- 0 until 20
+    inBlock = (u < 30) == (i < 10)
+    if inBlock || (u * 7 + i) % 9 == 0
+  } yield (u, i, if (inBlock) 1.1f * (1 + (u + 2 * i) % 4) else 0.3f)
+  private val explicitRows = for {
+    u <- 0 until 40; i <- 0 until 20
+  } yield (u, i, if ((u < 20) == (i < 10)) 5.0f else 0.1f)
+  private val implicitCfg = AlsPipeline.Config(rank = 4, maxIter = 10, regParam = 0.05)
+  private val explicitCfg = implicitCfg.copy(implicitPrefs = false)
+
+  private def withConf[T](kv: (String, String)*)(f: => T): T = {
+    val saved = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** The fit under a broadcast threshold: the fused path at the 10 MB
+    * default, MLlib ALS at -1.
+    */
+  private def fit(rows: Seq[(Int, Int, Float)], cfg: AlsPipeline.Config,
+                  threshold: String = "10485760"): org.apache.spark.ml.recommendation.ALSModel =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+      AlsPipeline.train(rows.toDF("userId", "itemId", "rating"), cfg)
+    }
+
+  private def factors(df: org.apache.spark.sql.DataFrame): Map[Int, Array[Float]] =
+    df.select("id", "features").as[(Int, Array[Float])].collect().toMap
+
+  /** MLlib's ALS objective (ALS-WR regularization: each factor's squared
+    * norm weighted by its count of explicit ratings). Implicit feedback
+    * sums over every (user, item) pair with confidence 1 + |r| and
+    * preference r > 0 (Hu, Koren & Volinsky); explicit sums the rated
+    * pairs' squared error.
+    */
+  private def objective(rows: Seq[(Int, Int, Float)], cfg: AlsPipeline.Config,
+                        model: org.apache.spark.ml.recommendation.ALSModel): Double = {
+    val (x, y) = (factors(model.userFactors), factors(model.itemFactors))
+    def dot(a: Array[Float], b: Array[Float]) = a.indices.map(d => a(d).toDouble * b(d)).sum
+    val rated = rows.map { case (u, i, r) => (u, i) -> r }.toMap
+    val loss =
+      if (cfg.implicitPrefs) (for (u <- x.keys.toSeq; i <- y.keys.toSeq) yield {
+        val r = rated.getOrElse((u, i), 0f)
+        (1.0 + math.abs(r)) * math.pow((if (r > 0) 1.0 else 0.0) - dot(x(u), y(i)), 2)
+      }).sum
+      else rows.map { case (u, i, r) => math.pow(r - dot(x(u), y(i)), 2) }.sum
+    val counted = rows.filter(t => !cfg.implicitPrefs || t._3 > 0)
+    val reg = counted.map { case (u, i, _) => dot(x(u), x(u)) + dot(y(i), y(i)) }.sum
+    loss + cfg.regParam * reg
+  }
+
+  test("fused ALS objective is at most 2% above MLlib's, and the planted blocks are recovered") {
+    for ((name, rows, cfg) <- Seq(("implicit", implicitRows, implicitCfg),
+                                  ("explicit", explicitRows, explicitCfg))) {
+      val fused = fit(rows, cfg)
+      val mllib = fit(rows, cfg, threshold = "-1")
+      val (f, m) = (objective(rows, cfg, fused), objective(rows, cfg, mllib))
+      info(f"$name: objective fused $f%.4f, MLlib $m%.4f")
+      assert(f <= m * 1.02, s"$name: fused objective $f vs MLlib $m")
+      val recs = AlsPipeline.recommendationsDirect(fused, 3)
+        .select("userId", "itemId").as[(Int, Int)].collect()
+      val half = rows.map(_._1).max / 2
+      val inBlock = recs.count { case (u, i) => (u <= half) == (i < 10) }.toDouble / recs.length
+      assert(inBlock >= 0.9, s"$name: in-block ratio $inBlock")
+    }
+  }
+
+  test("fused ALS factors are bit-identical across shuffle partitions and row orders") {
+    // MLlib's are not: its solver stages fold floats in shuffle-fetch order.
+    def bits(m: org.apache.spark.ml.recommendation.ALSModel) =
+      Seq(m.userFactors, m.itemFactors).map(factors(_).toSeq.sortBy(_._1)
+        .map { case (id, f) => id -> f.map(java.lang.Float.floatToIntBits).toSeq })
+    // q40's rank and regParam: an ill-conditioned solve, where a
+    // different fold order shows in the factor bits.
+    val q40 = AlsPipeline.Config()
+    for ((rows, cfg) <- Seq(implicitRows -> q40, explicitRows -> q40.copy(implicitPrefs = false))) {
+      val runs = for (parts <- Seq(1, 4, 7); order <- Seq(rows, rows.reverse)) yield
+        withConf("spark.sql.shuffle.partitions" -> parts.toString) {
+          bits(AlsPipeline.train(order.toDF("userId", "itemId", "rating")
+            .repartition(col("userId")), cfg))
+        }
+      val distinct = runs.distinct.size
+      assert(distinct == 1, s"$distinct distinct factor sets over 6 runs")
+    }
+  }
+
+  test("fused ALS at maxIter 5 submits at most 7 jobs; threshold -1 runs MLlib") {
+    val triples = implicitRows.toDF("userId", "itemId", "rating")
+    def jobs(threshold: String): Int = Profile.recording(spark) { rec =>
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+        rec.reset()
+        AlsPipeline.train(triples, implicitCfg.copy(maxIter = 5))
+        rec.drain()
+        rec.counters.jobs
+      }
+    }
+    val fused = jobs("10485760")
+    assert(fused <= 7, s"fused fit ran $fused jobs")
+    val mllib = jobs("-1")
+    info(s"jobs: fused $fused, MLlib $mllib")
+    assert(mllib > fused, s"MLlib fit ran $mllib jobs, fused $fused")
+  }
+
   test("ALS RMSE on planted structure is small") {
     val rows = for {
       u <- 0 until 40; i <- 0 until 20
