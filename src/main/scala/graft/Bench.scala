@@ -106,7 +106,6 @@ object Bench {
     Profile.recording(spark) { rec =>
       queries.map { case (name, fn) =>
         val r = Profile.measure(spark, rec, name, fn, sfDir)
-        val c = r.counters
         val outcome = r.failure.fold(f"sec=${r.secs}%.3f")(e =>
           s"FAILED ${e.getClass.getName}: ${String.valueOf(e.getMessage).take(200)}")
         System.err.println(f"[bench-diag] $name%-28s jobs=${r.jobSpan}%-4s " +

@@ -12,7 +12,7 @@ import graft.queries._
 object SparkEntry {
 
   /** All registered queries across the engine's domains. */
-  def allDefs: Seq[QueryDef] =
+  private def allDefs: Seq[QueryDef] =
     Relational.defs ++ Relational2.defs ++ Relational3.defs ++ Relational4.defs ++
       Reports.defs ++ Vector.defs ++ Text.defs ++ Curation.defs ++
       Retrieval.defs ++ Events.defs ++ Media.defs ++ ML.defs ++ Graph.defs ++

@@ -10,14 +10,11 @@ import graft.engine.expressions.{DotProduct, JaroWinkler, MinHashSignatures}
 import graft.engine.{functions => F}
 
 /** SparkSessionExtensions entry point: makes the engine's custom
-  * Catalyst expressions SQL-callable and injects the range-join
-  * optimizer rewrite in any session built with
-  * `spark.sql.extensions=graft.engine.GraftExtensions` (or
-  * `.withExtensions(new GraftExtensions)`).
-  *
-  * The engine's other operators plan through stock Catalyst
-  * (SURVEY.md §4/§7.3); `rules.RangeJoinRewrite` only fires on inner
-  * joins that would otherwise become nested-loop range joins.
+  * Catalyst expressions and table functions SQL-callable in any session
+  * built with `spark.sql.extensions=graft.engine.GraftExtensions` (or
+  * `.withExtensions(new GraftExtensions)`). It injects no optimizer
+  * rule: the engine's operators plan through stock Catalyst
+  * (SURVEY.md §4/§7.3).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -31,7 +28,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ColumnBridge.toExpr(builder(exprs.map(ColumnBridge.toCol)))
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => graft.engine.rules.RangeJoinRewrite())
     e.injectFunction((
       FunctionIdentifier("graft_dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot_product"),

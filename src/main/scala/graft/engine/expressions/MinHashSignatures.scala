@@ -120,10 +120,6 @@ object MinHashSignatures {
         exprs(1).eval().asInstanceOf[Int],
         if (exprs.length > 2) exprs(2).eval().asInstanceOf[Int] else 1))
 
-  /** Column API: array of `k` MinHash hex digests of a string-array column. */
-  def minhashes(shingles: Column, k: Int): Column =
-    call_function(name, shingles, lit(k))
-
   /** Column API: array of `bands` LSH band signatures — each the concat of
     * `rowsPerBand` consecutive MinHash hex digests.
     */

@@ -113,21 +113,6 @@ object functions {
   // All fold left-to-right in index order for cross-engine determinism.
   // ---------------------------------------------------------------------
 
-  /** 2-D Morton (Z-order) key: interleave the low 16 bits of two
-    * non-negative int columns — the multi-dimensional sort key for
-    * data-skipping layouts (sort by z before writing parquet and range
-    * predicates on EITHER dimension prune row groups via min/max stats).
-    * Pure column bit math, codegen'd.
-    */
-  def zorder2(a: Column, b: Column): Column = {
-    // 64-bit lanes: bit 31 of the interleave would overflow an int
-    val (al, bl) = (a.cast("long"), b.cast("long"))
-    (0 until 16).map { i =>
-      shiftleft(shiftright(al, i).bitwiseAND(1L), 2 * i)
-        .bitwiseOR(shiftleft(shiftright(bl, i).bitwiseAND(1L), 2 * i + 1))
-    }.reduce((x, y) => x.bitwiseOR(y))
-  }
-
   /** Let-binding for column expressions: evaluate `c` ONCE and pass the
     * bound value to `f`. Catalyst has no let-form; a computed column
     * referenced k times (worse: referenced inside a higher-order-function
@@ -152,13 +137,4 @@ object functions {
     val n = l2Norm(a)
     transform(a, x => when(n === 0.0, x.cast("double")).otherwise(x.cast("double") / n))
   }
-
-  /** Cosine similarity of two numeric array columns (0 if either is a
-    * zero vector).
-    */
-  def cosineSimilarity(a: Column, b: Column): Column = {
-    val denom = l2Norm(a) * l2Norm(b)
-    when(denom === 0.0, lit(0.0)).otherwise(dotProduct(a, b) / denom)
-  }
-
 }

@@ -24,7 +24,7 @@ object FeaturePipeline {
   /** Bucketizer splits: `nBuckets` even steps over [0, max+1]
     * (`search_ranking_peers.py:372-392`; A5 max pull).
     */
-  def evenSplits(df: DataFrame, c: String, nBuckets: Int): Array[Double] = {
+  private[graft] def evenSplits(df: DataFrame, c: String, nBuckets: Int): Array[Double] = {
     val mx = df.agg(max(col(c).cast("double"))).head().getDouble(0)
     val step = (mx + 1.0) / nBuckets
     (0 to nBuckets).map(i => i * step).toArray

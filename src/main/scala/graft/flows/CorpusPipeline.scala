@@ -32,13 +32,6 @@ object CorpusPipeline {
   case class CorpusDoc(doc_id: Long, lang: String, n_tokens: Int,
                        quality: Double, split: String)
 
-  /** [[run]] with a typed surface. */
-  def runTyped(docs: DataFrame, cfg: Config): org.apache.spark.sql.Dataset[CorpusDoc] = {
-    val session = docs.sparkSession
-    import session.implicits._
-    run(docs, cfg).withColumn("n_tokens", col("n_tokens").cast("int")).as[CorpusDoc]
-  }
-
   /** @param docs (doc_id, lang, text) corpus frame
     * @return surviving docs: (doc_id, lang, n_tokens, quality, split)
     */

@@ -64,8 +64,8 @@ object Bm25 {
     * saturation) for hybrid fusion (q134). Same stats subtree as
     * [[score]]; same term-order float contract.
     */
-  def ltcScore(docs: DataFrame, idCol: String, tokensCol: String,
-               terms: Seq[String]): DataFrame = {
+  private def ltcScore(docs: DataFrame, idCol: String, tokensCol: String,
+                       terms: Seq[String]): DataFrame = {
     val scored = withStats(docs, idCol, tokensCol, terms)
     val contribs = terms.indices.map { i =>
       val tf = col(s"__tf$i")

@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
 object Bpe {
 
   /** `word` → `(c1)(c2)…(cn)`. */
-  def symbolize(word: Column): Column =
+  private def symbolize(word: Column): Column =
     array_join(transform(sequence(lit(1), length(word)),
       i => concat(lit("("), word.substr(i, lit(1)), lit(")"))), "")
 
@@ -95,7 +95,7 @@ object Bpe {
     * measured mean batch size (spec-pinned batched ≡ sequential).
     */
   private def mergeLoop(words: DataFrame, wordCol: String, cntCol: String,
-                        steps: Int, batch: Int = 64)
+                        steps: Int, batch: Int)
       : (DataFrame, Seq[(Int, String, String, Long)], Option[Int]) = {
     require(batch >= 1, s"batch must be >= 1, got $batch")
     // The '(symbol)' wrapping reserves parentheses as delimiters: a word

@@ -60,14 +60,4 @@ object Decontaminate {
       else trainG.join(evalG, col("g") === col("ge"))
     hits.select(idCol).distinct()
   }
-
-  /** Drop contaminated documents (and optionally the eval slice itself
-    * stays — callers holding out the eval docs do that separately).
-    */
-  def filterContaminated(docs: DataFrame, idCol: String, textCol: String,
-                         isEval: Column, n: Int = 3,
-                         bloomPrefilter: Boolean = false): DataFrame =
-    docs.join(
-      contaminatedIds(docs, idCol, textCol, isEval, n, bloomPrefilter),
-      Seq(idCol), "left_anti")
 }

@@ -18,7 +18,7 @@ object DedupOps {
   /** Min-hash of a shingle array under salt `i`: lexicographic min of the
     * salted md5 hex digests (a uniform 128-bit hash family member).
     */
-  def minhash(shingles: Column, i: Int): Column =
+  private[graft] def minhash(shingles: Column, i: Int): Column =
     array_min(transform(shingles, s => md5(concat(lit(s"${i}_"), s))))
 
   /** LSH band values: `bands` bands of `rowsPerBand` concatenated
@@ -115,25 +115,20 @@ object DedupOps {
         (inter.cast("double") / union).as("jaccard"))
   }
 
-  /** 32-bit SimHash of a token array: bit j is set iff the sum over
-    * tokens of ±1 (by bit j of the token's hash) is positive. Built from
-    * md5's first 8 hex chars -> int — pure column math.
-    *
-    * Single-pass formulation: each token is md5-hashed ONCE and all 32
-    * vote counters update via one `zip_with` against a powers-of-two
-    * array. The per-bit formulation (32 separate `aggregate` calls)
-    * plans as 32 full passes re-hashing every token — measured 30x
-    * slower on the signature stage. Votes are ±1 integer sums, so the
-    * result is fold-order-independent and oracle-identical.
-    */
-  def simhash32(tokens: Column): Column = simhash(tokens, 32)
-
   /** Width-parameterized SimHash (the widening switch point from the
     * [[simhashNearDups]] scale note): `nBits` of md5-derived signature,
     * up to 60 (15 hex chars — the widest value that cannot overflow a
-    * signed BIGINT on either engine; bit 63 would).
+    * signed BIGINT on either engine; bit 63 would). Bit j is set iff the
+    * sum over tokens of ±1 (by bit j of the token's hash) is positive.
+    *
+    * Single-pass formulation: each token is md5-hashed ONCE and all vote
+    * counters update via one `zip_with` against a powers-of-two array.
+    * The per-bit formulation (one `aggregate` per bit) plans as one full
+    * pass per bit re-hashing every token — measured 30x slower on the
+    * signature stage. Votes are ±1 integer sums, so the result is
+    * fold-order-independent and oracle-identical.
     */
-  def simhash(tokens: Column, nBits: Int): Column = {
+  private[graft] def simhash(tokens: Column, nBits: Int): Column = {
     require(nBits >= 1 && nBits <= 60, s"nBits must be in [1, 60], got $nBits")
     val powers = array((0 until nBits).map(j => lit(1L << j)): _*)
     val hashes = transform(tokens,
@@ -249,8 +244,8 @@ object DedupOps {
     *
     * @return (idCol, fp) distinct winnowed fingerprints
     */
-  def winnowingFingerprints(docs: DataFrame, idCol: String, textCol: String,
-                            n: Int = 4, w: Int = 4): DataFrame = {
+  private[graft] def winnowingFingerprints(docs: DataFrame, idCol: String, textCol: String,
+                                           n: Int = 4, w: Int = 4): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = split(col(textCol), " ")
     // positions 0 .. size-n (size-n+1 grams); docs shorter than n tokens

@@ -330,10 +330,6 @@ object Multimodal {
     StructField("width", IntegerType, nullable = true),
     StructField("height", IntegerType, nullable = true)))
 
-  /** Back-compat alias for the default decode ([[HistogramDecoder]]). */
-  def fakeDecode(payload: Array[Byte]): Array[Float] =
-    HistogramDecoder.decode(payload)
-
   /** Decode + feature-extract, partition-wise (the Scala analogue of a
     * batched `mapInPandas` decode UDF): no shuffle; decoder lifecycle
     * at PARTITION bounds (open before the first row, close at
@@ -380,20 +376,6 @@ object Multimodal {
         sequence(lit(0), ((length(col("payload")) - 1) / (chunkBytes * stride)).cast("int")),
         i => substring(col("payload"), (i * chunkBytes * stride + 1).cast("int"), lit(chunkBytes))))
         .as(Seq("chunk_idx", "chunk")))
-
-  /** STUB resize: updates the (width, height) metadata and subsamples
-    * the payload by the area ratio — a real image resize keeps this
-    * exact signature and column contract (payload in, payload out,
-    * metadata consistent). Pure column ops, no shuffle.
-    */
-  def resizeStub(assets: DataFrame, newW: Int, newH: Int): DataFrame = {
-    val ratio = (col("width") * col("height")).cast("double") / (newW * newH)
-    val newLen = greatest(lit(1),
-      (length(col("payload")) / greatest(ratio, lit(1.0))).cast("int"))
-    assets.withColumn("payload", col("payload").substr(lit(1), newLen))
-      .withColumn("width", lit(newW))
-      .withColumn("height", lit(newH))
-  }
 
   /** 16-bin byte histogram of a payload as EXACT integer counts, pure
     * column ops: bin j = #bytes with b div 16 == j. The codec-free

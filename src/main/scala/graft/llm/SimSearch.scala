@@ -166,7 +166,7 @@ object SimSearch {
     * no shuffle, no UDF; array_min/array_max/transform are codegen'd
     * collection ops.
     */
-  def sq8Encode(corpus: DataFrame, idCol: String, embCol: String): DataFrame =
+  private[graft] def sq8Encode(corpus: DataFrame, idCol: String, embCol: String): DataFrame =
     unitized(corpus, idCol, embCol, idCol, "__ne")
       .withColumn("minv", array_min(col("__ne")))
       .withColumn("step", (array_max(col("__ne")) - col("minv")) / lit(255.0))
@@ -187,8 +187,8 @@ object SimSearch {
     * per pair). Every fold is ordered left-to-right — the score replays
     * bit-identically in the DuckDB twin (q118 full hash oracle).
     */
-  def sq8TopKEncoded(encoded: DataFrame, queries: DataFrame, idCol: String,
-                     embCol: String, k: Int): DataFrame =
+  private def sq8TopKEncoded(encoded: DataFrame, queries: DataFrame, idCol: String,
+                             embCol: String, k: Int): DataFrame =
     TopK.exactPerKey(sq8ScoresEncoded(encoded, queries, idCol, embCol),
       Seq("query_id"), Seq(col("sq_sim").desc, col(idCol).asc), k, "rnk")
       .withColumn("rnk", col("rnk").cast("int"))
@@ -197,8 +197,8 @@ object SimSearch {
     * the evaluation queries (q137 recall, q153 MRR) measure against.
     * Same pair space as the top-k scan; no rank cut.
     */
-  def sq8ScoresEncoded(encoded: DataFrame, queries: DataFrame, idCol: String,
-                       embCol: String): DataFrame = {
+  private def sq8ScoresEncoded(encoded: DataFrame, queries: DataFrame, idCol: String,
+                               embCol: String): DataFrame = {
     val q = unitized(queries, idCol, embCol, "query_id", "__qe")
       .withColumn("__qsum", aggregate(col("__qe"), lit(0.0), (a, x) => a + x))
     val decoded = encoded.withColumn("__cd",
@@ -237,8 +237,8 @@ object SimSearch {
     * with — public so an external index (streaming.IncrementalIvf) can
     * bucket with IDENTICAL centroids and match the batch path exactly.
     */
-  def seedCentroids(corpus: DataFrame, idCol: String, embCol: String,
-                    nCentroids: Int): DataFrame =
+  private[graft] def seedCentroids(corpus: DataFrame, idCol: String, embCol: String,
+                                   nCentroids: Int): DataFrame =
     unitized(corpus, idCol, embCol, idCol, "__ne")
       .orderBy(col(idCol)).limit(nCentroids)
       .select(col(idCol).as("cent_id"), col("__ne").as("cent_emb"))
@@ -326,28 +326,6 @@ object SimSearch {
       cents, idCol, "__ne", 1)
     val probed = nearestBuckets(q, cents, "query_id", "__qe", nProbe)
     probeRank(probed, bucketed, idCol, k)
-  }
-
-  /** [[filteredIvfTopK]] with the brute-force crossover IMPLEMENTED
-    * instead of documented: one column-pruned, predicate-pushed count
-    * sizes the surviving corpus, and below `bruteThreshold` rows the
-    * search runs EXACT ([[bruteForceTopK]] over the filtered corpus —
-    * at that size the probe machinery costs more than scanning the
-    * survivors, and recall is free). Above it, the probed IVF path.
-    * The default threshold is the measured brute/bucketed switch point
-    * of SCALE.md ("LSH overtakes brute force at ~3×10⁴ vectors") —
-    * operators pass their own when the corpus profile differs.
-    */
-  def filteredTopKAuto(corpus: DataFrame, queries: DataFrame, idCol: String,
-                       embCol: String, predicate: Column, k: Int,
-                       nCentroids: Int = 16, nProbe: Int = 4, iters: Int = 2,
-                       bruteThreshold: Long = 30000L): DataFrame = {
-    val survivors = corpus.filter(predicate).select(idCol).count()
-    if (survivors <= bruteThreshold)
-      bruteForceTopK(corpus.filter(predicate), queries, idCol, embCol, k)
-    else
-      filteredIvfTopK(corpus, queries, idCol, embCol, predicate, k,
-        nCentroids, nProbe, iters)
   }
 
   /** Id-order seeds refined by `iters` deterministic spherical-Lloyd
@@ -522,20 +500,6 @@ object SimSearch {
     centers.toSeq.zipWithIndex
       .map { case (v, i) => (i.toLong, v.toSeq) }
       .toDF("cent_id", "cent_emb")
-  }
-
-  /** [[ivfTopK]] with KMeans‖-seeded, Lloyd-refined centroids — the
-    * production seeding path ([[kmeansParRows]]; id-order variants stay
-    * the DuckDB-oracled twins). KMeansParSpec pins recall ≥ the
-    * id-order seeding on a skewed clustered corpus.
-    */
-  def ivfTopKPar(corpus: DataFrame, queries: DataFrame, idCol: String,
-                 embCol: String, k: Int, nCentroids: Int = 16, nProbe: Int = 4,
-                 iters: Int = 2, seed: Long = 42L): DataFrame = {
-    val c = unitized(corpus, idCol, embCol, idCol, "__ne")
-    val cents = lloydIterate(c,
-      kmeansParRows(c, idCol, nCentroids, seed = seed), idCol, iters)
-    ivfWithCentroids(c, queries, cents, idCol, embCol, k, nProbe)
   }
 
   /** The Lloyd refinement loop from arbitrary `seeds` (cent_id,
@@ -721,9 +685,9 @@ object SimSearch {
       .withColumn("rnk", col("rnk").cast("int"))
   }
 
-  private def ivfWithCentroids(c: DataFrame, queries: DataFrame, cents: DataFrame,
-                               idCol: String, embCol: String, k: Int,
-                               nProbe: Int): DataFrame = {
+  private[graft] def ivfWithCentroids(c: DataFrame, queries: DataFrame, cents: DataFrame,
+                                      idCol: String, embCol: String, k: Int,
+                                      nProbe: Int): DataFrame = {
     val q = unitized(queries, idCol, embCol, "query_id", "__qe")
     val bucketed = nearestBuckets(c, cents, idCol, "__ne", 1)
     val probed = nearestBuckets(q, cents, "query_id", "__qe", nProbe)
@@ -1540,56 +1504,6 @@ object SimSearch {
 
   // -- PCA rotation (energy compaction) ------------------------------
 
-  /** PCA rotation learned from the corpus: the orthogonal matrix whose
-    * rows are the covariance eigenvectors in DESCENDING eigenvalue
-    * order. Rotating embeddings by it preserves every inner product
-    * and norm EXACTLY in math (orthogonal transform; spec pins ≤1e-9
-    * in floats) while concentrating variance into the leading
-    * coordinates — which is precisely the property the Matryoshka
-    * prefix tier ([[matryoshkaTopK]]) assumes of its embeddings and
-    * arbitrary embeddings lack: after rotation, a `prefixDim` prefix
-    * carries the spectrum's top mass instead of an arbitrary
-    * coordinate subset. The full-rotation complement of
-    * [[varianceBalancedPerm]] (which only PERMUTES dims for PQ
-    * subspace balance).
-    *
-    * Scale shape: one distributed covariance pass (treeAggregate of
-    * dim×dim partials — the only data-sized cost), then a dim×dim
-    * eigendecomposition on the driver (dim ≤ a few thousand — model-
-    * sized, the same bounded-pull class as a codebook). Eigenvector
-    * SIGNS are canonicalized (largest-|component| positive) so the
-    * rotation is reproducible across runs and platforms up to LAPACK
-    * float noise.
-    */
-  def pcaRotation(corpus: DataFrame, idCol: String, embCol: String): Array[Array[Double]] = {
-    val unit = unitized(corpus, idCol, embCol, idCol, "__ne")
-    val rows = unit.select(col("__ne")).rdd.map { r =>
-      org.apache.spark.mllib.linalg.Vectors.dense(r.getSeq[Double](0).toArray)
-    }
-    val cov = new org.apache.spark.mllib.linalg.distributed.RowMatrix(rows)
-      .computeCovariance()
-    val dim = cov.numRows
-    val bm = breeze.linalg.DenseMatrix.tabulate(dim, dim)((i, j) => cov(i, j))
-    val es = breeze.linalg.eigSym(bm)
-    // breeze orders eigenvalues ASCENDING; emit rows by descending
-    val order = (0 until dim).sortBy(i => -es.eigenvalues(i))
-    order.map { i =>
-      val v = Array.tabulate(dim)(j => es.eigenvectors(j, i))
-      val m = v.indices.maxBy(j => math.abs(v(j)))
-      if (v(m) < 0) v.map(x => -x) else v
-    }.toArray
-  }
-
-  /** Apply a [[pcaRotation]] matrix to an embedding column:
-    * rotated[i] = Σ_j R[i][j]·emb[j], as one codegen'd
-    * transform/zip_with chain over a single matrix literal — no UDF,
-    * no shuffle, broadcast-free (the matrix travels in the plan).
-    */
-  def rotateEmb(emb: Column, rot: Array[Array[Double]]): Column =
-    transform(typedLit(rot.map(_.toSeq).toSeq),
-      row => aggregate(zip_with(row, emb, (a, b) => a * b),
-        lit(0.0), (acc, x) => acc + x))
-
   // -- ANN tier auto-selection ---------------------------------------
 
   /** A resolved retrieval plan: which tier [[autoTopK]] will run and
@@ -1631,8 +1545,8 @@ object SimSearch {
     * recallTarget ≥ 0.999 or a sub-cutoff corpus short-circuits to
     * brute (the only tier that GUARANTEES its recall).
     */
-  def choosePlan(n: Long, dim: Int, recallTarget: Double,
-                 bytesPerVector: Long = Long.MaxValue): AnnPlan = {
+  private[graft] def choosePlan(n: Long, dim: Int, recallTarget: Double,
+                                bytesPerVector: Long = Long.MaxValue): AnnPlan = {
     require(recallTarget > 0.0 && recallTarget <= 1.0,
       s"recallTarget must be in (0, 1], got $recallTarget")
     require(dim > 0, s"embedding dim must be positive, got $dim")

@@ -50,7 +50,7 @@ object BloomPrune {
   /** Optimal Bloom bit count for `n` items at false-positive rate `fpp`:
     * ceil(-n ln(fpp) / ln(2)^2).
     */
-  def optimalNumBits(n: Long, fpp: Double): Long =
+  private[graft] def optimalNumBits(n: Long, fpp: Double): Long =
     math.ceil(-n * math.log(fpp) / (math.log(2) * math.log(2))).toLong
 
   /** Inner join `big ⋈ small` with Bloom pre-pruning of the big side.

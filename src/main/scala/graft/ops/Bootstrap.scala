@@ -48,7 +48,7 @@ object Bootstrap {
   val OffsetFp: Long = 10000000000L
 
   /** Deterministic Poisson(1) weight for a (row, replicate) key. */
-  def poissonWeight(key: Column): Column = {
+  private[graft] def poissonWeight(key: Column): Column = {
     val r = Sampling.hashRank(key)
     PoissonThresholds.map(t => when(r > t, 1L).otherwise(0L))
       .reduce(_ + _)

@@ -54,7 +54,7 @@ object LogHistogram {
     * quantile unit). SQL twin: `CASE WHEN b < 2^(m+1) THEN b ELSE
     * (b - (b // 2^m - 1) * 2^m) << (b // 2^m - 1) END`.
     */
-  def lowerBound(b: Column, m: Int): Column = {
+  private[graft] def lowerBound(b: Column, m: Int): Column = {
     // b div 2^m as a SHIFT, not a float division: Long/Long in Column
     // algebra is a double divide, which misrounds past 2^53. The shift
     // clamps to [0, 62]: lowerBound is a public column API (the

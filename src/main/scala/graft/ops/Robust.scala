@@ -71,8 +71,8 @@ object Robust {
     * `tieCol` pins row_number order under equal values; the selected
     * VALUE is tie-insensitive, the pin just keeps plans deterministic.
     */
-  def groupMedian(df: DataFrame, groupCol: String, valCol: String,
-                  tieCol: String, outCol: String): DataFrame = {
+  private def groupMedian(df: DataFrame, groupCol: String, valCol: String,
+                          tieCol: String, outCol: String): DataFrame = {
     val r = df
       .withColumn("__rk", row_number()
         .over(Window.partitionBy(groupCol).orderBy(col(valCol), col(tieCol))))

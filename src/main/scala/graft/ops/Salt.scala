@@ -3,26 +3,12 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation for hot join keys: salt the skewed (big) side into
-  * `salts` sub-keys and explode the small side across all salt values,
-  * so one hot key's rows spread over `salts` reducers instead of one.
-  *
-  * AQE's skew-join handles sort-merge skew automatically at runtime;
-  * this explicit form covers the cases AQE can't re-plan (e.g. skewed
-  * aggregations, pre-AQE shuffle sizing, deterministic layout tests).
+/** Skew mitigation for pair joins on a low-cardinality key: salt the
+  * candidate side into `salts` sub-keys and replicate the probe side
+  * across all salt values, so one hot key's pairs spread over `salts`
+  * reducers instead of one.
   */
 object Salt {
-
-  /** Equi-join `big ⋈ small` on `key`, salted `salts` ways. Result
-    * columns = big's ++ small's (minus the duplicate key).
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String, salts: Int): DataFrame = {
-    val saltedBig = big.withColumn("__salt",
-      pmod(hash(col(key), monotonically_increasing_id()), lit(salts)))
-    val saltedSmall = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    saltedBig.join(saltedSmall, Seq(key, "__salt")).drop("__salt")
-  }
 
   /** Pair-explosion join `probe ⋈ cand` on a LOW-cardinality equi-key
     * (e.g. 25 nations, a handful of languages). Without help, the
@@ -77,16 +63,4 @@ object Salt {
     val n = spark.sessionState.conf.numShufflePartitions
     math.min(cap, math.max(1, math.ceil(4.0 * n / keyCardinality).toInt))
   }
-
-  /** Two-phase skew-safe aggregation: partial-aggregate on (key, salt),
-    * then final-aggregate on key. `partial` and `fin` must compose (sum/
-    * sum, count/sum, min/min, ...).
-    */
-  def saltedAgg(df: DataFrame, key: String, valueCol: String, salts: Int,
-                partial: Column => Column, fin: Column => Column): DataFrame =
-    df.withColumn("__salt", pmod(hash(col(key), monotonically_increasing_id()), lit(salts)))
-      .groupBy(col(key), col("__salt"))
-      .agg(partial(col(valueCol)).as("__p"))
-      .groupBy(col(key))
-      .agg(fin(col("__p")).as(valueCol))
 }

@@ -63,13 +63,6 @@ object Sampling {
       .drop("__skey", "__rk")
   }
 
-  /** Uniform deterministic sample of ~fraction of rows: keep rows whose
-    * hash-uniform falls below the threshold (Bernoulli by data, not by
-    * partition position).
-    */
-  def uniformSample(df: DataFrame, idCol: String, fraction: Double): DataFrame =
-    df.filter(hashUniform(col(idCol)) < fraction)
-
   /** Stratified deterministic sampling — the training-data MIXING step:
     * keep each row with the rate configured for its stratum (domain /
     * source / language), unlisted strata at `defaultRate`. The rates ride

@@ -66,9 +66,4 @@ object Scd2 {
     untouched.unionByName(closed.select(untouched.columns.map(col): _*))
       .unionByName(opening.select(untouched.columns.map(col): _*))
   }
-
-  /** The dimension as of `version` (validity-interval slice). */
-  def asOf(history: DataFrame, version: Long): DataFrame =
-    history.filter(col("valid_from") <= version &&
-      (col("valid_to").isNull || col("valid_to") > version))
 }

@@ -181,7 +181,7 @@ object Sequential {
     * @return one row per monitorable day: day, n1, n2, mean_diff
     *         (4 dp), sigma (6 dp), mde (6 dp), detectable
     */
-  def mdeFromMoments(dayArm: DataFrame): DataFrame =
+  private def mdeFromMoments(dayArm: DataFrame): DataFrame =
     cumCheckpoints(dayArm)
       .withColumn("vn", expr(
         """cast(var_u2 as double) * (cast(n1 as double) + cast(n2 as double))

@@ -67,31 +67,4 @@ object Triangles {
         round(lit(2.0) * col("n_tri") / (col("d") * (col("d") - 1)), 6)
           .as("clustering"))
   }
-
-  /** The naive canonical enumeration (a<b<c three-way join) — the
-    * oracle shape; [[perNode]] must agree exactly (spec-pinned). Kept
-    * for verification, not the scale path: its wedge join pays the
-    * Σ d(v)² hub fanout the orientation avoids.
-    */
-  def perNodeNaive(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val e = edges
-      .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
-        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .cache()
-    val deg = e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
-    val tri = e.select(col("a").as("x"), col("b").as("y"))
-      .join(e.select(col("a").as("y"), col("b").as("z")), "y")
-      .join(e.select(col("a").as("x"), col("b").as("z")), Seq("x", "z"))
-    val corners = tri.select(col("x").as("node"))
-      .unionAll(tri.select(col("y").as("node")))
-      .unionAll(tri.select(col("z").as("node")))
-    corners.groupBy("node").agg(count(lit(1)).as("n_tri"))
-      .join(deg, "node")
-      .select(col("node"), col("n_tri"),
-        round(lit(2.0) * col("n_tri") / (col("d") * (col("d") - 1)), 6)
-          .as("clustering"))
-  }
 }

@@ -26,7 +26,7 @@ object Reports {
     * % 23) to exercise the haversine null-neutral path; short codes
     * (custkey % 19) exercise the hops -1 path.
     */
-  def customerGeo(spark: SparkSession, dir: String): DataFrame = {
+  private def customerGeo(spark: SparkSession, dir: String): DataFrame = {
     val c = T(spark, dir, "customer")
     val latRaw = ((col("c_custkey") * 13) % 160 - 80 + lit(0.25)).cast("double")
     val lonRaw = ((col("c_custkey") * 31) % 340 - 170 + lit(0.5)).cast("double")
@@ -83,7 +83,7 @@ object Reports {
     * 6 dp. The same-nation equi-key makes this a hash join (not a cross
     * join) — the shuffle key that keeps it tractable at scale.
     */
-  def peerPairs(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def peerPairs(spark: SparkSession, dir: String): DataFrame = {
     val g = customerGeo(spark, dir)
     // Round-robin repartition of the probe side: when the candidate side
     // broadcasts, the join + per-pair scoring inherit the probe side's
@@ -124,7 +124,7 @@ object Reports {
   /** Top-30 peers per prospect (reference NUM_PEERS=30,
     * `inference_postprocess.py:164`).
     */
-  def peers(spark: SparkSession, dir: String): DataFrame =
+  private def peers(spark: SparkSession, dir: String): DataFrame =
     TopK.exactPerKey(peerPairs(spark, dir), Seq("prospect"),
       Seq(col("score").desc, col("src_custkey").asc), 30,
       prepartition = true).drop("rn")
@@ -139,7 +139,7 @@ object Reports {
   /** Product usage with min-max-normalized rating (stand-in for the
     * reference's normalized `rating` column, `inference_postprocess.py:52-67`).
     */
-  def ratedUsage(spark: SparkSession, dir: String): DataFrame = {
+  private def ratedUsage(spark: SparkSession, dir: String): DataFrame = {
     // Cached: Scale.minmax branches this aggregate (stats + main pass) —
     // without materialization the 3-table join + groupBy runs twice.
     // Lazy-return cache — resident sessions release it via
@@ -235,7 +235,7 @@ object Reports {
   /** Penetration table: per-prospect product penetration = peer-usage
     * count / 30, top-20 per prospect descending (d17 fixed).
     */
-  def penetration(spark: SparkSession, dir: String): DataFrame = {
+  private def penetration(spark: SparkSession, dir: String): DataFrame = {
     val pen = joinedUsage(spark, dir)
       .groupBy("prospect", "p_brand")
       .agg(round(count(col("rating")) / lit(30.0), 6).as("penetration"))

@@ -85,23 +85,6 @@ object EventStreams {
     out
   }
 
-  /** Production sink pattern: stream → `foreachBatch` → idempotent
-    * parquet appends (per-batch dedup/upsert logic plugs into the batch
-    * function; checkpointing makes it exactly-once on a cluster).
-    * Returns the materialized parquet as a DataFrame.
-    */
-  def foreachBatchToParquet(spark: SparkSession, sfDir: String, outDir: String): DataFrame = {
-    val stream = eventStream(spark, sfDir)
-      .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-    val q = stream.writeStream.outputMode("complete")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        batch.write.mode("overwrite").parquet(outDir)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.read.parquet(outDir)
-  }
-
   /** Custom streaming state: per-user running event counts via
     * `mapGroupsWithState` (the engine's KeyValueGroupedDataset custom-
     * state surface; update mode, state keyed by user). The memory sink
@@ -159,167 +142,6 @@ object EventStreams {
         col("n_events"))
     val name = s"graft_kmv_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table(name).cache()
-    out.count()
-    // cached InMemoryRelation is self-contained; free the sink's catalog entry
-    spark.catalog.dropTempView(name)
-    out
-  }
-
-  /** Streaming per-window heavy hitters via the Misra-Gries summary
-    * ([[graft.engine.expressions.MisraGries]]): k (item, count) pairs of
-    * mergeable state per window — the "top users this hour" monitor
-    * whose state cannot grow with stream cardinality. As with
-    * [[hourlyDistinctSketch]], the aggregate's merge path is exactly
-    * what combines partial summaries across micro-batches, so the
-    * result is spec-pinned identical to the one-shot batch aggregation.
-    */
-  def hourlyHeavyHitters(spark: SparkSession, sfDir: String,
-                         k: Int = 8): DataFrame = {
-    graft.engine.expressions.MisraGries.register(spark)
-    import graft.engine.expressions.MisraGries.sketch
-    val agg = eventStream(spark, sfDir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(sketch(col("user_id").cast("string"), k).as("s"))
-      .select(date_format(col("w.start"), "yyyy-MM-dd HH:00:00").as("hour"),
-        col("s"))
-    val name = s"graft_mg_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table(name).cache()
-    out.count()
-    // cached InMemoryRelation is self-contained; free the sink's catalog entry
-    spark.catalog.dropTempView(name)
-    out
-  }
-
-  /** Sliding-window event rate (30-min slide over 1-h windows) — same
-    * streaming machinery, finer reporting grain.
-    */
-  def slidingRate(spark: SparkSession, sfDir: String): DataFrame = {
-    val stream = eventStream(spark, sfDir)
-    val agg = stream
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
-      .agg(count(lit(1)).as("n"))
-      .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("win_start"), col("n"))
-    val name = s"graft_slide_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table(name).cache()
-    out.count()
-    // cached InMemoryRelation is self-contained; free the sink's catalog entry
-    spark.catalog.dropTempView(name)
-    out
-  }
-
-  /** Stream-static enrichment: the event stream joined to a STATIC
-    * dimension (re-read per micro-batch, broadcast when small) — the
-    * production shape for attaching slowly-changing reference data to a
-    * stream without any state. Batch twin: the same join on the static
-    * frames.
-    */
-  def streamStaticEnrich(spark: SparkSession, sfDir: String): DataFrame = {
-    val stream = eventStream(spark, sfDir)
-      .select(col("event_id"), col("user_id"), col("event_type"))
-    val dim = spark.read.parquet(s"$sfDir/customer.parquet")
-      .select((col("c_custkey") % 150).as("user_id"), col("c_mktsegment"))
-      .groupBy("user_id").agg(min(col("c_mktsegment")).as("segment"))
-    val joined = stream.join(broadcast(dim), Seq("user_id"), "left")
-    val name = s"graft_enrich_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table(name).cache()
-    out.count()
-    // cached InMemoryRelation is self-contained; free the sink's catalog entry
-    spark.catalog.dropTempView(name)
-    out
-  }
-
-  /** Streaming exact dedup on a key, state bounded by the watermark
-    * (`dropDuplicatesWithinWatermark`): duplicates arriving within the
-    * watermark delay of the first sighting are dropped, and state for
-    * keys older than the watermark is evicted — the only dedup shape
-    * whose state does not grow with an unbounded stream. Batch twin for
-    * parity: `dropDuplicates` on the same key over the same file.
-    */
-  def streamingDedup(spark: SparkSession, sfDir: String,
-                     keyCols: Seq[String] = Seq("user_id", "event_type")): DataFrame = {
-    val stream = eventStream(spark, sfDir)
-      .withWatermark("ts", "31 days")
-      .dropDuplicatesWithinWatermark(keyCols)
-      .select(keyCols.map(col): _*)
-    val name = s"graft_dedup_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = stream.writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    val out = spark.table(name).cache()
-    out.count()
-    // cached InMemoryRelation is self-contained; free the sink's catalog entry
-    spark.catalog.dropTempView(name)
-    out
-  }
-
-  /** Closed-session extraction via `flatMapGroupsWithState` + event-time
-    * timeout — the custom-state API for emitting COMPLETED aggregates
-    * ([[statefulUserCounts]]' `mapGroupsWithState` emits running ones).
-    * Sessions that close inside a batch (gap exceeded by a later event)
-    * emit immediately; each user's open tail session emits when the
-    * watermark passes `session_end + gap` (the no-data batch after the
-    * file source drains fires those timeouts). Tail sessions within
-    * `gap` of the stream's maximum event time stay open by definition —
-    * exactly the rows a restart would still be allowed to extend.
-    *
-    * @return (user_id, start_ms, end_ms, n_events) per closed session
-    */
-  def sessionsStateful(spark: SparkSession, sfDir: String,
-                       gapMin: Int = 30): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import spark.implicits._
-    val gapMs = gapMin * 60000L
-    val stream = eventStream(spark, sfDir)
-      .withWatermark("ts", "0 seconds")
-      .select(col("user_id"), col("ts"))
-      .as[(Long, java.sql.Timestamp)]
-    val sessions = stream.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long), (Long, Long, Long, Long)](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, events: Iterator[(Long, java.sql.Timestamp)],
-         state: GroupState[(Long, Long, Long)]) =>
-          if (state.hasTimedOut) {
-            val (s, e, n) = state.get
-            state.remove()
-            Iterator.single((user, s, e, n))
-          } else {
-            // A batch delivers an unsorted slice of the user's events:
-            // sort, then fold into (start, end, n) runs split on gap.
-            val ms = events.map(_._2.getTime).toArray
-            java.util.Arrays.sort(ms)
-            val closed = scala.collection.mutable.ArrayBuffer[(Long, Long, Long, Long)]()
-            var cur = state.getOption
-            ms.foreach { m =>
-              cur = cur match {
-                case Some((s, e, n)) if m - e <= gapMs => Some((s, m, n + 1))
-                case Some((s, e, n)) => closed += ((user, s, e, n)); Some((m, m, 1L))
-                case None => Some((m, m, 1L))
-              }
-            }
-            cur.foreach { c =>
-              state.update(c)
-              state.setTimeoutTimestamp(c._2 + gapMs)
-            }
-            closed.iterator
-          }
-      }
-      .toDF("user_id", "start_ms", "end_ms", "n_events")
-    val name = s"graft_sess_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = sessions.writeStream.outputMode("append")
       .format("memory").queryName(name).start()
     try q.processAllAvailable() finally q.stop()
     val out = spark.table(name).cache()

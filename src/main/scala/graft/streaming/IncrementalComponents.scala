@@ -47,8 +47,8 @@ object IncrementalComponents {
     * only the current batch while earlier versions existed would
     * silently split every previously-merged cluster.
     */
-  def readLabels(spark: SparkSession, storeDir: String,
-                 batchId: Long): DataFrame = {
+  private def readLabels(spark: SparkSession, storeDir: String,
+                         batchId: Long): DataFrame = {
     if (batchId == 0)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], labelSchema)
     val prev = versionDir(storeDir, batchId - 1)

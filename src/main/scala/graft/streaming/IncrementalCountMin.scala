@@ -30,8 +30,8 @@ object IncrementalCountMin {
   /** Sketch of store version `batchId − 1` (None for batch 0); fails
     * fast when a non-initial predecessor is missing.
     */
-  def readSketch(spark: SparkSession, storeDir: String,
-                 batchId: Long): Option[DataFrame] = {
+  private def readSketch(spark: SparkSession, storeDir: String,
+                         batchId: Long): Option[DataFrame] = {
     if (batchId == 0) return None
     val prev = versionDir(storeDir, batchId - 1)
     val prevPath = new org.apache.hadoop.fs.Path(prev)

@@ -23,8 +23,8 @@ object IncrementalDailyMoments {
   /** Store version `batchId − 1` (None for batch 0); fails fast on a
     * missing or torn non-initial predecessor.
     */
-  def readMoments(spark: SparkSession, storeDir: String,
-                  batchId: Long): Option[DataFrame] = {
+  private def readMoments(spark: SparkSession, storeDir: String,
+                          batchId: Long): Option[DataFrame] = {
     if (batchId == 0) return None
     val prev = versionDir(storeDir, batchId - 1)
     val prevPath = new org.apache.hadoop.fs.Path(prev)

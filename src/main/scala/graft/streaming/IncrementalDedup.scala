@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.llm.DedupOps
 import graft.ops.ConnectedComponents
@@ -81,11 +81,6 @@ object IncrementalDedup {
                           tau: Double = 0.5, sigBuckets: Int = 64)
 
   private def batchDir(storeDir: String, id: Long) = f"$storeDir/batch=$id"
-
-  private def decisionSchema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("admitted", BooleanType, nullable = false),
-    StructField("dup_of", LongType, nullable = true)))
 
   /** The store's readable parts covering batches `< upTo`: the newest
     * committed generation (which folds batches ≤ its high-water mark)

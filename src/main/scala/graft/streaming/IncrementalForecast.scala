@@ -43,8 +43,8 @@ object IncrementalForecast {
     * FAST when batchId > 0 and `v=N-1` is absent — reinitializing from
     * only the live batch would silently restart every series.
     */
-  def readState(spark: SparkSession, storeDir: String,
-                batchId: Long): Option[DataFrame] = {
+  private def readState(spark: SparkSession, storeDir: String,
+                        batchId: Long): Option[DataFrame] = {
     if (batchId == 0) return None
     val prev = versionDir(storeDir, batchId - 1)
     val prevPath = new org.apache.hadoop.fs.Path(prev)

@@ -27,8 +27,8 @@ object IncrementalLogHistogram {
   /** Histogram of store version `batchId − 1` (None for batch 0);
     * fails fast when a non-initial predecessor is missing.
     */
-  def readHistogram(spark: SparkSession, storeDir: String,
-                    batchId: Long): Option[DataFrame] = {
+  private def readHistogram(spark: SparkSession, storeDir: String,
+                            batchId: Long): Option[DataFrame] = {
     if (batchId == 0) return None
     val prev = versionDir(storeDir, batchId - 1)
     val prevPath = new org.apache.hadoop.fs.Path(prev)

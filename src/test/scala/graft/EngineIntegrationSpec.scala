@@ -85,20 +85,6 @@ class EngineIntegrationSpec extends SparkSuite {
     assert(row.getLong(0) == 4L && row.getAs[Array[Byte]](1).length == 4)
   }
 
-  test("stream-static enrichment matches the batch join") {
-    import spark.implicits._
-    val streamed = EventStreams.streamStaticEnrich(spark, sf)
-      .select("event_id", "segment").as[(Long, String)].collect().toSet
-    val dim = spark.read.parquet(s"$sf/customer.parquet")
-      .select((col("c_custkey") % 150).as("user_id"), col("c_mktsegment"))
-      .groupBy("user_id").agg(min(col("c_mktsegment")).as("segment"))
-    val batch = graft.queries.T(spark, sf, "events")
-      .select(col("event_id"), col("user_id"))
-      .join(dim, Seq("user_id"), "left")
-      .select("event_id", "segment").as[(Long, String)].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty)
-  }
-
   test("csv malformed rows: PERMISSIVE nulls + captures, DROPMALFORMED drops") {
     val dir = GraftSession.scratchDir("graft_bad").toString
     // row 2 is structurally malformed (MORE tokens than the schema); bad
@@ -128,23 +114,6 @@ class EngineIntegrationSpec extends SparkSuite {
     assert(merged.columns.toSet == Set("id", "v1", "v2", "p"))
     // old files surface the new column as null
     assert(merged.filter(col("p") === 1).head.isNullAt(merged.columns.indexOf("v2")))
-  }
-
-  test("streaming dedup within watermark matches batch dropDuplicates keys") {
-    import spark.implicits._
-    val streamed = EventStreams.streamingDedup(spark, sf)
-      .as[(Long, String)].collect().toSet
-    val batch = graft.queries.T(spark, sf, "events")
-      .dropDuplicates("user_id", "event_type")
-      .select("user_id", "event_type").as[(Long, String)].collect().toSet
-    assert(streamed == batch && streamed.nonEmpty)
-  }
-
-  test("streaming sliding windows: rows cover both hour offsets") {
-    val out = EventStreams.slidingRate(spark, sf)
-    assert(out.count() > 0)
-    val starts = out.select("win_start").collect().map(_.getString(0))
-    assert(starts.exists(_.endsWith(":30:00")) && starts.exists(_.endsWith(":00:00")))
   }
 
   test("GraftExtensions: custom expressions SQL-callable") {
@@ -187,48 +156,6 @@ class EngineIntegrationSpec extends SparkSuite {
     val batch = SparkEntry.queries("q63_attribution")(spark, sf)
       .select("click_event", "purchase_event").as[(Long, Long)].collect().toSet
     assert(streamed == batch && streamed.nonEmpty)
-  }
-
-  test("foreachBatch parquet sink matches batch aggregation") {
-    import spark.implicits._
-    val out = GraftSession.scratchDir("graft_feb").toString + "/agg"
-    val streamed = EventStreams.foreachBatchToParquet(spark, sf, out)
-      .as[(String, Long)].collect().toMap
-    val batch = graft.queries.T(spark, sf, "events")
-      .groupBy("event_type").count().as[(String, Long)].collect().toMap
-    assert(streamed == batch)
-  }
-
-  test("flatMapGroupsWithState sessionizer matches batch gap-split sessions") {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val gapMs = 30 * 60000L
-    val streamed = EventStreams.sessionsStateful(spark, sf, gapMin = 30)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    // Batch twin: lag-gap boundaries -> running session id -> bounds.
-    val ev = graft.queries.T(spark, sf, "events")
-      .select(col("user_id"), unix_millis(col("ts")).as("ms"))
-    val w = Window.partitionBy("user_id").orderBy("ms")
-    val sess = ev
-      .withColumn("new_s", when(
-        col("ms") - lag("ms", 1).over(w) > gapMs || lag("ms", 1).over(w).isNull, 1L)
-        .otherwise(0L))
-      .withColumn("sid", sum("new_s").over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy("user_id", "sid")
-      .agg(min("ms").as("start_ms"), max("ms").as("end_ms"),
-        count(lit(1)).as("n_events"))
-    val maxMs = ev.agg(max("ms")).head.getLong(0)
-    val expectedClosed = sess
-      .filter(col("end_ms") + gapMs < maxMs)
-      .select("user_id", "start_ms", "end_ms", "n_events")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    val all = sess.select("user_id", "start_ms", "end_ms", "n_events")
-      .as[(Long, Long, Long, Long)].collect().toSet
-    assert(streamed.subsetOf(all), "streamed sessions must be exact batch sessions")
-    assert(expectedClosed.subsetOf(streamed),
-      "every watermark-closed session must be emitted")
-    assert(streamed.nonEmpty && expectedClosed.nonEmpty)
   }
 
   test("stateful streaming user counts match batch groupBy") {

@@ -18,6 +18,74 @@ class HarnessSpec extends SparkSuite {
   private def containing(paths: Seq[Path], s: String): Seq[String] =
     paths.filter(p => Files.readString(p).contains(s)).map(_.getFileName.toString)
 
+  /** Public names in `src/main` that no other `src/main` file and no
+    * perfbench harness file references, each with the reason it stays.
+    * Keying an object keeps its defs too. The "test-only" entries are
+    * reached only from specs and are the next ones to delete.
+    */
+  private val Keep: Map[String, String] = Map(
+    "Sources" -> "SURVEY §2.1 S1–S4: the reference's CSV/parquet ingest and latest-snapshot read",
+    "AlsPipeline.percentRankRating" ->
+      "SURVEY W1: the reference's percent_rank rating (recommender_prod_rec.py:171,175)",
+    "AlsPipeline.gridSearch" ->
+      "SURVEY §6 ALS budget: the reference's rank/regParam grid (recommender_prod_rec.py:244-246)",
+    "AlsPipeline.evalRmse" -> "SURVEY M11: the reference's RMSE evaluation (recommender_prod_rec.py:234-241)",
+    "AlsPipeline.recommendations" ->
+      "SURVEY M12: the recommendForAllUsers output the reference consumes (recommender_prod_rec.py:261-269)",
+    "SkewProfile.invalidate" -> "clears the profile cache, so OpsSpec reads a cold profile after a warm one",
+    "SimSearch.ivfTopK" -> "test-only: LlmOpsSpec's IVF recall case and IncrementalIvfSpec's batch reference",
+    "SimSearch.ivfTopKKMeans" -> "test-only: two LlmOpsSpec IVF k-means cases",
+    "SimSearch.buildIvfIndex" -> "test-only: LlmOpsSpec's persisted-IVF case",
+    "SimSearch.thresholdPairsBlocked" -> "test-only: one LlmOpsSpec case",
+    "TextOps.tokenizeRegex" -> "test-only: one LlmOpsSpec case",
+    "Cooccur.orderedGroupPairs" -> "test-only: two OpsSpec cases, one as spanGroupPairs' reference",
+    "Landmarks.harmonicCentrality" -> "test-only: half of OpsSpec's Landmarks case",
+    "Scale.standard" -> "test-only: one OpsSpec case",
+    "EventStreams.streamStreamAttribution" -> "test-only: one EngineIntegrationSpec case",
+    "EventStreams.statefulUserCounts" -> "test-only: one EngineIntegrationSpec case",
+    "EventStreams.hourlyDistinctSketch" -> "test-only: one StreamingResilienceSpec case",
+    "Sinks.parquetPartitioned" -> "test-only: LayoutSpec's one case",
+    "ContinuousTrainingPrep" -> "test-only: ContinuousTrainingPrepSpec (4 cases)",
+    "IncrementalCooccur" -> "test-only: IncrementalCooccurSpec (4 cases)",
+    "IncrementalDedup" -> "test-only: IncrementalDedupSpec (4 cases)",
+    "IncrementalIvf" -> "test-only: IncrementalIvfSpec (6 cases), one KMeansParSpec case, GenStoreSpec",
+    "IncrementalPq" -> "test-only: IncrementalPqSpec (2 cases)")
+
+  test("reachability: every public object and def in src/main is referenced outside its file, or kept with a reason") {
+    // Roots: SparkEntry's registry and GraftExtensions' registrations
+    // (both src/main), the mains, and the perfbench harness, which
+    // compiles against graft's public API. Specs do not count.
+    def code(p: Path) = Files.readString(p).replaceAll("(?s)/\\*.*?\\*/|//[^\n]*", "")
+    val main = scalaFiles("src/main").map(p => p -> code(p))
+    val harness = scalaFiles("perfbench/harness/src").map(p => p -> code(p))
+    assert(main.size > 100 && harness.nonEmpty, "expected src/main and perfbench/harness/src")
+    val ident = "\\w+".r
+    val filesOf: Map[String, Set[Path]] = (main ++ harness)
+      .flatMap { case (p, s) => ident.findAllIn(s).toSet.map((w: String) => w -> p) }
+      .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    val top = "(?m)^(private\\[\\w+\\] )?(?:final |sealed |abstract |case )*(object|class|trait) (\\w+)".r
+    val member = "(?m)^  (private\\[\\w+\\] )?(?:final |implicit |@\\w+ )*def (\\w+)".r
+    val unreached = for {
+      (p, s) <- main
+      tops = top.findAllMatchIn(s).toSeq
+      (o, end) <- tops.zip(tops.drop(1).map(_.start) :+ s.length)
+      body = s.substring(o.start, end)
+      if o.group(2) == "object" && !body.contains("def main(")
+      obj = o.group(3)
+      // a def inside a package-private object is package-private too
+      (qualified, name, key) <- (Option(o.group(1)), obj, obj) +: member.findAllMatchIn(body)
+        .map(d => (Option(d.group(1)).orElse(Option(o.group(1))), d.group(2), s"$obj.${d.group(2)}")).toSeq
+      if !filesOf(name).exists(_ != p)
+      // package-private names may be reached from their own file
+      if qualified.isEmpty || ident.findAllIn(s).count(_ == name) < 2
+    } yield key
+    val uncovered = unreached.filterNot(k => Keep.contains(k) || Keep.contains(k.takeWhile(_ != '.')))
+    assert(uncovered.isEmpty,
+      s"no reference outside its own file (delete it, narrow it, or keep-list it with a reason): ${uncovered.mkString(", ")}")
+    val stale = Keep.keySet -- unreached
+    assert(stale.isEmpty, s"keep-list entries that are now referenced, or gone: ${stale.mkString(", ")}")
+  }
+
   test("one session factory: no other SparkSession builder, no plan-mode system property") {
     val sources = scalaFiles("src")
     assert(sources.size > 100, "expected to scan the repository's src/ tree")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.llm.SimSearch
 
-/** KMeans‖ seeding ([[SimSearch.kmeansParRows]] / [[SimSearch.ivfTopKPar]]):
+/** KMeans‖ seeding ([[SimSearch.kmeansParRows]]):
   * the weighted distributed sample must escape the id-order seeding's
   * cluster-membership bias, deterministically.
   *
@@ -54,10 +54,6 @@ class KMeansParSpec extends SparkSuite {
   }
 
   test("kmeansParRows: deterministic, k unit centroids, one per real cluster") {
-    val c = SimSearch.ivfTopKPar(corpus, queries, "vec_id", "emb", 5,
-      nCentroids = 4, nProbe = 1)
-    assert(Set("query_id", "vec_id", "cos_sim", "rnk")
-      .subsetOf(c.columns.toSet))
     val u = graft.llm.SimSearch.unitized(corpus, "vec_id", "emb", "vec_id", "__ne")
     val a = SimSearch.kmeansParRows(u, "vec_id", 4, seed = 7L)
       .orderBy("cent_id").collect().map(_.getSeq[Double](1).toArray)
@@ -79,18 +75,6 @@ class KMeansParSpec extends SparkSuite {
     }
   }
 
-  test("ivfTopKPar recall >= id-order Lloyd seeding on the skewed corpus") {
-    val exact = topSets(
-      SimSearch.bruteForceTopK(corpus, queries, "vec_id", "emb", 5))
-    val idOrder = topSets(SimSearch.ivfTopKLloyd(corpus, queries, "vec_id",
-      "emb", 5, nCentroids = 4, nProbe = 1, iters = 2))
-    val par = topSets(SimSearch.ivfTopKPar(corpus, queries, "vec_id",
-      "emb", 5, nCentroids = 4, nProbe = 1, iters = 2))
-    val (rId, rPar) = (recallOf(idOrder, exact), recallOf(par, exact))
-    assert(rPar >= rId, s"KMeans|| recall $rPar < id-order recall $rId")
-    assert(rPar >= 0.9, s"KMeans|| recall $rPar below floor on separable clusters")
-  }
-
   test("kmeansParRows: corpus smaller than k yields one centroid per point; empty corpus yields none") {
     val tiny = (0 until 2).map(i => (i.toLong, member(i))).toDF("vec_id", "emb")
     val u = SimSearch.unitized(tiny, "vec_id", "emb", "vec_id", "__ne")
@@ -103,8 +87,8 @@ class KMeansParSpec extends SparkSuite {
   test("IncrementalIvf seeded with KMeans|| centroids probes identically to the batch path") {
     val dir = GraftSession.scratchDir("ivf_kpar").toString
     val u = SimSearch.unitized(corpus, "vec_id", "emb", "vec_id", "__ne")
-    // same (seed, rounds, iters) defaults as ivfTopKPar -> identical
-    // centroid space, so the streamed index must probe identically
+    // the streamed index must probe identically to the batch IVF probe
+    // over the same KMeans||-seeded, Lloyd-refined centroids
     val cents = SimSearch.lloydIterate(u,
       SimSearch.kmeansParRows(u, "vec_id", 4), "vec_id", 2).cache()
     graft.streaming.IncrementalIvf.processBatch(
@@ -116,8 +100,7 @@ class KMeansParSpec extends SparkSuite {
         .collect().toSeq.map(_.toString).sorted
     val streamed = graft.streaming.IncrementalIvf.probe(
       spark, dir, queries, cents, "vec_id", "emb", 5, nProbe = 2)
-    val batch = SimSearch.ivfTopKPar(corpus, queries, "vec_id", "emb", 5,
-      nCentroids = 4, nProbe = 2, iters = 2)
+    val batch = SimSearch.ivfWithCentroids(u, queries, cents, "vec_id", "emb", 5, nProbe = 2)
     assert(img(streamed) == img(batch),
       "KMeans||-seeded incremental index diverged from the batch path")
     cents.unpersist()

@@ -89,16 +89,6 @@ class LlmOpsSpec extends SparkSuite {
       s"shingles leaked into a shuffle:\n${exchangeBlocks.mkString("\n---\n")}")
   }
 
-  test("CorpusPipeline.runTyped: typed rows, valid splits, quality floor") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val out = graft.flows.CorpusPipeline.runTyped(docs,
-      graft.flows.CorpusPipeline.Config(stop = graft.queries.Text.Stop)).collect()
-    assert(out.nonEmpty)
-    assert(out.forall(d => d.split == "train" || d.split == "val"))
-    assert(out.forall(_.quality >= 0.8))
-    assert(out.map(_.doc_id).distinct.length == out.length)
-  }
-
   test("MinHashBands: deterministic, order-insensitive, null sig on empty set") {
     graft.engine.expressions.MinHashBands.register(spark)
     val sig = (sh: Seq[String]) => Seq(sh).toDF("sh")
@@ -110,19 +100,6 @@ class LlmOpsSpec extends SparkSuite {
     assert(sig(Seq.empty).forall(_ == null)) // empty shingle set -> null sigs
     // distinct-set sensitivity: different sets produce different sigs
     assert(sig(Seq("completely", "different")) != a)
-  }
-
-  test("DedupOps.simhash32: identical docs same hash; near dups close in hamming") {
-    val df = Seq(
-      (1L, "spark scala data engine fast"),
-      (2L, "spark scala data engine fast"),
-      (3L, "spark scala data engine slow"),
-      (4L, "completely different words entirely here")).toDF("id", "text")
-      .select(col("id"), DedupOps.simhash32(TextOps.tokenize(col("text"))).as("h"))
-    val m = df.as[(Long, Long)].collect().toMap
-    assert(m(1L) == m(2L))
-    def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    assert(ham(m(1L), m(3L)) < ham(m(1L), m(4L)))
   }
 
   test("SimSearch.bruteForceTopK returns the true nearest neighbor") {
@@ -434,67 +411,6 @@ class LlmOpsSpec extends SparkSuite {
     assert(graft.llm.LanguageModel.knBigramNll(train, tiny, "doc_id", "text").count() == 0)
   }
 
-  test("SimSearch.pcaRotation: orthogonal, dot-preserving, and it rescues the Matryoshka prefix on latent-structure embeddings") {
-    import spark.implicits._
-    // Latent-structure fixture: an 8-dim signal mixed into 64 dims by a
-    // fixed random matrix + small noise. The ENERGY lives in an 8-dim
-    // subspace, but NOT in the first 8 coordinates — the regime where a
-    // raw Matryoshka prefix is blind and PCA rotation is the fix.
-    val rnd = new scala.util.Random(23)
-    val mix = Array.fill(64, 8)(rnd.nextGaussian())
-    val vecs = (0 until 300).map { i =>
-      val s = Array.fill(8)(rnd.nextGaussian() + (if (i % 6 == 0) 3.0 else 0.0))
-      val v = Array.tabulate(64)(j =>
-        (0 until 8).map(k => mix(j)(k) * s(k)).sum + 0.01 * rnd.nextGaussian())
-      (i.toLong, v)
-    }.toDF("vec_id", "embedding")
-    val rot = SimSearch.pcaRotation(vecs, "vec_id", "embedding")
-    // orthogonality: R·Rᵀ = I
-    val dim = rot.length
-    for (i <- 0 until dim; j <- i until dim) {
-      val d = (0 until dim).map(k => rot(i)(k) * rot(j)(k)).sum
-      assert(math.abs(d - (if (i == j) 1.0 else 0.0)) < 1e-9, s"R·Rᵀ[$i][$j] = $d")
-    }
-    // rotation preserves pairwise dots (checked on the unit embeddings
-    // through the column op itself, not just the matrix)
-    val rotated = vecs.select(col("vec_id"),
-      SimSearch.rotateEmb(col("embedding"), rot).as("embedding"))
-    def dots(df: org.apache.spark.sql.DataFrame) =
-      SimSearch.bruteForceTopK(df, df.filter(col("vec_id") % 50 === 0),
-          "vec_id", "embedding", 5)
-        .select("query_id", "vec_id", "cos_sim")
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val (dRaw, dRot) = (dots(vecs), dots(rotated))
-    assert(dRaw.keySet == dRot.keySet)
-    dRaw.foreach { case (k, v) => assert(math.abs(v - dRot(k)) <= 2e-6, s"$k: $v vs ${dRot(k)}") }
-    // energy compaction: the rotated 8-prefix carries nearly all the
-    // variance; the raw 8-prefix carries only its proportional share
-    def prefixEnergy(df: org.apache.spark.sql.DataFrame): Double =
-      SimSearch.unitized(df, "vec_id", "embedding", "vec_id", "ne")
-        .select(
-          aggregate(slice(col("ne"), 1, 8), lit(0.0), (a, x) => a + x * x).as("p"))
-        .agg(avg(col("p"))).head.getDouble(0)
-    val (eRaw, eRot) = (prefixEnergy(vecs), prefixEnergy(rotated))
-    assert(eRot > 0.95 && eRot > eRaw + 0.3,
-      s"no energy compaction: raw $eRaw vs rotated $eRot")
-    // the retrieval consequence: prefix-only candidates (candFactor 1 —
-    // no rerank slack) recover the true top-k far better after rotation
-    val queries = vecs.filter(col("vec_id") % 50 === 0)
-    val exact = SimSearch.bruteForceTopK(vecs, queries, "vec_id", "embedding", 5)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    def recall(df: org.apache.spark.sql.DataFrame, q: org.apache.spark.sql.DataFrame) = {
-      val got = SimSearch.matryoshkaTopK(df, q, "vec_id", "embedding", 5,
-          prefixDim = 8, candFactor = 1)
-        .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-      exact.intersect(got).size.toDouble / exact.size
-    }
-    val rRaw = recall(vecs, queries)
-    val rRot = recall(rotated, rotated.filter(col("vec_id") % 50 === 0))
-    assert(rRot >= rRaw,
-      s"rotation hurt matryoshka prefix recall: $rRaw -> $rRot")
-    assert(rRot >= 0.9, s"rotated prefix recall only $rRot")
-  }
-
   test("SimSearch.autoTopK: planner walks the ladder cheapest-first; executed choice meets its recall target") {
     import spark.implicits._
     val sp = SimSearch
@@ -646,24 +562,6 @@ class LlmOpsSpec extends SparkSuite {
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
     val wideRecall = exact.intersect(wide).size.toDouble / exact.size
     assert(wideRecall >= recall, s"recall not monotone in rerankFactor: $wideRecall < $recall")
-  }
-
-  test("SimSearch.filteredTopKAuto: selective filters go exact, wide ones probe") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val queries = emb.filter(col("vec_id") % 100 === 0)
-    val pred = col("label") === 1
-    def img(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toString).toSet
-    // below the threshold: must be EXACTLY the brute-force result
-    val below = SimSearch.filteredTopKAuto(emb, queries, "vec_id", "embedding",
-      pred, 5, bruteThreshold = 1000000L)
-    assert(img(below) ==
-      img(SimSearch.bruteForceTopK(emb.filter(pred), queries, "vec_id", "embedding", 5)))
-    // above the threshold: must be EXACTLY the probed IVF result
-    val above = SimSearch.filteredTopKAuto(emb, queries, "vec_id", "embedding",
-      pred, 5, bruteThreshold = 0L)
-    assert(img(above) ==
-      img(SimSearch.filteredIvfTopK(emb, queries, "vec_id", "embedding", pred, 5)))
   }
 
   test("SimSearch.filteredIvfTopKByIds: no eval document ever surfaces") {
@@ -992,28 +890,10 @@ class LlmOpsSpec extends SparkSuite {
     assert(Multimodal.aHashNearDups(corrupt, hamMax = 6).count() >= 0)
   }
 
-  test("Multimodal.resizeStub: metadata updated, payload shrunk proportionally") {
-    val docs = spark.read.parquet(s"$sf/documents.parquet").limit(10)
-    val assets = Multimodal.assetsFromDocuments(docs) // 64x48
-    val resized = Multimodal.resizeStub(assets, 32, 24) // quarter area
-    val r = resized.select(col("width"), col("height"),
-      length(col("payload")).as("len")).collect()
-    assert(r.forall(x => x.getInt(0) == 32 && x.getInt(1) == 24))
-    val orig = assets.select(length(col("payload"))).collect().map(_.getInt(0))
-    val news = resized.select(length(col("payload"))).collect().map(_.getInt(0))
-    orig.zip(news).foreach { case (o, n) => assert(n <= o / 4 + 1 && n >= 1) }
-  }
-
   test("TextOps.tokenizeBpe: extraction semantics, RE2-safe pattern") {
     val got = Seq("ab12 cd-ef!").toDF("t")
       .select(TextOps.tokenizeBpe(col("t"))).head.getSeq[String](0)
     assert(got == Seq("ab", "12", "cd", "-", "ef", "!"))
-  }
-
-  test("Multimodal.fakeDecode: known byte histogram") {
-    val feats = Multimodal.fakeDecode("aaaa".getBytes("UTF-8")) // 'a'=97 -> bin 6
-    assert(feats(6) == 1.0f)
-    assert(feats.sum == 1.0f)
   }
 
   test("Bpe.learnMerges: greedy pairing, weighted argmax, early exhaustion") {

@@ -63,17 +63,6 @@ class OpsSpec extends SparkSuite {
     assert(math.abs(approx - exact) / exact < 0.05, s"exact=$exact approx=$approx")
   }
 
-  test("Metrics.observe: counts collected during the action, no extra job") {
-    val df = Seq((1, "a"), (2, null), (3, "c")).toDF("id", "s")
-    val (observed, obs) = graft.ops.Metrics.observeQuality(df, "stage1", Seq("s"))
-    val jobsBefore = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    observed.collect() // the one action
-    val m = obs.get
-    assert(m("rows") == 3L && m("nulls_s") == 1L)
-    val jobsAfter = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    assert(jobsAfter - jobsBefore <= 1, "metrics must not spawn extra jobs")
-  }
-
   test("Diff.snapshotDiff classifies inserted/deleted/updated/unchanged") {
     val before = Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "v")
     val after = Seq((2, "B"), (3, "c"), (9, "z")).toDF("k", "v")
@@ -207,6 +196,34 @@ class OpsSpec extends SparkSuite {
     s.unpersist()
   }
 
+  /** The naive canonical enumeration (a<b<c three-way join), the
+    * oracle [[graft.ops.Triangles.perNode]] must agree with exactly. Not
+    * a scale path: its wedge join pays the Σ d(v)² hub fanout the
+    * orientation avoids.
+    */
+  private def perNodeNaive(edges: org.apache.spark.sql.DataFrame, srcCol: String,
+                           dstCol: String): org.apache.spark.sql.DataFrame = {
+    val e = edges
+      .select(least(col(srcCol), col(dstCol)).cast("long").as("a"),
+        greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+      .cache()
+    val deg = e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
+      .groupBy("node").agg(count(lit(1)).as("d"))
+    val tri = e.select(col("a").as("x"), col("b").as("y"))
+      .join(e.select(col("a").as("y"), col("b").as("z")), "y")
+      .join(e.select(col("a").as("x"), col("b").as("z")), Seq("x", "z"))
+    val corners = tri.select(col("x").as("node"))
+      .unionAll(tri.select(col("y").as("node")))
+      .unionAll(tri.select(col("z").as("node")))
+    corners.groupBy("node").agg(count(lit(1)).as("n_tri"))
+      .join(deg, "node")
+      .select(col("node"), col("n_tri"),
+        round(lit(2.0) * col("n_tri") / (col("d") * (col("d") - 1)), 6)
+          .as("clustering"))
+  }
+
   test("Triangles: oriented enumeration == naive; clique/known fixtures exact") {
     // 4-clique {1,2,3,4} + pendant 5 + disjoint path 6-7-8 (no triangle)
     val edges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
@@ -225,7 +242,7 @@ class OpsSpec extends SparkSuite {
       def img(x: org.apache.spark.sql.DataFrame) =
         x.collect().map(_.toSeq).toSet
       assert(img(graft.ops.Triangles.perNode(df, "s", "d")) ==
-        img(graft.ops.Triangles.perNodeNaive(df, "s", "d")))
+        img(perNodeNaive(df, "s", "d")))
     }
   }
 
@@ -379,13 +396,16 @@ class OpsSpec extends SparkSuite {
     val u2 = Seq((1L, "z", 11.0)).toDF("k", "seg", "bal")
     val h2 = Scd2(h1, u2, "k", Seq("seg", "bal"), 2L).cache()
     assert(h2.filter(col("k") === 1).count() == 3)
-    // as-of slices reproduce each point-in-time image
+    // as-of slices (validity-interval filters) reproduce each point-in-time image
+    def asOf(history: org.apache.spark.sql.DataFrame, version: Long) =
+      history.filter(col("valid_from") <= version &&
+        (col("valid_to").isNull || col("valid_to") > version))
     def img(df: org.apache.spark.sql.DataFrame) = df.select("k", "seg", "bal")
       .collect().map(_.toSeq).toSet
-    assert(img(Scd2.asOf(h2, 0)) == v0.collect().map(_.toSeq).toSet)
-    assert(img(Scd2.asOf(h2, 1)) == Set(Seq(1L, "a", 11.0), Seq(2L, "b", 20.0),
+    assert(img(asOf(h2, 0)) == v0.collect().map(_.toSeq).toSet)
+    assert(img(asOf(h2, 1)) == Set(Seq(1L, "a", 11.0), Seq(2L, "b", 20.0),
       Seq(3L, "c", 30.0), Seq(4L, "d", 40.0)))
-    assert(img(Scd2.asOf(h2, 2)) == Set(Seq(1L, "z", 11.0), Seq(2L, "b", 20.0),
+    assert(img(asOf(h2, 2)) == Set(Seq(1L, "z", 11.0), Seq(2L, "b", 20.0),
       Seq(3L, "c", 30.0), Seq(4L, "d", 40.0)))
     // null-safe change detection: null -> value IS a change
     val hn = Scd2.init(Seq((9L, null.asInstanceOf[String], 1.0)).toDF("k", "seg", "bal"), 0L)
@@ -1065,27 +1085,6 @@ class OpsSpec extends SparkSuite {
     val naive = pts.join(iv, col("x") >= col("lo") && col("x") <= col("hi"))
       .select("pid", "iid").collect().map(r => (r.getInt(0), r.getInt(1))).toSet
     assert(binned == naive && binned.nonEmpty)
-  }
-
-  test("TableMaintenance.smallFiles: fragmented partitions flagged, compacted ones clean") {
-    import spark.implicits._
-    val dir = GraftSession.scratchDir("tm_tbl").toString
-    val df = (0 until 2000).map(i => (i.toLong, i % 2, "x" * 50)).toDF("id", "p", "s")
-    // p=0 fragmented into 8 files; p=1 compacted to one
-    df.filter(col("p") === 0).repartition(8)
-      .write.mode("overwrite").parquet(s"$dir/p=0")
-    df.filter(col("p") === 1).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/p=1")
-    val rep = graft.ops.TableMaintenance.smallFiles(spark, dir, targetBytes = 1L << 20)
-      .collect().map(r => r.getString(0) ->
-        (r.getInt(1), r.getLong(2), r.getInt(3), r.getInt(4), r.getBoolean(5))).toMap
-    val (n0, b0, s0, t0, rw0) = rep("p=0")
-    assert(n0 == 8 && s0 == 8 && t0 == 1 && rw0, s"p=0: $rep")
-    assert(b0 > 0)
-    val (n1, _, _, t1, rw1) = rep("p=1")
-    assert(n1 == 1 && t1 == 1 && !rw1, s"p=1: $rep")
-    // underscore/dot bookkeeping files (_SUCCESS, .crc) are not counted
-    assert(rep.keySet == Set("p=0", "p=1"), rep.keySet.toString)
   }
 
   test("Cooccur.orderedGroupPairs: hub fan-out, pairs identical to the naive ordered self-join") {

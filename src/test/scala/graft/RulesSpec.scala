@@ -1,70 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 
 class RulesSpec extends SparkSuite {
   import spark.implicits._
-
-  test("RangeJoinRewrite: BETWEEN join plans without nested loop and matches exact result") {
-    val pts = (0 until 500).map(i => (i, (i * 37 % 1000).toDouble))
-    val ivs = (0 until 40).map(i => (i, i * 31.0, i * 31.0 + 150.0))
-    val pdf = pts.toDF("pid", "x")
-    val idf = ivs.toDF("iid", "lo", "hi")
-    val joined = pdf.join(idf, col("x") >= col("lo") && col("x") <= col("hi"))
-      .select("pid", "iid")
-    val plan = joined.queryExecution.executedPlan
-    assert(plan.collect { case b: BroadcastNestedLoopJoinExec => b }.isEmpty,
-      s"expected binned equi-join, got:\n$plan")
-    val got = joined.collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-    val expected = (for {
-      (pid, x) <- pts
-      (iid, lo, hi) <- ivs
-      if x >= lo && x <= hi
-    } yield (pid, iid)).toSet
-    assert(got == expected && got.nonEmpty)
-  }
-
-  test("RangeJoinRewrite: adaptive width — skewed spans still plan binned and exact") {
-    // No explicit binWidth conf: the rule must probe the interval side
-    // and pick a width from the sampled spans. The distribution is
-    // 500x skewed (many ~12-wide intervals, a few 6000-wide) — a width
-    // mis-sized for either cluster previously degraded to
-    // near-nested-loop work; the median keeps both classes binned.
-    val hadConf = spark.conf.getOption("spark.graft.rangeJoin.binWidth")
-    spark.conf.unset("spark.graft.rangeJoin.binWidth")
-    try {
-      val pts = (0 until 2000).map(i => (i, (i * 97 % 100000).toDouble))
-      val ivs = (0 until 180).map(i => (i, i * 550.0, i * 550.0 + 12.0)) ++
-        (180 until 200).map(i => (i, (i - 180) * 5000.0, (i - 180) * 5000.0 + 6000.0))
-      val pdf = pts.toDF("pid", "x")
-      val idf = ivs.toDF("iid", "lo", "hi")
-      val joined = pdf.join(idf, col("x") >= col("lo") && col("x") <= col("hi"))
-        .select("pid", "iid")
-      val plan = joined.queryExecution.executedPlan
-      assert(plan.collect { case b: BroadcastNestedLoopJoinExec => b }.isEmpty,
-        s"expected binned equi-join under adaptive width, got:\n$plan")
-      val got = joined.collect().map(r => (r.getInt(0), r.getInt(1))).toSet
-      val expected = (for {
-        (pid, x) <- pts
-        (iid, lo, hi) <- ivs
-        if x >= lo && x <= hi
-      } yield (pid, iid)).toSet
-      assert(got == expected && got.nonEmpty)
-    } finally hadConf.foreach(v => spark.conf.set("spark.graft.rangeJoin.binWidth", v))
-  }
-
-  test("RangeJoinRewrite: leaves equi-keyed and non-range joins alone") {
-    val a = Seq((1, 5.0), (2, 6.0)).toDF("k", "v")
-    val b = Seq((1, 4.0, 8.0), (2, 7.0, 9.0)).toDF("k2", "lo", "hi")
-    // equi key present -> untouched (plans as a hash join, results exact)
-    val equi = a.join(b, col("k") === col("k2") &&
-      col("v") >= col("lo") && col("v") <= col("hi"))
-    assert(equi.collect().map(_.getInt(0)).toSeq == Seq(1))
-    // one-sided inequality only -> no BETWEEN pattern, rule must not fire
-    val half = a.join(b, col("v") >= col("lo")) // (5,4) (6,4) match; lo=7 filters both
-    assert(half.count() == 2)
-  }
 
   test("GraftSession.builder: preloaded engine config") {
     // the shared test session is built by GraftSession.builder, so the
@@ -96,14 +35,6 @@ class RulesSpec extends SparkSuite {
     assert(r.getDouble(5) == -1.0)
     assert(math.abs(r.getDouble(6) - 1.0) < 1e-12)
     assert(math.abs(r.getDouble(7) - 0.25) < 1e-12) // (1-.5-.25)*1
-  }
-
-  test("RangeJoinRewrite: fires through SQL text too") {
-    spark.sql("SELECT 1 AS p, 5.0 AS x").createOrReplaceTempView("rj_pts")
-    spark.sql("SELECT 10 AS iid, 1.0 AS lo, 6.0 AS hi").createOrReplaceTempView("rj_ivs")
-    val df = spark.sql(
-      "SELECT p, iid FROM rj_pts JOIN rj_ivs ON x BETWEEN lo AND hi")
-    assert(df.collect().map(r => (r.getInt(0), r.getInt(1))).toSeq == Seq((1, 10)))
   }
 
   test("table functions: SQL surface == Scala API for the dedup/ANN families") {

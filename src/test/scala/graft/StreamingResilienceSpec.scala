@@ -217,22 +217,6 @@ class StreamingResilienceSpec extends SparkSuite {
     }
   }
 
-  test("Misra-Gries streaming summary equals the batch aggregation") {
-    import graft.engine.expressions.MisraGries
-    MisraGries.register(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val events = graft.queries.T.normalizeTs(spark.read.parquet(s"$sf/events.parquet"))
-    val streamed = EventStreams.hourlyHeavyHitters(spark, sf, 8)
-      .selectExpr("hour", "to_json(s) AS s").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    val batch = events
-      .groupBy(window(col("ts"), "1 hour").as("w"))
-      .agg(MisraGries.sketch(col("user_id").cast("string"), 8).as("s"))
-      .selectExpr("date_format(w.start, 'yyyy-MM-dd HH:00:00') AS hour", "to_json(s) AS s")
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(streamed === batch)
-  }
-
   test("RocksDB state store provider yields identical windowed aggregates") {
     val default = EventStreams.hourlyStreaming(spark, sf).collect().toSet
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
