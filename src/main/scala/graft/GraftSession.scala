@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.{CacheManager, CachedData}
   *
   * What it sets and why:
   *  - `spark.sql.extensions = GraftExtensions` — SQL-callable custom
-  *    expressions (dot product, minhash) and the range-join rewrite rule;
+  *    expressions (dot product, minhash); it adds no optimizer rule;
   *  - `spark.sql.shuffle.partitions = cores` for local mode (the 200
   *    default over-partitions a single machine; clusters pass their own);
   *  - AQE `coalescePartitions.minPartitionSize = 16k` — parallelism-first

@@ -5,6 +5,7 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
+import org.apache.spark.graftbridge.StageScope
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
@@ -27,7 +28,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    (AQE may run an extra query-stage job), so each is shown as its
   *    min-max over the reps when the reps disagree;
   *  - `stages` — the summary plus the min-wall rep's per-stage table,
-  *    costliest first;
+  *    costliest first, each stage named by the operator scopes of its
+  *    last RDDs (`WholeStageCodegen (n) -> Exchange`, ...);
   *  - `action` — the formatted executed plan of the query's Nth action
   *    (a mid-loop round of an iterative op, not just its final frame);
   *  - `explain` — the formatted plan of the query's returned frame,
@@ -46,7 +48,9 @@ object Profile {
   /** Runs per measured query, in Bench and in `summary`/`stages`. */
   val Reps = 3
 
-  /** One completed stage's task metrics. */
+  /** One completed stage's task metrics, named by the operator scopes
+    * of its last RDDs ([[StageScope]]).
+    */
   final case class Stage(id: Int, tasks: Int, runMs: Long, cpuMs: Long, gcMs: Long,
                          fetchWaitMs: Long, readB: Long, writeB: Long,
                          spillB: Long, name: String)
@@ -133,7 +137,7 @@ object Profile {
         stages.add(Stage(i.stageId, i.numTasks, m.executorRunTime,
           m.executorCpuTime / 1000000, m.jvmGCTime, m.shuffleReadMetrics.fetchWaitTime,
           m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
-          m.diskBytesSpilled, i.name))
+          m.diskBytesSpilled, StageScope.label(i)))
       }
 
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {

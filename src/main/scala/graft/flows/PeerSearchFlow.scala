@@ -1,10 +1,11 @@
 package graft.flows
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.engine.{functions => F}
 import graft.engine.expressions.DotProduct
-import graft.ops.{Dedup, Indexing, Scale, TopK}
+import graft.ops.TopK
 import graft.queries.T
 
 /** End-to-end re-expression of the reference's flagship entry point
@@ -14,14 +15,17 @@ import graft.queries.T
   *  1. clean: filter + casts (`:342-349`)
   *  2. literal prospect row injected + unionByName (`:464-471`, defect
   *     d7 fixed: arity-correct row)
-  *  3. median imputation of numeric features (`:473-476`)
-  *  4. key dedup (`:484`, deterministic variant)
-  *  5. surrogate ids + seeded batch split (`:486-494`)
-  *  6. weighted min-max features (`:497-524` — the full OHE chain lives
-  *     in feature.FeaturePipeline; this flow uses the SQL-parity scalers)
-  *  7. similarity: L2-normalized feature dot (codegen) blended with
+  *  3. key dedup (`:484`, deterministic variant), as a first-row tag
+  *     whose hash shuffle on the key is also the flow's fan-out
+  *  4. one eager scalar pass: the median that imputes the numeric
+  *     feature (`:473-476`) and the min-max bounds of both features over
+  *     the kept rows, baked into the plan as literals
+  *  5. seeded batch key (`:486-494`) and weighted min-max features
+  *     (`:497-524` — the full OHE chain lives in feature.FeaturePipeline;
+  *     this flow uses the SQL-parity scaler arithmetic)
+  *  6. similarity: L2-normalized feature dot (codegen) blended with
   *     NAICS hops + haversine (`:238-243,310-312`)
-  *  8. per-target top-K + attribute join-back + report sort (`:327-340`)
+  *  7. per-target top-K + attribute join-back + report sort (`:327-340`)
   *
   * Differences by design: no collect-to-driver anywhere (the reference
   * collects the right matrix and the L6/lat/lon lists); batching is a
@@ -37,10 +41,13 @@ object PeerSearchFlow {
   /** Run the full flow; returns the final report frame. */
   def run(spark: SparkSession, sfDir: String, cfg: Config = Config()): DataFrame = {
     DotProduct.register(spark)
+    // one reader for the clean step and the join-back: every
+    // spark.read.parquet runs its own schema job
+    val customer = T(spark, sfDir, "customer")
 
     // 1. clean — drop the sentinel segment (reference drops coname 'RST')
     // and cast features.
-    val raw = T(spark, sfDir, "customer")
+    val raw = customer
       .filter(col("c_name").isNotNull && col("c_acctbal").isNotNull)
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
         col("c_acctbal").cast("double").as("acctbal"), col("c_mktsegment"))
@@ -50,66 +57,64 @@ object PeerSearchFlow {
       lit(-1L).as("c_custkey"), lit("PROSPECT CO").as("c_name"),
       lit(0).cast("int").as("c_nationkey"),
       lit(null).cast("double").as("acctbal"), lit("BUILDING").as("c_mktsegment"))
-    val unioned = raw.unionByName(prospect)
 
-    // 3. median imputation (M1 semantics) of the injected null — EXACT
-    // median (`percentile`, interpolated) instead of ml.Imputer's
-    // approxQuantile: numerically identical apart from even-count
-    // interpolation and, unlike the approx sketch, reproducible by the
-    // DuckDB oracle (`median()` interpolates the same way), which is what
-    // promotes the flagship flow to a full hash-matched query. The
-    // ml.Imputer path stays covered by feature.FeaturePipeline + MlSpec.
-    // The one-row aggregate is pulled EAGERLY and baked in as a literal
-    // (exactly what Imputer.fit does): left lazy in the plan, the agg +
-    // crossJoin re-execute in every downstream branch — both self-join
-    // sides and both minmax stats passes — measured +3.5 s at sf0.1.
-    // This is the evenSplits/A5 scalar-pull pattern, not a data collect.
-    val med = unioned.agg(expr("percentile(acctbal, 0.5)")).head().getDouble(0)
-    val imputed = unioned.withColumn("acctbal_imp", coalesce(col("acctbal"), lit(med)))
-
-    // 4. deterministic key dedup (A1).
-    val deduped = Dedup.firstPerKey(imputed, Seq("c_custkey"), Seq(col("c_name").asc))
-
-    // 5. surrogate ids + seeded batch assignment (O6 parity: randomSplit
-    // replaced by a uniform deterministic batch key — same distribution,
-    // no resampling job per batch).
-    // The unpartitioned row_number window collapses the frame to ONE
-    // partition; everything downstream (feature math, the explosive
-    // similarity join, md5 NAICS synth) would inherit it and run
-    // single-threaded. Fan back out immediately — one tiny shuffle.
-    // Deliberately NOT ops.GlobalRank here: this frame is customer-
-    // dimension scale and feeds ~6 uncached plan branches (both self-join
-    // sides × nested minmax stats); re-executing the two-pass range
-    // machinery per branch measured 3× the whole query (12.8 s vs 4.3 s
-    // at sf0.1), while one 15k-row window task is noise. Fact-scale
-    // callers index once up front with GlobalRank/zipWithIndexOrdered and
-    // cache — not inside a multiply-branched lazy pipeline.
+    // 3. deterministic key dedup (A1): tag the first row per key by name.
+    // The tag's hash shuffle on c_custkey is the flow's only fan-out: an
+    // explicit repartition(n) is a REPARTITION_BY_NUM exchange, which
+    // AQE never coalesces, so the pair blend downstream keeps n tasks
+    // (see the minPartitionSize note in GraftSession) — and the window
+    // reuses it instead of adding a shuffle of its own.
     val n = spark.sessionState.conf.numShufflePartitions
-    val indexed = Indexing.withRowIndex(deduped, "idx", Seq(col("c_custkey").asc))
-      .repartition(n)
-      .withColumn("batch", pmod(hash(col("c_custkey"), lit(cfg.seed)), lit(cfg.minBatch)))
+    val tagged = raw.unionByName(prospect)
+      .repartition(n, col("c_custkey"))
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy("c_custkey").orderBy(col("c_name").asc)))
+    val kept = col("__rn") === 1
 
-    // 6. weighted scaled features (M6/M7): [0.8 * minmax(acctbal), 0.2 *
-    // minmax(nation)] — then L2-normalize for the cosine kernel.
-    val scaled = Scale.minmax(
-      Scale.minmax(indexed, "acctbal_imp", "f_bal"), "c_nationkey", "f_nat")
-      .withColumn("features", array(col("f_bal") * 0.8, col("f_nat") * 0.2))
-    val geo = scaled
-      .withColumn("lat", when(col("c_custkey") % 23 === 0, lit(null).cast("double"))
-        .otherwise(((col("c_custkey") * 13) % 160 - 80 + lit(0.25)).cast("double")))
-      .withColumn("lon", ((col("c_custkey") * 31) % 340 - 170 + lit(0.5)).cast("double"))
-      .withColumn("naics", concat(substring(md5(col("c_mktsegment")), 1, 3),
-        substring(md5(col("c_nationkey").cast("string")), 1, 3)))
-      .withColumn("naics_num", F.hopsCode(col("naics")))
-      .withColumn("nrm", sqrt(DotProduct.dot(col("features"), col("features"))))
-      .withColumn("unit", when(col("nrm") === 0.0, col("features"))
-        .otherwise(transform(col("features"), x => x / col("nrm"))))
-    // NOTE: deliberately NOT cached — measured 2× slower cached (the
-    // InMemoryRelation breaks whole-stage fusion of the downstream
-    // self-join branches; recomputing the narrow 15k-row projection is
-    // cheaper than dematerializing it).
+    // 4. one eager scalar pass over the tagged rows. Median imputation
+    // (M1 semantics) of the injected null uses the EXACT median
+    // (`percentile`, interpolated) over every unioned row, instead of
+    // ml.Imputer's approxQuantile: reproducible by the DuckDB oracle
+    // (`median()` interpolates the same way). The ml.Imputer path stays
+    // covered by feature.FeaturePipeline + MlSpec. The same pass takes
+    // the min-max bounds (M6/M7) of both features over the kept rows;
+    // the imputed feature's bounds take in the median only when a kept
+    // row is null. Baked in as literals (what Imputer.fit and
+    // MinMaxScaler.fit do), the scalars cost one action here instead of
+    // a stats aggregate cross-joined back into every branch of the plan.
+    // This is the evenSplits/A5 scalar-pull pattern, not a data collect.
+    val med = expr("percentile(acctbal, 0.5)")
+    def keptOnly(c: String): Column = when(kept, col(c))
+    val balNull = bool_or(kept && col("acctbal").isNull)
+    val s = tagged.agg(med,
+      when(balNull, least(min(keptOnly("acctbal")), med)).otherwise(min(keptOnly("acctbal"))),
+      when(balNull, greatest(max(keptOnly("acctbal")), med)).otherwise(max(keptOnly("acctbal"))),
+      min(keptOnly("c_nationkey")), max(keptOnly("c_nationkey"))).head()
+    val Seq(median, balMn, balMx, natMn, natMx) = s.schema.indices.map(scalar(s, _))
 
-    // 7-8. similarity + top-K. The reference's batch loop exists to bound
+    // 5. batch key (O6 parity: randomSplit replaced by a uniform
+    // deterministic batch key — same distribution, no resampling job per
+    // batch) and weighted scaled features [0.8 * minmax(acctbal), 0.2 *
+    // minmax(nation)], L2-normalized for the cosine kernel. Not cached:
+    // an InMemoryRelation breaks whole-stage fusion of the self-join
+    // sides, and the narrow projection is cheaper to recompute.
+    val feats = tagged.filter(kept).select(
+      col("c_custkey"), col("c_nationkey"),
+      pmod(hash(col("c_custkey"), lit(cfg.seed)), lit(cfg.minBatch)).as("batch"),
+      array(minmax(coalesce(col("acctbal"), median), balMn, balMx) * 0.8,
+        minmax(col("c_nationkey"), natMn, natMx) * 0.2).as("features"),
+      when(col("c_custkey") % 23 === 0, lit(null).cast("double"))
+        .otherwise(((col("c_custkey") * 13) % 160 - 80 + lit(0.25)).cast("double")).as("lat"),
+      ((col("c_custkey") * 31) % 340 - 170 + lit(0.5)).cast("double").as("lon"),
+      F.hopsCode(concat(substring(md5(col("c_mktsegment")), 1, 3),
+        substring(md5(col("c_nationkey").cast("string")), 1, 3))).as("naics_num"))
+    val nrm = sqrt(DotProduct.dot(col("features"), col("features")))
+    val geo = feats.select(col("c_custkey"), col("c_nationkey"), col("batch"),
+      col("lat"), col("lon"), col("naics_num"),
+      when(nrm === 0.0, col("features"))
+        .otherwise(transform(col("features"), x => x / nrm)).as("unit"))
+
+    // 6-7. similarity + top-K. The reference's batch loop exists to bound
     // the memory of a client-side matmul; here each batch would be a
     // filtered branch of the SAME distributed plan, and since batches
     // partition the TARGETS and top-K/threshold are per-target, the
@@ -117,11 +122,13 @@ object PeerSearchFlow {
     // the join once instead of minBatch times avoids re-executing the
     // whole upstream pipeline per batch (measured 2× at minBatch = 2);
     // the batch column stays on the frame as the audit/parity surface.
+    // The self-pair guard compares keys: after the dedup each c_custkey
+    // names one row.
     val tgt = geo.select(geo.columns.toSeq.map(c => col(c).as(s"t_$c")): _*)
     val src = geo.select(geo.columns.toSeq.map(c => col(c).as(s"s_$c")): _*)
     val pairs = tgt
       .join(src, col("t_c_nationkey") === col("s_c_nationkey") &&
-        col("t_idx") =!= col("s_idx"))
+        col("t_c_custkey") =!= col("s_c_custkey"))
       .select(col("t_c_custkey").as("tgt_custkey"), col("s_c_custkey").as("src_custkey"),
         round(F.blendedScore(
           DotProduct.dot(col("t_unit"), col("s_unit")),
@@ -147,11 +154,19 @@ object PeerSearchFlow {
     // runtime instead of a forced full-table broadcast that would
     // hard-fail past the driver ceiling at 100 TB.
     allPeers
-      .join(T(spark, sfDir, "customer")
-        .select(col("c_custkey").as("src_custkey"), col("c_name").as("src_name"),
+      .join(customer.select(col("c_custkey").as("src_custkey"), col("c_name").as("src_name"),
           col("c_mktsegment").as("src_segment")), Seq("src_custkey"))
       .withColumn("peer_rank", col("peer_rank").cast("int"))
       .select("tgt_custkey", "src_custkey", "score", "peer_rank", "src_name", "src_segment")
       .orderBy(col("tgt_custkey").asc, col("score").desc, col("src_custkey").asc)
   }
+
+  /** Row `s`'s field `i` as a literal of its own type (null included). */
+  private def scalar(s: Row, i: Int): Column = lit(s.get(i)).cast(s.schema(i).dataType)
+
+  /** `Scale.minmax`'s arithmetic over literal bounds: (x − mn)/(mx − mn),
+    * 0.5 for a constant column, null when a bound is null.
+    */
+  private def minmax(x: Column, mn: Column, mx: Column): Column =
+    when(mx === mn, lit(0.5)).otherwise((x - mn) / (mx - mn))
 }

@@ -149,6 +149,39 @@ class PlanShapeSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("q44 plans linear: no nested-loop join, no global window, customer read at most twice, at most 12 jobs") {
+    // The flow's scalars (median, min-max bounds) come from one eager
+    // pass baked in as literals. A lazy stats aggregate cross-joined back
+    // shows as a BroadcastNestedLoopJoin and re-runs the customer prefix
+    // once per branch; a surrogate row index shows as a Window with no
+    // partition spec, every customer through one task.
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val df = q("q44_peer_search_flow")
+    val p = planOf(df)
+    val plan = df.queryExecution.executedPlan
+    val nestedLoops = collectWithSubqueries(plan) { case j: BroadcastNestedLoopJoinExec => j }
+    assert(nestedLoops.isEmpty, s"q44 cross-joins a stats row back:\n${p.take(3000)}")
+    val globalWindows = collectWithSubqueries(plan) {
+      case w: WindowExec if w.partitionSpec.isEmpty => w
+    }
+    assert(globalWindows.isEmpty, s"q44 windows over one partition:\n${p.take(3000)}")
+    val customerScans = collectWithSubqueries(plan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.getName == "customer.parquet") => s
+    }.size
+    assert(customerScans <= 2, s"q44 scans customer $customerScans times:\n${p.take(3000)}")
+    val jobs = Profile.recording(spark) { rec =>
+      rec.reset()
+      q("q44_peer_search_flow").count()
+      rec.drain()
+      rec.counters.jobs
+    }
+    info(s"q44 count(): $jobs jobs")
+    assert(jobs <= 12, s"q44 ran $jobs jobs")
+  }
+
   test("bloom-pruned join filters the fact scan below the join") {
     // the resolved expression renders as might_contain(<sketch literal>)
     val p = planOf(q("q95_bloom_join"))
