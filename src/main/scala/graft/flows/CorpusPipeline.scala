@@ -61,8 +61,8 @@ object CorpusPipeline {
         .otherwise("val").as("split"))
   }
 
-  /** The corpus-side canonical composition (the batch twin of the
-    * streaming IncrementalDedup→decontaminate→pack chain): near-dup
+  /** The corpus-side canonical composition (dedup → decontaminate →
+    * pack in one plan): near-dup
     * clusters → one canonical doc per cluster → decontaminate against
     * the eval holdout → concat-and-chunk pack layout. One oracled flow
     * (q200) over four operators:

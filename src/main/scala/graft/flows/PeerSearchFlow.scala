@@ -20,26 +20,30 @@ import graft.queries.T
   *  4. one eager scalar pass: the median that imputes the numeric
   *     feature (`:473-476`) and the min-max bounds of both features over
   *     the kept rows, baked into the plan as literals
-  *  5. seeded batch key (`:486-494`) and weighted min-max features
-  *     (`:497-524` — the full OHE chain lives in feature.FeaturePipeline;
-  *     this flow uses the SQL-parity scaler arithmetic)
+  *  5. weighted min-max features (`:497-524` — the full OHE chain
+  *     lives in feature.FeaturePipeline; this flow uses the SQL-parity
+  *     scaler arithmetic)
   *  6. similarity: L2-normalized feature dot (codegen) blended with
   *     NAICS hops + haversine (`:238-243,310-312`)
   *  7. per-target top-K + attribute join-back + report sort (`:327-340`)
   *
   * Differences by design: no collect-to-driver anywhere (the reference
-  * collects the right matrix and the L6/lat/lon lists); batching is a
-  * knob, not a memory requirement — each batch is a filtered branch of
-  * one distributed plan, unioned back (`O5`/`O6` parity).
+  * collects the right matrix and the L6/lat/lon lists), and no batch
+  * loop (`:486-494`): the reference batches the targets to bound the
+  * memory of a client-side matmul, while here the pairs are one
+  * distributed join, and top-K and the threshold are per target, so
+  * one unbatched join is row-identical to the union over batches.
   */
 object PeerSearchFlow {
 
-  case class Config(wHops: Double = 0.399, wHavs: Double = 0.001,
-                    topK: Int = 15, minBatch: Int = 1, seed: Long = 100L,
-                    threshold: Double = 0.0)
+  // the reference's blend weights, peers per target and score floor
+  private val WHops = 0.399
+  private val WHavs = 0.001
+  private val TopKPeers = 15
+  private val Threshold = 0.0
 
   /** Run the full flow; returns the final report frame. */
-  def run(spark: SparkSession, sfDir: String, cfg: Config = Config()): DataFrame = {
+  def run(spark: SparkSession, sfDir: String): DataFrame = {
     DotProduct.register(spark)
     // one reader for the clean step and the join-back: every
     // spark.read.parquet runs its own schema job
@@ -92,15 +96,12 @@ object PeerSearchFlow {
       min(keptOnly("c_nationkey")), max(keptOnly("c_nationkey"))).head()
     val Seq(median, balMn, balMx, natMn, natMx) = s.schema.indices.map(scalar(s, _))
 
-    // 5. batch key (O6 parity: randomSplit replaced by a uniform
-    // deterministic batch key — same distribution, no resampling job per
-    // batch) and weighted scaled features [0.8 * minmax(acctbal), 0.2 *
+    // 5. weighted scaled features [0.8 * minmax(acctbal), 0.2 *
     // minmax(nation)], L2-normalized for the cosine kernel. Not cached:
     // an InMemoryRelation breaks whole-stage fusion of the self-join
     // sides, and the narrow projection is cheaper to recompute.
     val feats = tagged.filter(kept).select(
       col("c_custkey"), col("c_nationkey"),
-      pmod(hash(col("c_custkey"), lit(cfg.seed)), lit(cfg.minBatch)).as("batch"),
       array(minmax(coalesce(col("acctbal"), median), balMn, balMx) * 0.8,
         minmax(col("c_nationkey"), natMn, natMx) * 0.2).as("features"),
       when(col("c_custkey") % 23 === 0, lit(null).cast("double"))
@@ -109,21 +110,13 @@ object PeerSearchFlow {
       F.hopsCode(concat(substring(md5(col("c_mktsegment")), 1, 3),
         substring(md5(col("c_nationkey").cast("string")), 1, 3))).as("naics_num"))
     val nrm = sqrt(DotProduct.dot(col("features"), col("features")))
-    val geo = feats.select(col("c_custkey"), col("c_nationkey"), col("batch"),
+    val geo = feats.select(col("c_custkey"), col("c_nationkey"),
       col("lat"), col("lon"), col("naics_num"),
       when(nrm === 0.0, col("features"))
         .otherwise(transform(col("features"), x => x / nrm)).as("unit"))
 
-    // 6-7. similarity + top-K. The reference's batch loop exists to bound
-    // the memory of a client-side matmul; here each batch would be a
-    // filtered branch of the SAME distributed plan, and since batches
-    // partition the TARGETS and top-K/threshold are per-target, the
-    // union over batches is row-identical to one unbatched join. Running
-    // the join once instead of minBatch times avoids re-executing the
-    // whole upstream pipeline per batch (measured 2× at minBatch = 2);
-    // the batch column stays on the frame as the audit/parity surface.
-    // The self-pair guard compares keys: after the dedup each c_custkey
-    // names one row.
+    // 6-7. similarity + top-K. The self-pair guard compares keys: after
+    // the dedup each c_custkey names one row.
     val tgt = geo.select(geo.columns.toSeq.map(c => col(c).as(s"t_$c")): _*)
     val src = geo.select(geo.columns.toSeq.map(c => col(c).as(s"s_$c")): _*)
     val pairs = tgt
@@ -134,8 +127,9 @@ object PeerSearchFlow {
           DotProduct.dot(col("t_unit"), col("s_unit")),
           F.hopsScoreHex(col("t_naics_num"), col("s_naics_num")),
           F.haversineScore(col("t_lat"), col("t_lon"), col("s_lat"), col("s_lon")),
-          cfg.wHops, cfg.wHavs), 6).as("score"))
-    // Threshold AFTER the rank window, not before: ordering is score-desc,
+          WHops, WHavs), 6).as("score"))
+    // Threshold AFTER the rank window, not before (scores can be
+    // negative, so the floor drops rows): ordering is score-desc,
     // so {score>=th then top-K} and {top-K then score>=th} keep the same
     // rows with the same ranks — but a pre-window filter gets pushed
     // below the projection and re-evaluates the whole blend per pair,
@@ -145,8 +139,8 @@ object PeerSearchFlow {
     // prunes ~600-candidate groups to 15 BEFORE the shuffle — measured
     // faster than the repartition-first form at sf0.1.
     val allPeers = TopK.exactPerKey(pairs, Seq("tgt_custkey"),
-        Seq(col("score").desc, col("src_custkey").asc), cfg.topK, "peer_rank")
-      .filter(col("score") >= cfg.threshold)
+        Seq(col("score").desc, col("src_custkey").asc), TopKPeers, "peer_rank")
+      .filter(col("score") >= Threshold)
 
     // attribute join-back (J1) + report sort (O1). No broadcast hint:
     // customer grows with scale factor, while allPeers is bounded at

@@ -36,13 +36,11 @@ object TrainingPrep {
 
   /** Stages 2–6 over an already-deduped frame, given the contaminated-id
     * set: per-row holdout/repetition/mixing/normalization plus the one
-    * anti-join. Shared verbatim between the one-shot batch run and the
-    * streaming continuation ([[graft.streaming.ContinuousTrainingPrep]])
-    * so the two paths agree by construction, not by parallel maintenance.
+    * anti-join.
     *
     * @return (doc_id, n) — normalized kept-token counts, empty docs gone
     */
-  def normalizedCounts(deduped: DataFrame, contaminated: DataFrame,
+  private def normalizedCounts(deduped: DataFrame, contaminated: DataFrame,
                        cfg: Config): DataFrame = {
     val toks = TextOps.tokenize(col("text"))
 

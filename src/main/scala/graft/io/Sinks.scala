@@ -23,15 +23,6 @@ object Sinks {
   def parquet(df: DataFrame, dir: String, mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).parquet(dir)
 
-  /** Partitioned parquet layout: directory-per-value on `partitionCols`,
-    * so downstream scans with matching predicates prune whole partitions
-    * at planning time (the S4 date-partition pattern, generalized — the
-    * primary pruning lever at 100 TB).
-    */
-  def parquetPartitioned(df: DataFrame, dir: String, partitionCols: Seq[String],
-                         mode: SaveMode = SaveMode.Overwrite): Unit =
-    df.write.mode(mode).partitionBy(partitionCols: _*).parquet(dir)
-
   /** ORC sink (columnar alternative; same writer surface as parquet). */
   def orc(df: DataFrame, dir: String, mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).orc(dir)

@@ -39,11 +39,10 @@ object Decontaminate {
       idCol, textCol, n, bloomPrefilter, fpp)
 
   /** Two-frame form: ids of `train` documents sharing ≥1 n-gram with
-    * `evalDocs` — the benchmark set as its own table, fixed up front.
-    * This is the incremental-ingestion shape (ContinuousTrainingPrep):
-    * each arriving corpus slice is checked against the same static eval
-    * set, so batch and streaming runs agree exactly. `contaminatedIds`
-    * is this with the corpus partitioned by a predicate.
+    * `evalDocs` — the benchmark set as its own table, fixed up front,
+    * as [[graft.flows.CorpusPipeline]] checks its canonical corpus.
+    * `contaminatedIds` is this with the corpus partitioned by a
+    * predicate.
     */
   def contaminatedIdsAgainst(train: DataFrame, evalDocs: DataFrame,
                              idCol: String, textCol: String, n: Int = 3,

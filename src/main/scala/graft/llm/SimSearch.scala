@@ -18,9 +18,9 @@ import graft.ops.{ExactSum, TopK}
   *    the corpus, one distributed pass, per-query top-K via group-limit.
   *    Right shape whenever queries ≪ corpus; linear in corpus size, no
   *    corpus shuffle.
-  *  - [[ivfTopK]]: IVF-style — deterministic centroids, corpus bucketed
-  *    by nearest centroid, queries probe only `nProbe` buckets.
-  *    Sub-linear scan cost at large n.
+  *  - [[ivfTopKLloyd]]: IVF-style — deterministic learned centroids,
+  *    corpus bucketed by nearest centroid, queries probe only `nProbe`
+  *    buckets. Sub-linear scan cost at large n.
   */
 object SimSearch {
 
@@ -221,40 +221,20 @@ object SimSearch {
               embCol: String, k: Int): DataFrame =
     sq8TopKEncoded(sq8Encode(corpus, idCol, embCol), queries, idCol, embCol, k)
 
-  /** IVF-bucketed approximate top-K: assign every corpus vector to its
-    * nearest of `nCentroids` centroids (deterministically the first
-    * vectors under id order — a k-means seeding stand-in), then scan
-    * only the query's `nProbe` nearest buckets.
-    */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-              embCol: String, k: Int, nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    val c = unitized(corpus, idCol, embCol, idCol, "__ne")
-    ivfWithCentroids(c, queries, seedCentroids(corpus, idCol, embCol, nCentroids),
-      idCol, embCol, k, nProbe)
-  }
-
-  /** The deterministic id-order centroid seeding [[ivfTopK]] buckets
-    * with — public so an external index (streaming.IncrementalIvf) can
-    * bucket with IDENTICAL centroids and match the batch path exactly.
-    */
-  private[graft] def seedCentroids(corpus: DataFrame, idCol: String, embCol: String,
-                                   nCentroids: Int): DataFrame =
-    unitized(corpus, idCol, embCol, idCol, "__ne")
-      .orderBy(col(idCol)).limit(nCentroids)
-      .select(col(idCol).as("cent_id"), col("__ne").as("cent_emb"))
-
-  /** [[ivfTopK]] with LEARNED centroids and a FULL HASH ORACLE: id-order
-    * seeding refined by `iters` deterministic spherical-Lloyd steps.
+  /** IVF-bucketed approximate top-K with LEARNED centroids and a FULL
+    * HASH ORACLE: every corpus vector goes to its nearest of
+    * `nCentroids` centroids, and a query scans only its `nProbe`
+    * nearest buckets. The centroids are id-order seeds (the first
+    * vectors under id order) refined by `iters` deterministic
+    * spherical-Lloyd steps.
     * Every arithmetic step is exact across engines — assignment by the
     * left-to-right dot product, per-bucket mean as exact scaled-integer
     * sums ([[bucketMeans]]), then L2-renormalized —
     * so a SQL twin replays the exact double bits and the bucket
     * decisions can never diverge at float boundaries. Empty buckets
-    * keep their previous centroid. [[ivfTopKKMeans]] (KMeans‖ init,
-    * MLlib fit) stays the scale path: its centroids are data-dependent
-    * in a way no static SQL literal can mirror (measured: 89/100 result
-    * rows differ from id-order seeding at sf0.01), which is exactly why
-    * this oracle-compatible learned variant exists.
+    * keep their previous centroid. [[kmeansParRows]] seeding is the
+    * data-dependent alternative: its centroids depend on the data in a
+    * way no static SQL literal can mirror.
     */
   def ivfTopKLloyd(corpus: DataFrame, queries: DataFrame, idCol: String,
                    embCol: String, k: Int, nCentroids: Int = 16, nProbe: Int = 4,
@@ -333,13 +313,26 @@ object SimSearch {
     * [[ivfTopKLloyd]] centroid discipline, shared with [[ivfPqTopK]]'s
     * coarse quantizer. Returns (cent_id, cent_emb), materialized.
     */
-  private[graft] def lloydCentroids(c: DataFrame, idCol: String,
-                                    nCentroids: Int, iters: Int): DataFrame =
-    lloydIterate(c,
-      c.orderBy(col(idCol)).limit(nCentroids)
-        .select(col(idCol).as("cent_id"), col("__ne").as("cent_emb")),
-      idCol, iters)
-
+  private def lloydCentroids(c: DataFrame, idCol: String,
+                             nCentroids: Int, iters: Int): DataFrame = {
+    var cents = c.orderBy(col(idCol)).limit(nCentroids)
+      .select(col(idCol).as("cent_id"), col("__ne").as("cent_emb"))
+    for (_ <- 0 until iters) {
+      val assigned = nearestBuckets(c, cents, idCol, "__ne", 1)
+      val refined = bucketMeans(assigned)
+      // Materialize each refined centroid set (nCentroids rows — tiny).
+      // Unmaterialized, iteration i+1's assignment AND the final bucket
+      // + probe stages each re-run every prior iteration's |corpus|
+      // assignment join from scratch (the q101 codebook lesson); with
+      // the eager cache each Lloyd pass executes exactly once.
+      val next = cents.join(refined, Seq("cent_id"), "left")
+        .select(col("cent_id"), coalesce(col("__new"), col("cent_emb")).as("cent_emb"))
+        .cache()
+      next.count()
+      cents = next
+    }
+    cents
+  }
   /** KMeans‖ seeding (Bahmani et al., "Scalable K-Means++", VLDB'12
     * §3.3) over the unit sphere — the distributed, weighted seeding
     * that replaces id-order seeds at real scale. Id-order seeding
@@ -363,8 +356,7 @@ object SimSearch {
     * (seed, step). Same discipline as the id-order paths, so runs
     * reproduce across cluster sizes; unlike them the RESULT depends on
     * the data distribution, which is the point and also why the
-    * DuckDB-oracled queries keep the id-order twins (the
-    * [[ivfTopKKMeans]] precedent).
+    * DuckDB-oracled queries keep the id-order twins.
     *
     * Scale shape: 2 passes over the corpus per round (φ aggregate +
     * sample filter) and one weighting pass — all map-side against a
@@ -376,7 +368,7 @@ object SimSearch {
     *
     * @param c unitized corpus (`idCol`, `__ne`)
     * @return (cent_id ∈ [0, k), cent_emb) — k unit-normalized seeds,
-    *         ready for [[lloydIterate]] or [[ivfWithCentroids]]
+    *         ready for [[ivfWithCentroids]]
     */
   private[graft] def kmeansParRows(c: DataFrame, idCol: String, k: Int,
                                    rounds: Int = 4, oversample: Double = 2.0,
@@ -404,9 +396,9 @@ object SimSearch {
         .map(r => (String.valueOf(r.get(0)),
           r.getSeq[Double](1).toArray))
         .sortBy(_._1) // collect order is partition order — re-sort
-    // first candidate: deterministic pseudo-random row (hash-min, the
-    // pqTrainBooks spreadSeeds discipline), never id-min — id order is
-    // exactly the bias this seeding exists to escape
+    // first candidate: deterministic pseudo-random row (hash-min),
+    // never id-min — id order is exactly the bias this seeding exists
+    // to escape
     var cands = rowsOf(c
       .orderBy(xxhash64(col(idCol).cast("string"), lit(seed)), col(idCol))
       .limit(1).select(col(idCol).cast("string"), col("__ne")))
@@ -502,31 +494,6 @@ object SimSearch {
       .toDF("cent_id", "cent_emb")
   }
 
-  /** The Lloyd refinement loop from arbitrary `seeds` (cent_id,
-    * cent_emb) — shared by [[lloydCentroids]] (id-order seeding) and
-    * the streaming index's centroid refresh (seeded from the current
-    * assignment's bucket means).
-    */
-  private[graft] def lloydIterate(c: DataFrame, seeds: DataFrame,
-                                  idCol: String, iters: Int): DataFrame = {
-    var cents = seeds
-    for (_ <- 0 until iters) {
-      val assigned = nearestBuckets(c, cents, idCol, "__ne", 1)
-      val refined = bucketMeans(assigned)
-      // Materialize each refined centroid set (nCentroids rows — tiny).
-      // Unmaterialized, iteration i+1's assignment AND the final bucket
-      // + probe stages each re-run every prior iteration's |corpus|
-      // assignment join from scratch (the q101 codebook lesson); with
-      // the eager cache each Lloyd pass executes exactly once.
-      val next = cents.join(refined, Seq("cent_id"), "left")
-        .select(col("cent_id"), coalesce(col("__new"), col("cent_emb")).as("cent_emb"))
-        .cache()
-      next.count()
-      cents = next
-    }
-    cents
-  }
-
   /** Per-bucket unit-normalized means of an assignment frame
     * (id, __ne, bucket) → (cent_id, __new): per-component
     * [[graft.ops.ExactSum]] sums divided by the exact integer count,
@@ -563,28 +530,6 @@ object SimSearch {
           .as("__sum"))
       .select(col("m"), col("code"),
         transform(col("__sum"), s => ExactSum.value(s) / col("__cnt")).as("__new"))
-
-  /** [[ivfTopK]] with LEARNED centroids: a seeded MLlib KMeans fit
-    * replaces the id-order seeding stand-in — the real centroid path at
-    * scale (KMeans‖ init, one distributed fit, deterministic for a given
-    * data + seed). Probe machinery is shared with [[ivfTopK]].
-    */
-  def ivfTopKKMeans(corpus: DataFrame, queries: DataFrame, idCol: String,
-                    embCol: String, k: Int, nCentroids: Int = 16, nProbe: Int = 4,
-                    seed: Long = 42L): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val c = unitized(corpus, idCol, embCol, idCol, "__ne")
-    val model = new KMeans().setK(nCentroids).setSeed(seed)
-      .setFeaturesCol("__v")
-      .fit(c.select(array_to_vector(col("__ne")).as("__v")))
-    val session = corpus.sparkSession
-    import session.implicits._
-    val cents = model.clusterCenters.zipWithIndex.toSeq
-      .map { case (v, i) => (i.toLong, v.toArray) }
-      .toDF("cent_id", "cent_emb")
-    ivfWithCentroids(c, queries, cents, idCol, embCol, k, nProbe)
-  }
 
   /** Doubles cap on the flattened-codebook plan literal of the n = 1
     * fast path (nCentroids · dim). The default (2²² = 4.19 M doubles,
@@ -674,7 +619,7 @@ object SimSearch {
   }
 
   /** Probe the bucketed corpus with probed queries, rank exact cosine. */
-  private[graft] def probeRank(probed: DataFrame, bucketed: DataFrame,
+  private def probeRank(probed: DataFrame, bucketed: DataFrame,
                         idCol: String, k: Int): DataFrame = {
     val pairs = probed.join(bucketed, Seq("bucket"))
       .filter(col(idCol) =!= col("query_id"))
@@ -695,14 +640,14 @@ object SimSearch {
   }
 
   /** ORACLE-replayable BUILD of the build-once / probe-many serving
-    * shape (r18 verdict item 4): same bucket-partitioned postings
-    * layout as [[buildIvfIndex]] (probes prune to `nProbe` posting
-    * directories), but with [[ivfTopKLloyd]]'s exact-sum Lloyd
-    * centroids instead of KMeans‖ — so a [[queryIvfIndex]] probe over
-    * the PERSISTED index is bit-identical to the in-memory
-    * [[ivfTopKLloyd]] answer and a SQL twin can hash-gate both halves
-    * (q313 gates the on-disk assignment, q314's oracle is literally
-    * q43's SQL). [[ivfTopKLloyd]] retrains inside every call — right
+    * shape (r18 verdict item 4): learned centroids plus
+    * bucket-PARTITIONED postings parquet, one partition directory per
+    * posting list, so probes prune to `nProbe` posting directories.
+    * The centroids are [[ivfTopKLloyd]]'s exact-sum Lloyd ones, so a
+    * [[queryIvfIndex]] probe over the PERSISTED index is bit-identical
+    * to the in-memory [[ivfTopKLloyd]] answer and a SQL twin can
+    * hash-gate both halves (q313 gates the on-disk assignment, q314's
+    * oracle is literally q43's SQL). [[ivfTopKLloyd]] retrains inside every call — right
     * for a one-shot, wrong for serving, where build cost must amortize
     * across query batches.
     */
@@ -760,8 +705,8 @@ object SimSearch {
     * argmax map against per-subspace flattened codebook literals —
     * see [[assignNearestCode]].
     */
-  private[graft] def pqNearestCode(points: DataFrame, books: DataFrame,
-                                   id: String): DataFrame =
+  private def pqNearestCode(points: DataFrame, books: DataFrame,
+                            id: String): DataFrame =
     assignNearestCode(points, books, id, l2 = false)
 
   /** Top-1 codeword per (id, m) row of `points` (id, m, sv) against the
@@ -858,24 +803,18 @@ object SimSearch {
   /** PQ codebook training: id-order seeds (subvectors of the nCodes
     * lowest ids, code = seed id) refined by `iters` subspace Lloyd
     * passes of exact per-(m, code) means ([[codeMeans]]) — the
-    * [[pqTopK]] discipline factored out so the streaming
-    * store ([[graft.streaming.IncrementalPq]]) retrains with the exact
-    * batch semantics. `c` is the unitized (id, __ne) corpus, `subs` its
-    * [[pqSubSplit]] (cached by the caller — read once per pass).
+    * [[pqTopK]] discipline. `c` is the unitized (id, __ne) corpus,
+    * `subs` its [[pqSubSplit]] (cached by the caller — read once per
+    * pass).
     *
     * @return (m, code, ce) codebook rows, materialized (tiny)
     */
   private[graft] def pqTrainBooks(c: DataFrame, subs: DataFrame, idCol: String,
                                   nSub: Int, subDim: Int, nCodes: Int,
                                   iters: Int,
-                                  spreadSeeds: Boolean = false,
                                   kmeansParSeed: Option[Long] = None): DataFrame = {
-    // Seeding: lowest-id rows (the q101-oracled batch discipline), or —
-    // for retraining a store whose ids correlate with ARRIVAL ORDER —
-    // lowest-xxhash64 rows: a deterministic pseudo-random sample spread
-    // across the whole stored distribution, so a drifted tail is
-    // represented in the seeds instead of only the oldest vectors.
-    // Both are distributed partial top-k (orderBy+limit), never a sort.
+    // Seeding: lowest-id rows (the q101-oracled batch discipline), a
+    // distributed partial top-k (orderBy+limit), never a sort.
     // `kmeansParSeed` upgrades to the [[kmeansParRows]] weighted sample
     // (one full-vector KMeans‖ run shared by all nSub subspaces — rows
     // diverse in the full space are diverse in each slice, at 1/nSub
@@ -885,9 +824,7 @@ object SimSearch {
       case Some(s) => kmeansParRows(c, idCol, nCodes, seed = s)
         .select(col("cent_id").as("code"), col("cent_emb").as("__ne"))
       case None =>
-        (if (spreadSeeds) c.orderBy(xxhash64(col(idCol)), col(idCol)).limit(nCodes)
-         else c.orderBy(col(idCol)).limit(nCodes))
-          .withColumnRenamed(idCol, "code")
+        c.orderBy(col(idCol)).limit(nCodes).withColumnRenamed(idCol, "code")
     }
     var books = pqSubSplit(
       seedRows,
@@ -909,14 +846,13 @@ object SimSearch {
     books
   }
 
-  /** ADC top-K over an already-encoded corpus: `codes` is (id, m, code)
-    * — the compressed representation, whether just built ([[pqTopK]])
-    * or read back from a persisted store.
+  /** ADC top-K over an already-encoded corpus: `codes` is (id, m, code),
+    * the compressed representation [[pqTopK]] just built.
     */
-  private[graft] def pqAdcTopK(codes: DataFrame, books: DataFrame,
-                               queries: DataFrame, idCol: String,
-                               embCol: String, k: Int, nSub: Int,
-                               subDim: Int): DataFrame = {
+  private def pqAdcTopK(codes: DataFrame, books: DataFrame,
+                        queries: DataFrame, idCol: String,
+                        embCol: String, k: Int, nSub: Int,
+                        subDim: Int): DataFrame = {
     val qsubs = pqSubSplit(unitized(queries, idCol, embCol, "query_id", "__qe"),
       "query_id", "__qe", nSub, subDim)
     // ADC lookup table — bounded by |queries|·nSub·nCodes, broadcast it
@@ -1115,36 +1051,10 @@ object SimSearch {
     bins.flatten.toArray
   }
 
-  /** Persist an IVF index: learned centroids + bucket-PARTITIONED
-    * postings parquet. The layout is the scale feature — each posting
-    * list is its own partition directory, so a query batch probing
-    * `nProbe` of `nCentroids` buckets reads only that fraction of the
-    * index files (partition pruning on the `bucket` join/filter), and
-    * index build cost amortizes across every later query batch.
-    */
-  def buildIvfIndex(corpus: DataFrame, idCol: String, embCol: String,
-                    path: String, nCentroids: Int = 16, seed: Long = 42L): Unit = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val c = unitized(corpus, idCol, embCol, idCol, "__ne").cache()
-    val model = new KMeans().setK(nCentroids).setSeed(seed)
-      .setFeaturesCol("__v")
-      .fit(c.select(array_to_vector(col("__ne")).as("__v")))
-    val session = corpus.sparkSession
-    import session.implicits._
-    val cents = model.clusterCenters.zipWithIndex.toSeq
-      .map { case (v, i) => (i.toLong, v.toArray) }
-      .toDF("cent_id", "cent_emb")
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    nearestBuckets(c, cents, idCol, "__ne", 1)
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/postings")
-    c.unpersist()
-  }
-
-  /** Query a [[buildIvfIndex]] layout: probe `nProbe` buckets, rank
-    * exact cosine within them. Identical results to [[ivfTopKKMeans]]
-    * with the same centroid config (spec-pinned) — minus the per-batch
-    * assignment pass, plus posting-file pruning.
+  /** Query a [[buildIvfIndexLloyd]] layout: probe `nProbe` buckets,
+    * rank exact cosine within them. Identical results to
+    * [[ivfTopKLloyd]] with the same centroid config (q314's oracle) —
+    * minus the per-batch assignment pass, plus posting-file pruning.
     */
   def queryIvfIndex(queries: DataFrame, idCol: String, embCol: String,
                     path: String, k: Int, nProbe: Int = 4): DataFrame = {
@@ -1330,7 +1240,7 @@ object SimSearch {
 
   /** All pairs above a cosine threshold within a (filtered) corpus —
     * embedding near-dup detection. Quadratic in the filtered size; the
-    * scale path buckets first ([[ivfTopK]] or [[hyperplaneLshPairs]]).
+    * scale path buckets first ([[ivfTopKLloyd]] or [[hyperplaneLshPairs]]).
     */
   def thresholdPairs(corpus: DataFrame, idCol: String, embCol: String,
                      minCos: Double): DataFrame = {
@@ -1339,54 +1249,6 @@ object SimSearch {
     a.join(b, col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"),
         round(dot(col("__ea"), col("__eb")), 6).as("cos_sim"))
-      .filter(col("cos_sim") >= minCos)
-  }
-
-  /** EXACT threshold pairs when BOTH sides are large and approximation is
-    * not allowed — the distributed block-matmul mode of the reference's
-    * client-side `sim_matrix = features @ right.T` batching
-    * (`search_ranking_peers.py:210-224,238-243`), re-expressed as
-    * `mllib.linalg.distributed.BlockMatrix`: unit-normalize once, assign
-    * contiguous row indices (zipWithIndex — no single-task window), then
-    * A·Aᵀ block-by-block. Every (blockSize × blockSize) output tile is an
-    * independent task (local BLAS gemm), so the O(n²·d) work spreads over
-    * the whole cluster and only tiles — never a collected matrix — exist
-    * at once; entries stream through the threshold filter immediately.
-    *
-    * Exactness note: BLAS accumulates in a different order than the
-    * engine's sequential-fold [[dot]], so `cos_sim` may differ from
-    * [[thresholdPairs]] in the last ulp (LlmOpsSpec pins pair-set
-    * equality and ≤1e-9 score agreement). For oracle-hash surfaces use
-    * [[thresholdPairs]] / [[hyperplaneLshPairs]]; this is the
-    * exact-mode scale path.
-    *
-    * Cost is inherently quadratic — right when the THRESHOLD must be
-    * exact over all pairs; prefer the LSH/IVF paths whenever bounded
-    * recall is acceptable (SCALE.md).
-    */
-  def thresholdPairsBlocked(corpus: DataFrame, idCol: String, embCol: String,
-                            minCos: Double, blockSize: Int = 1024): DataFrame = {
-    import org.apache.spark.mllib.linalg.Vectors
-    import org.apache.spark.mllib.linalg.distributed.{IndexedRow, IndexedRowMatrix}
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val c = unitized(corpus, idCol, embCol, idCol, "__ne")
-    // Contiguous 0-based indices in id order: index order is id order, so
-    // the i<j triangle filter below is exactly the id_a<id_b convention.
-    val indexed = graft.ops.Indexing.zipWithIndexOrdered(
-      c, "__ix", Seq(col(idCol).asc)).cache()
-    val rows = indexed.select(col("__ix"), col("__ne")).rdd.map { r =>
-      IndexedRow(r.getLong(0), Vectors.dense(r.getSeq[Double](1).toArray))
-    }
-    val mat = new IndexedRowMatrix(rows).toBlockMatrix(blockSize, blockSize).cache()
-    val entries = mat.multiply(mat.transpose).toCoordinateMatrix().entries
-    val sims = entries.filter(e => e.i < e.j && e.value >= minCos - 1e-9)
-      .map(e => (e.i, e.j, e.value)).toDF("__ia", "__ib", "__cos")
-    val idMap = indexed.select(col("__ix"), col(idCol))
-    sims
-      .join(idMap.select(col("__ix").as("__ia"), col(idCol).as("id_a")), "__ia")
-      .join(idMap.select(col("__ix").as("__ib"), col(idCol).as("id_b")), "__ib")
-      .select(col("id_a"), col("id_b"), round(col("__cos"), 6).as("cos_sim"))
       .filter(col("cos_sim") >= minCos)
   }
 

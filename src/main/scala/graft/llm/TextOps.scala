@@ -11,21 +11,13 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** Whitespace tokenization (the engine's canonical split; a BPE-ish
-    * regex variant is [[tokenizeRegex]]).
+  /** Whitespace tokenization (the engine's canonical split; the BPE-ish
+    * variant is [[tokenizeBpe]]).
     */
   def tokenize(text: Column): Column = split(text, " ")
 
-  /** Regex tokenization: letter runs, digit runs, or single non-space
-    * symbols — a deterministic BPE-ish pre-tokenizer.
-    */
-  def tokenizeRegex(text: Column): Column =
-    filter(split(text,
-      "(?<=[A-Za-z])(?=[0-9])|(?<=[0-9])(?=[A-Za-z])|(?<=[^A-Za-z0-9])|(?=[^A-Za-z0-9])"),
-      t => t =!= "" && t =!= " ")
-
-  /** Extraction-form BPE-ish tokenizer: same token classes as
-    * [[tokenizeRegex]] but via `regexp_extract_all` — RE2-compatible (no
+  /** BPE-ish pre-tokenizer: letter runs, digit runs, or single
+    * non-space symbols, via `regexp_extract_all` — RE2-compatible (no
     * lookarounds), so the identical pattern runs in engines without PCRE
     * (and in the DuckDB oracle).
     */

@@ -73,46 +73,11 @@ object Cooccur {
     pairsOf(small).unionByName(bigPairs)
   }
 
-  /** ORDERED within-group pairs — [[groupPairs]] for sequential
-    * semantics (q215): one row per (row_a, row_b) of the same group
-    * with `orderCol`(a) strictly before `orderCol`(b) and distinct
-    * items, as (group, pa, pb). Same size-routed guard: a hub group's
-    * k² ordered emissions spread over `salts` reducers via the forced
-    * (group, chunk-of-right) shuffle instead of hot-spotting one task.
-    * Callers dedup/aggregate downstream (multiple qualifying row pairs
-    * for the same item pair each emit).
-    */
-  def orderedGroupPairs(df: DataFrame, groupCol: String, orderCol: String,
-                        itemCol: String, hubThreshold: Int = 1000,
-                        salts: Int = 16): DataFrame = {
-    // shared cached routing decision — see [[groupPairs]]
-    val hubIds = SkewProfile.hubIds(df, groupCol, hubThreshold)
-
-    def pairsOf(part: DataFrame): DataFrame =
-      part.select(col(groupCol), col(orderCol).as("__oa"), col(itemCol).as("pa"))
-        .join(part.select(col(groupCol), col(orderCol).as("__ob"),
-          col(itemCol).as("pb")), Seq(groupCol))
-        .filter(col("__oa") < col("__ob") && col("pa") =!= col("pb"))
-        .select(col(groupCol), col("pa"), col("pb"))
-
-    if (hubIds.isEmpty) return pairsOf(df)
-
-    val small = df.filter(!col(groupCol).isin(hubIds: _*))
-    val big = df.filter(col(groupCol).isin(hubIds: _*))
-    def chunk = pmod(xxhash64(col(itemCol)), lit(salts)).cast("int")
-    val left = big.select(col(groupCol), col(orderCol).as("__oa"), col(itemCol).as("pa"))
-      .withColumn("__cb", explode(sequence(lit(0), lit(salts - 1))))
-    val right = big.select(col(groupCol), chunk.as("__cb"),
-      col(orderCol).as("__ob"), col(itemCol).as("pb"))
-    val bigPairs = left.hint("shuffle_hash").join(right, Seq(groupCol, "__cb"))
-      .filter(col("__oa") < col("__ob") && col("pa") =!= col("pb"))
-      .select(col(groupCol), col("pa"), col("pb"))
-    pairsOf(small).unionByName(bigPairs)
-  }
-
-  /** DISTINCT ordered pairs via span reduction — the algebraic
-    * strength-reduction of `orderedGroupPairs(...).distinct()` when
-    * the caller only needs each (group, pa, pb) ONCE (q215):
+  /** DISTINCT ORDERED within-group pairs — [[groupPairs]] for
+    * sequential semantics (q215): each (group, pa, pb) of distinct
+    * items where some row of pa has `orderCol` strictly before some
+    * row of pb, emitted ONCE. Span reduction is the algebraic
+    * strength-reduction of the ordered self-join plus DISTINCT:
     * ∃ t_a < t_b over the items' occurrence times  ⟺
     * min t(pa) < max t(pb), so the input first collapses to ONE ROW
     * per (group, item) carrying (min t, max t) — shrinking the join
@@ -120,8 +85,10 @@ object Cooccur {
     * emitted exactly once, which deletes the downstream
     * pair-cardinality DISTINCT exchange entirely (the dominant
     * shuffle: pair rows outnumber item rows quadratically). Same
-    * size-routed hub guard as [[orderedGroupPairs]], applied after
-    * the reduction (the profile sees the smaller frame).
+    * size-routed hub guard as [[groupPairs]], applied after the
+    * reduction (the profile sees the smaller frame): a hub group's k²
+    * ordered emissions spread over `salts` reducers via the forced
+    * (group, chunk-of-right) shuffle instead of hot-spotting one task.
     */
   def spanGroupPairs(df: DataFrame, groupCol: String, orderCol: String,
                      itemCol: String, hubThreshold: Int = 1000,

@@ -44,11 +44,8 @@ object Dedup {
     firstPerKey(df.withColumn("__fp", fingerprint(contentCols)), Seq("__fp"), order)
       .drop("__fp")
 
-  /** The 128-bit content fingerprint byFingerprint keys on — exposed so
-    * incremental callers (streaming.ContinuousTrainingPrep's cross-batch
-    * fingerprint store) dedup against history with the IDENTICAL key.
-    */
-  def fingerprint(contentCols: Seq[String]): Column = {
+  /** The 128-bit content fingerprint byFingerprint keys on. */
+  private def fingerprint(contentCols: Seq[String]): Column = {
     val sentineled = contentCols.map(c => coalesce(col(c).cast("string"), lit("\u0001NULL")))
     md5(concat_ws("\u0000", sentineled: _*))
   }

@@ -22,8 +22,7 @@ import org.apache.spark.sql.functions._
   * sort (fully distributed range sort), then RDD `zipWithIndex` — whose
   * count + map jobs run one FIXED physical plan, outside AQE re-planning,
   * so indices are deterministic. The cost is one Row-encoding round-trip;
-  * at fact scale that is the standard contiguous-id recipe (and the same
-  * path `SimSearch.thresholdPairsBlocked` uses for matrix row indices).
+  * at fact scale that is the standard contiguous-id recipe.
   */
 object GlobalRank {
 

@@ -22,15 +22,6 @@ import org.apache.spark.sql.functions._
   * at 100 TB. `maxHops` is FIXED (the q225 oracle-unroll discipline);
   * lineage truncates every round.
   *
-  * [[harmonicCentrality]] folds the sketch into the standard
-  * landmark-estimated harmonic centrality Σ_ℓ 1/d(node,ℓ) over
-  * landmarks at d ≥ 1 — unreached landmarks contribute 0 (harmonic
-  * centrality's defining advantage over closeness on disconnected
-  * graphs), a node's own landmark row (d=0) is excluded. The sum
-  * runs in ASCENDING landmark-id order via an array_sort/aggregate
-  * fold, so the float accumulation order is engine-replayable
-  * (q229's oracle sums the same way); only the final score rounds.
-  *
   * @return hopDistances: (node, landmark, hops), hops ∈ [0, maxHops],
   *         one row per (reached node, landmark)
   */
@@ -68,23 +59,6 @@ object Landmarks {
     }
     dist.withColumn("hops", col("hops").cast("int"))
   }
-
-  /** Landmark-estimated harmonic centrality from a [[hopDistances]]
-    * sketch: Σ 1/hops over a node's landmark rows with hops ≥ 1,
-    * folded in ascending landmark order (see object doc), plus the
-    * count of landmarks reached. Nodes whose only row is their own
-    * landmark (d=0) surface with harmonic = 0.
-    */
-  def harmonicCentrality(sketch: DataFrame, roundTo: Int = 6): DataFrame =
-    sketch
-      .groupBy("node")
-      .agg(collect_list(when(col("hops") >= 1,
-        struct(col("landmark"), col("hops")))).as("__lm"))
-      .select(col("node"),
-        size(col("__lm")).as("n_reached"),
-        round(aggregate(array_sort(col("__lm")), lit(0.0),
-          (acc, x) => acc + lit(1.0) / x.getField("hops")), roundTo)
-          .as("harmonic"))
 
   /** Landmark lower bounds on eccentricity and graph diameter (the
     * Magnien–Latapy–Habib bounding discipline, JEA 2009): a node's

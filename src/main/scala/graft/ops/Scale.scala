@@ -24,16 +24,4 @@ object Scale {
           .otherwise((col(inCol) - col("__mn")) / (col("__mx") - col("__mn"))))
       .drop("__mn", "__mx")
   }
-
-  /** Append `outCol` = z-score standardization (x - mean) / stddev_samp;
-    * zero-variance columns map to 0.0 (StandardScaler convention, M13).
-    */
-  def standard(df: DataFrame, inCol: String, outCol: String): DataFrame = {
-    val stats = df.agg(avg(col(inCol)).as("__mu"), stddev_samp(col(inCol)).as("__sd"))
-    df.crossJoin(broadcast(stats))
-      .withColumn(outCol,
-        when(col("__sd").isNull || col("__sd") === 0.0, lit(0.0))
-          .otherwise((col(inCol) - col("__mu")) / col("__sd")))
-      .drop("__mu", "__sd")
-  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * table-maintenance primitive for engines without a transactional
   * table format: updates win on key collision, unmatched current rows
   * survive, new keys append. One anti-join shuffle + a union; at scale
-  * the write side pairs with `Sinks.parquetPartitioned` so only
+  * the write side partitions the output (`partitionBy`) so only
   * touched partitions rewrite.
   */
 object Upsert {

@@ -241,9 +241,8 @@ object Events {
           .select(col("user_id"), unix_millis(col("sw.start")).as("start_ms"),
             unix_millis(col("sw.end")).as("end_ms"), col("n_events"))),
 
-    // Click->purchase attribution (batch twin of the stream-stream join
-    // in EventStreams.streamStreamAttribution; parity spec-checked):
-    // same-user purchase within [click, click + 30 min).
+    // Click->purchase attribution: same-user purchase within
+    // [click, click + 30 min).
     QueryDef("q63_attribution", Some("""
       WITH c AS (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events WHERE event_type = 'click'),
       p AS (SELECT user_id, event_id, epoch_ms(ts) AS ms FROM events WHERE event_type = 'purchase')

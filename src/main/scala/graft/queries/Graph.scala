@@ -472,9 +472,7 @@ object Graph {
     // the ~10 p_partkey%199 landmark parts, folded into Σ 1/d over
     // reached landmarks. The query keeps the fold in EXACT long
     // arithmetic — 6/hops with hops ≤ 3 (LCM scaling) — so the oracle
-    // replays it with integer division; the float-output variant
-    // (Landmarks.harmonicCentrality, ascending-landmark fold) is
-    // spec-pinned instead. The oracle unrolls the (node, landmark)
+    // replays it with integer division. The oracle unrolls the (node, landmark)
     // frontier with a correlated NOT EXISTS (pair keys — q225's NOT IN
     // only handles scalars), every round MATERIALIZED.
     QueryDef("q229_landmark_centrality", Some(s"""

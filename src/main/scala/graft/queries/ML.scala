@@ -18,15 +18,14 @@ import graft.rec.AlsPipeline
   */
 object ML {
 
-  /** SQL twin of `flows.PeerSearchFlow.run(minBatch = 2)`. Stage-for-stage
+  /** SQL twin of `flows.PeerSearchFlow.run`. Stage-for-stage
     * with the Scala plan (clean → prospect union → exact-median impute →
     * minmax features → L2 unit vectors → same-nation blended pairs →
     * top-15 per target → customer join-back). Both guard self-pairs with
     * `c_custkey` inequality. The twin skips the flow's key dedup:
     * `c_custkey` is unique in customer, and PeerSearchFlowSpec pins the
-    * dedup on planted duplicates. The batch column never reaches the
-    * output. Blend/hops/haversine forms are shared with the q13/q14/q22
-    * oracles (Reports.hopsSql / havsSql).
+    * dedup on planted duplicates. Blend/hops/haversine forms are shared
+    * with the q13/q14/q22 oracles (Reports.hopsSql / havsSql).
     */
   val peerFlowSql: String = s"""
     WITH raw AS (
@@ -194,12 +193,11 @@ object ML {
       }),
 
     // Reference flagship §3.1 end-to-end: clean → literal prospect →
-    // dedup → one eager median + bounds pass → batch key + weighted
-    // features → blended similarity → top-K → report. Full hash oracle
+    // dedup → one eager median + bounds pass → weighted features →
+    // blended similarity → top-K → report. Full hash oracle
     // (peerFlowSql).
     QueryDef("q44_peer_search_flow", Some(peerFlowSql), (spark, dir) =>
-      graft.flows.PeerSearchFlow.run(spark, dir,
-        graft.flows.PeerSearchFlow.Config(minBatch = 2))),
+      graft.flows.PeerSearchFlow.run(spark, dir)),
 
     // Feature pipeline end-to-end: nulls injected → exact-median impute →
     // string-index + OHE → min-max scale → weighted assembly. The

@@ -415,8 +415,8 @@ object Retrieval {
     // is precisely what an index correctness gate should test. The term
     // pick (df desc, term asc) is deterministic on both sides. At scale
     // the posting join touches only the two terms' postings (partition-
-    // pruned in a real index layout — streaming/IncrementalIvf shows the
-    // same idea for vectors); the scan side grows with the corpus.
+    // pruned in a real index layout — SimSearch.buildIvfIndexLloyd shows
+    // the same idea for vectors); the scan side grows with the corpus.
     QueryDef("q154_boolean_retrieval", Some("""
       WITH tr AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS term
                   FROM documents),

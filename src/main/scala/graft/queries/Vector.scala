@@ -761,9 +761,7 @@ object Vector {
     // (every mean an exact scaled-integer sum, so the SQL twin replays
     // the exact double bits — same trick as the literal LSH sign
     // matrix), corpus bucketed by nearest centroid, queries probe their 4 nearest
-    // buckets. MLlib-KMeans centroids (ivfTopKKMeans) remain the scale
-    // path — KMeans‖ init is not SQL-expressible, so that variant is
-    // spec-covered (recall + persisted-index equivalence) instead.
+    // buckets.
     QueryDef("q43_ivf_ann", Some(ivfLloydSql(nCent = 16, nProbe = 4, k = 10, iters = 2)),
       (spark, dir) => {
         val emb = T(spark, dir, "embeddings")

@@ -29,11 +29,12 @@ import graft.ops.ConnectedComponents
   * its observed-diameter switch — near-clique merges converge in 1–2
   * rounds because the stars are already depth-1.
   *
-  * Exactly-once protocol (the [[IncrementalCooccur]]/[[IncrementalPack]]
-  * idiom): batch N OVERWRITES its own store version `v=N` derived only
-  * from `v=N-1` and the batch data, so a crash-replayed batch rewrites
-  * an identical version instead of drifting; a missing predecessor
-  * version fails fast rather than silently dropping history.
+  * Exactly-once protocol (the [[StoreProtocol]] idiom shared by the
+  * versioned stores): batch N OVERWRITES its own store version `v=N`
+  * derived only from `v=N-1` and the batch data, so a crash-replayed
+  * batch rewrites an identical version instead of drifting; a missing
+  * predecessor version fails fast rather than silently dropping
+  * history.
   */
 object IncrementalComponents {
 

@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * sharpest case — summed cells fold a PARTIAL predecessor into a
   * silent permanent under-count — but the guard protects every
   * versioned reader ([[IncrementalHll]], [[IncrementalComponents]],
-  * [[IncrementalCooccur]], [[IncrementalForecast]]) the same way:
+  * [[IncrementalForecast]], [[IncrementalDailyMoments]]) the same way:
   * idempotent merge ops (register max, label union) do NOT defend
   * against a torn directory, because torn means ROWS ARE MISSING —
   * groups absent from the partial files vanish from every later

@@ -20,8 +20,8 @@ class HarnessSpec extends SparkSuite {
 
   /** Public names in `src/main` that no other `src/main` file and no
     * perfbench harness file references, each with the reason it stays.
-    * Keying an object keeps its defs too. The "test-only" entries are
-    * reached only from specs and are the next ones to delete.
+    * Keying an object keeps its defs too. A spec is never the reason:
+    * code that only specs reach is deleted with them.
     */
   private val Keep: Map[String, String] = Map(
     "Sources" -> "SURVEY §2.1 S1–S4: the reference's CSV/parquet ingest and latest-snapshot read",
@@ -32,32 +32,18 @@ class HarnessSpec extends SparkSuite {
     "AlsPipeline.evalRmse" -> "SURVEY M11: the reference's RMSE evaluation (recommender_prod_rec.py:234-241)",
     "AlsPipeline.recommendations" ->
       "SURVEY M12: the recommendForAllUsers output the reference consumes (recommender_prod_rec.py:261-269)",
-    "SkewProfile.invalidate" -> "clears the profile cache, so OpsSpec reads a cold profile after a warm one",
-    "SimSearch.ivfTopK" -> "test-only: LlmOpsSpec's IVF recall case and IncrementalIvfSpec's batch reference",
-    "SimSearch.ivfTopKKMeans" -> "test-only: two LlmOpsSpec IVF k-means cases",
-    "SimSearch.buildIvfIndex" -> "test-only: LlmOpsSpec's persisted-IVF case",
-    "SimSearch.thresholdPairsBlocked" -> "test-only: one LlmOpsSpec case",
-    "TextOps.tokenizeRegex" -> "test-only: one LlmOpsSpec case",
-    "Cooccur.orderedGroupPairs" -> "test-only: two OpsSpec cases, one as spanGroupPairs' reference",
-    "Landmarks.harmonicCentrality" -> "test-only: half of OpsSpec's Landmarks case",
-    "Scale.standard" -> "test-only: one OpsSpec case",
-    "EventStreams.streamStreamAttribution" -> "test-only: one EngineIntegrationSpec case",
-    "EventStreams.statefulUserCounts" -> "test-only: one EngineIntegrationSpec case",
-    "EventStreams.hourlyDistinctSketch" -> "test-only: one StreamingResilienceSpec case",
-    "Sinks.parquetPartitioned" -> "test-only: LayoutSpec's one case",
-    "ContinuousTrainingPrep" -> "test-only: ContinuousTrainingPrepSpec (4 cases)",
-    "IncrementalCooccur" -> "test-only: IncrementalCooccurSpec (4 cases)",
-    "IncrementalDedup" -> "test-only: IncrementalDedupSpec (4 cases)",
-    "IncrementalIvf" -> "test-only: IncrementalIvfSpec (6 cases), one KMeansParSpec case, GenStoreSpec",
-    "IncrementalPq" -> "test-only: IncrementalPqSpec (2 cases)")
+    "SkewProfile.invalidate" -> "clears the profile cache, so OpsSpec reads a cold profile after a warm one")
+
+  /** Each source file under `root` with its comments stripped. */
+  private def code(root: String): Seq[(Path, String)] = scalaFiles(root)
+    .map(p => p -> Files.readString(p).replaceAll("(?s)/\\*.*?\\*/|//[^\n]*", ""))
 
   test("reachability: every public object and def in src/main is referenced outside its file, or kept with a reason") {
     // Roots: SparkEntry's registry and GraftExtensions' registrations
     // (both src/main), the mains, and the perfbench harness, which
     // compiles against graft's public API. Specs do not count.
-    def code(p: Path) = Files.readString(p).replaceAll("(?s)/\\*.*?\\*/|//[^\n]*", "")
-    val main = scalaFiles("src/main").map(p => p -> code(p))
-    val harness = scalaFiles("perfbench/harness/src").map(p => p -> code(p))
+    val main = code("src/main")
+    val harness = code("perfbench/harness/src")
     assert(main.size > 100 && harness.nonEmpty, "expected src/main and perfbench/harness/src")
     val ident = "\\w+".r
     val filesOf: Map[String, Set[Path]] = (main ++ harness)
@@ -84,6 +70,27 @@ class HarnessSpec extends SparkSuite {
       s"no reference outside its own file (delete it, narrow it, or keep-list it with a reason): ${uncovered.mkString(", ")}")
     val stale = Keep.keySet -- unreached
     assert(stale.isEmpty, s"keep-list entries that are now referenced, or gone: ${stale.mkString(", ")}")
+    val specOnly = Keep.filter(_._2.startsWith("test-only")).keys
+    assert(specOnly.isEmpty, s"kept only for specs (delete them with their cases): ${specOnly.mkString(", ")}")
+  }
+
+  test("scaladoc links: every [[X]] or [[X.y]] in src/main names a declaration in src/main") {
+    // Lowercase qualifiers before the last segment are package names;
+    // every other segment must be declared in comment-stripped code.
+    val declared = code("src/main")
+      .flatMap { case (_, s) => "\\b(?:object|class|trait|def|val|var|type)\\s+(\\w+)".r
+        .findAllMatchIn(s).map(_.group(1)) }.toSet
+    val links = scalaFiles("src/main")
+      .flatMap(p => "\\[\\[([\\w.]+)\\]\\]".r.findAllMatchIn(Files.readString(p))
+        .map(m => p.getFileName.toString -> m.group(1)))
+    assert(links.size > 100, "expected scaladoc links in src/main")
+    val dangling = links.filter { case (_, link) =>
+      val segs = link.split('.')
+      segs.zipWithIndex.exists { case (x, i) =>
+        (i == segs.length - 1 || x.head.isUpper) && !declared.contains(x) }
+    }.distinct
+    assert(dangling.isEmpty,
+      s"links to no declaration: ${dangling.map { case (f, l) => s"$f: [[$l]]" }.mkString(", ")}")
   }
 
   test("one session factory: no other SparkSession builder, no plan-mode system property") {

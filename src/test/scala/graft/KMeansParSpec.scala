@@ -84,28 +84,6 @@ class KMeansParSpec extends SparkSuite {
     assert(SimSearch.kmeansParRows(ue, "vec_id", 3).count() == 0)
   }
 
-  test("IncrementalIvf seeded with KMeans|| centroids probes identically to the batch path") {
-    val dir = GraftSession.scratchDir("ivf_kpar").toString
-    val u = SimSearch.unitized(corpus, "vec_id", "emb", "vec_id", "__ne")
-    // the streamed index must probe identically to the batch IVF probe
-    // over the same KMeans||-seeded, Lloyd-refined centroids
-    val cents = SimSearch.lloydIterate(u,
-      SimSearch.kmeansParRows(u, "vec_id", 4), "vec_id", 2).cache()
-    graft.streaming.IncrementalIvf.processBatch(
-      corpus.filter(col("vec_id") < 60), 0, cents, "vec_id", "emb", dir)
-    graft.streaming.IncrementalIvf.processBatch(
-      corpus.filter(col("vec_id") >= 60), 1, cents, "vec_id", "emb", dir)
-    def img(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.select("query_id", "vec_id", "cos_sim", "rnk")
-        .collect().toSeq.map(_.toString).sorted
-    val streamed = graft.streaming.IncrementalIvf.probe(
-      spark, dir, queries, cents, "vec_id", "emb", 5, nProbe = 2)
-    val batch = SimSearch.ivfWithCentroids(u, queries, cents, "vec_id", "emb", 5, nProbe = 2)
-    assert(img(streamed) == img(batch),
-      "KMeans||-seeded incremental index diverged from the batch path")
-    cents.unpersist()
-  }
-
   test("pqTrainBooks kmeansParSeed: codebook trains and spans clusters") {
     val u = SimSearch.unitized(corpus, "vec_id", "emb", "vec_id", "__ne").cache()
     val subs = SimSearch.pqSubSplit(u, "vec_id", "__ne", 2, 4)

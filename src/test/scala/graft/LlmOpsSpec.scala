@@ -13,12 +13,6 @@ class LlmOpsSpec extends SparkSuite {
     assert(got == Seq("a b", "b c", "c b"))
   }
 
-  test("TextOps.tokenizeRegex splits letters/digits/symbols") {
-    val got = Seq("ab12 cd-ef").toDF("t")
-      .select(TextOps.tokenizeRegex(col("t"))).head.getSeq[String](0)
-    assert(got == Seq("ab", "12", "cd", "-", "ef"))
-  }
-
   test("DedupOps.winnowingOverlap: the n+w-1 span guarantee, and Jaccard-blind spans light up") {
     val n = 4; val w = 4
     // doc 1 and doc 2: completely different text EXCEPT one shared run of
@@ -112,46 +106,21 @@ class LlmOpsSpec extends SparkSuite {
     assert(top.getAs[Long]("vec_id") == 2L)
   }
 
-  test("SimSearch.thresholdPairsBlocked == thresholdPairs (exact distributed matmul)") {
-    // The BlockMatrix exact mode must find the identical pair set; scores
-    // may differ only by BLAS accumulation order (≤1e-9, see Scaladoc).
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val loop = SimSearch.thresholdPairs(emb, "vec_id", "embedding", 0.35)
-      .withColumnRenamed("cos_sim", "cs_a")
-    val block = SimSearch.thresholdPairsBlocked(emb, "vec_id", "embedding", 0.35,
-      blockSize = 64)
-      .withColumnRenamed("cos_sim", "cs_b")
-    val joined = loop.join(block, Seq("id_a", "id_b"), "full_outer").cache()
-    assert(joined.count() > 0, "no pairs found — threshold too high for fixture")
-    assert(joined.filter(col("cs_a").isNull || col("cs_b").isNull).count() == 0,
-      "pair sets differ")
-    val maxDiff = joined.agg(max(abs(col("cs_a") - col("cs_b")))).head.getDouble(0)
-    assert(maxDiff <= 1e-9, s"scores diverge by $maxDiff")
-    joined.unpersist()
-  }
-
-  test("SimSearch.ivfTopK recall vs brute force on sf0.001 embeddings") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val queries = emb.filter(col("vec_id") % 100 === 0)
-    val exact = SimSearch.bruteForceTopK(emb, queries, "vec_id", "embedding", 5)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    val approx = SimSearch.ivfTopK(emb, queries, "vec_id", "embedding", 5,
-      nCentroids = 8, nProbe = 4).select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    val recall = exact.intersect(approx).size.toDouble / exact.size
-    assert(recall >= 0.3, s"IVF recall $recall") // nProbe=4 of 8 buckets on random vectors
-  }
-
   test("SimSearch.ivfTopKLloyd: iters=0 equals id-order IVF; refined recall holds") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val queries = emb.filter(col("vec_id") % 100 === 0)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "vec_id", "cos_sim", "rnk")
         .collect().map(_.toString).toSet
-    // zero refinements = the id-order seeding, bit for bit
+    // zero refinements = the id-order seeding, bit for bit: the
+    // reference buckets by the 8 lowest-id unit vectors as centroids
+    val unit = SimSearch.unitized(emb, "vec_id", "embedding", "vec_id", "__ne")
+    val idOrder = unit.orderBy(col("vec_id")).limit(8)
+      .select(col("vec_id").as("cent_id"), col("__ne").as("cent_emb"))
     assert(rows(SimSearch.ivfTopKLloyd(emb, queries, "vec_id", "embedding", 5,
         nCentroids = 8, nProbe = 4, iters = 0)) ==
-      rows(SimSearch.ivfTopK(emb, queries, "vec_id", "embedding", 5,
-        nCentroids = 8, nProbe = 4)))
+      rows(SimSearch.ivfWithCentroids(unit, queries, idOrder, "vec_id", "embedding", 5,
+        nProbe = 4)))
     val exact = SimSearch.bruteForceTopK(emb, queries, "vec_id", "embedding", 5)
       .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
     val lloyd = SimSearch.ivfTopKLloyd(emb, queries, "vec_id", "embedding", 5,
@@ -581,44 +550,19 @@ class LlmOpsSpec extends SparkSuite {
       "an eval document surfaced in split-aware retrieval")
   }
 
-  test("SimSearch.ivfTopKKMeans: learned centroids, recall vs brute force") {
+  test("persisted IVF index: queryIvfIndex == ivfTopKLloyd, postings bucket-partitioned") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val queries = emb.filter(col("vec_id") % 100 === 0)
-    val exact = SimSearch.bruteForceTopK(emb, queries, "vec_id", "embedding", 5)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    val approx = SimSearch.ivfTopKKMeans(emb, queries, "vec_id", "embedding", 5,
-        nCentroids = 8, nProbe = 4)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    val recall = exact.intersect(approx).size.toDouble / exact.size
-    // learned centroids should do at least as well as the id-order stand-in
-    assert(recall >= 0.3, s"KMeans-IVF recall $recall")
-    val again = SimSearch.ivfTopKKMeans(emb, queries, "vec_id", "embedding", 5,
-        nCentroids = 8, nProbe = 4)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    assert(approx == again) // seeded fit -> deterministic buckets
-  }
-
-  test("persisted IVF index: queryIvfIndex == ivfTopKKMeans, postings bucket-partitioned") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val queries = emb.filter(col("vec_id") % 100 === 0)
-    val path = GraftSession.scratchDir("graft_ivf").toString + "/idx"
-    SimSearch.buildIvfIndex(emb, "vec_id", "embedding", path, nCentroids = 8)
-    val fromIndex = SimSearch.queryIvfIndex(queries, "vec_id", "embedding", path, 5, nProbe = 4)
-      .select("query_id", "vec_id", "cos_sim").as[(Long, Long, Double)].collect().toSet
-    val inMemory = SimSearch.ivfTopKKMeans(emb, queries, "vec_id", "embedding", 5,
-        nCentroids = 8, nProbe = 4)
-      .select("query_id", "vec_id", "cos_sim").as[(Long, Long, Double)].collect().toSet
-    assert(fromIndex == inMemory && fromIndex.nonEmpty)
-    // the scale feature: one partition directory per posting list
-    val dirs = new java.io.File(s"$path/postings").listFiles()
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("bucket="))
-    assert(dirs.length > 1, s"expected bucket=* partition dirs, got ${dirs.mkString(",")}")
-    // the Lloyd build (q313/q314's oracle-replayable variant) must be
-    // bit-identical to the in-memory ivfTopKLloyd through the SAME
+    // the Lloyd build (q313/q314's oracle-replayable index) must be
+    // bit-identical to the in-memory ivfTopKLloyd through the
     // persisted layout — build-once / probe-many loses nothing
     val lp = GraftSession.scratchDir("graft_ivf_l").toString + "/idx"
     SimSearch.buildIvfIndexLloyd(emb, "vec_id", "embedding", lp,
       nCentroids = 8, iters = 2)
+    // the scale feature: one partition directory per posting list
+    val dirs = new java.io.File(s"$lp/postings").listFiles()
+      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("bucket="))
+    assert(dirs.length > 1, s"expected bucket=* partition dirs, got ${dirs.mkString(",")}")
     val lloydIdx = SimSearch.queryIvfIndex(queries, "vec_id", "embedding", lp, 5, nProbe = 4)
       .select("query_id", "vec_id", "cos_sim").as[(Long, Long, Double)].collect().toSet
     val lloydMem = SimSearch.ivfTopKLloyd(emb, queries, "vec_id", "embedding", 5,

@@ -50,9 +50,11 @@ class PeerSearchFlowSpec extends SparkSuite {
     (1L to 9L).map(k => (k, name(k), (k % 3).toInt, Double.box(k * 10.0), segments((k % 5).toInt))) ++
       (1L to 9L).map(k => (k, s"ZZ duplicate $k", 1, Double.box(1000.0 + k), "FURNITURE")))
 
-  /** The flow as first written, kept as the oracle of its rewrite. */
-  private def nestedMinmaxFlow(spark: SparkSession, sfDir: String,
-                               cfg: PeerSearchFlow.Config): DataFrame = {
+  /** The flow as first written, kept as the oracle of its rewrite, with
+    * the flow's blend weights (0.399 hops, 0.001 haversine), 15 peers per
+    * target and a 0.0 score floor.
+    */
+  private def nestedMinmaxFlow(spark: SparkSession, sfDir: String): DataFrame = {
     DotProduct.register(spark)
     val raw = T(spark, sfDir, "customer")
       .filter(col("c_name").isNotNull && col("c_acctbal").isNotNull)
@@ -68,7 +70,6 @@ class PeerSearchFlowSpec extends SparkSuite {
     val deduped = Dedup.firstPerKey(imputed, Seq("c_custkey"), Seq(col("c_name").asc))
     val indexed = Indexing.withRowIndex(deduped, "idx", Seq(col("c_custkey").asc))
       .repartition(spark.sessionState.conf.numShufflePartitions)
-      .withColumn("batch", pmod(hash(col("c_custkey"), lit(cfg.seed)), lit(cfg.minBatch)))
     val scaled = Scale.minmax(
       Scale.minmax(indexed, "acctbal_imp", "f_bal"), "c_nationkey", "f_nat")
       .withColumn("features", array(col("f_bal") * 0.8, col("f_nat") * 0.2))
@@ -92,10 +93,10 @@ class PeerSearchFlowSpec extends SparkSuite {
           DotProduct.dot(col("t_unit"), col("s_unit")),
           F.hopsScoreHex(col("t_naics_num"), col("s_naics_num")),
           F.haversineScore(col("t_lat"), col("t_lon"), col("s_lat"), col("s_lon")),
-          cfg.wHops, cfg.wHavs), 6).as("score"))
+          0.399, 0.001), 6).as("score"))
     TopK.exactPerKey(pairs, Seq("tgt_custkey"),
-        Seq(col("score").desc, col("src_custkey").asc), cfg.topK, "peer_rank")
-      .filter(col("score") >= cfg.threshold)
+        Seq(col("score").desc, col("src_custkey").asc), 15, "peer_rank")
+      .filter(col("score") >= 0.0)
       .join(T(spark, sfDir, "customer")
         .select(col("c_custkey").as("src_custkey"), col("c_name").as("src_name"),
           col("c_mktsegment").as("src_segment")), Seq("src_custkey"))
@@ -118,11 +119,10 @@ class PeerSearchFlowSpec extends SparkSuite {
   private def rowsOf(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
 
   private def assertSameRows(dir: String): Seq[Row] = {
-    val cfg = PeerSearchFlow.Config(minBatch = 2)
     val runs = Seq(1, 4, 7).map { n =>
       withPartitions(n) {
-        val got = rowsOf(PeerSearchFlow.run(spark, dir, cfg))
-        val want = rowsOf(nestedMinmaxFlow(spark, dir, cfg))
+        val got = rowsOf(PeerSearchFlow.run(spark, dir))
+        val want = rowsOf(nestedMinmaxFlow(spark, dir))
         assert(got == want, s"at $n shuffle partitions")
         got
       }
